@@ -57,24 +57,20 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override protected def nullSafeEval(l: Any, r: Any): Any = {
     val a = l.asInstanceOf[ArrayData]
     val b = r.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != b.numElements()) -1.0
-    else {
-      val (af, bf) = (elemIsFloat(left), elemIsFloat(right))
-      val (an, bn) = (elemNullable(left), elemNullable(right))
-      var dot = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        if ((an && a.isNullAt(i)) || (bn && b.isNullAt(i))) return null
-        val x = if (af) a.getFloat(i).toDouble else a.getDouble(i)
-        val y = if (bf) b.getFloat(i).toDouble else b.getDouble(i)
-        dot += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      if (na == 0.0 || nb == 0.0) 0.0
-      else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
-    }
+    if (a.numElements() != b.numElements()) -1.0
+    else if ((elemNullable(left) && hasNull(a)) || (elemNullable(right) && hasNull(b))) null
+    else CosineSimilarity.packed(doubles(a, elemIsFloat(left)), 0, a.numElements(),
+      doubles(b, elemIsFloat(right)))
   }
+
+  private def hasNull(a: ArrayData): Boolean = {
+    var i = 0
+    while (i < a.numElements()) { if (a.isNullAt(i)) return true; i += 1 }
+    false
+  }
+
+  private def doubles(a: ArrayData, isFloat: Boolean): Array[Double] =
+    if (isFloat) a.toFloatArray().map(_.toDouble) else a.toDoubleArray()
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -133,6 +129,28 @@ case class CosineSimilarity(left: Expression, right: Expression)
 }
 
 object CosineSimilarity {
+
+  /** The per-row kernel over packed doubles: `a[off, off + n)` against
+    * all of `b` — dimension mismatch → -1.0, a zero norm → 0.0, one
+    * index-order double accumulation, `dot / (sqrt(na) * sqrt(nb))`.
+    * The interpreted path and the driver-resident serving snapshot
+    * ([[graft.store.ServingSnapshot]]) both call it; the generated code
+    * in `doGenCode` is the same loop written out. */
+  def packed(a: Array[Double], off: Int, n: Int, b: Array[Double]): Double =
+    if (n != b.length) -1.0
+    else {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      var i = 0
+      while (i < n) {
+        val x = a(off + i)
+        val y = b(i)
+        dot += x * y; na += x * x; nb += y * y
+        i += 1
+      }
+      if (na == 0.0 || nb == 0.0) 0.0
+      else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
+    }
+
   /** Column builder: `cos_sim(a, b)`. */
   def apply(a: Column, b: Column): Column = {
     val eu = org.apache.spark.sql.graftbridge.ColumnBridge

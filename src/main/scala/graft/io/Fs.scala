@@ -1,5 +1,6 @@
 package graft.io
 
+import org.apache.hadoop.fs.FileStatus
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-filesystem helpers for index-path METADATA (tombstones,
@@ -34,18 +35,33 @@ object Fs {
     f.listStatus(p).toSeq.filter(_.isDirectory).map(_.getPath.getName)
   }
 
+  /** The data files under `dir` (or `dir` itself when it is a file),
+    * sorted by path — the set Spark's file index reads. Names starting
+    * with `.`, or with `_` unless they are `k=v` partition directories,
+    * are hidden and skipped, as are in-flight `._COPYING_` files. One
+    * plain `listStatus` per directory: `listFiles` builds a
+    * `LocatedFileStatus` per file, which on the local filesystem reads
+    * each file's permissions by forking `ls` (286 ms against 2.5 ms on
+    * a 33-file IVF index), so no read path uses it. A missing `dir`
+    * has no files. */
+  def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val (f, p) = fs(spark, dir)
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+        name.endsWith("._COPYING_")
+    def walk(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else f.listStatus(st.getPath).toSeq.filterNot(c => hidden(c.getPath.getName)).flatMap(walk)
+    val top = try f.listStatus(p).toSeq catch { case _: java.io.FileNotFoundException => Nil }
+    top.filterNot(c => hidden(c.getPath.getName)).flatMap(walk).sortBy(_.getPath.toString)
+  }
+
   /** Recursive count of parquet data files under `dir` (markers,
     * _SUCCESS and other metadata excluded) — the small-files debt
     * metric of an incrementally appended store. Driver-side O(files)
-    * METADATA listing, never a data scan; at 100 TB this is the same
-    * listing cost every query's file-source planning already pays. */
-  def countDataFiles(spark: SparkSession, dir: String): Long = {
-    val (f, p) = fs(spark, dir)
-    val it = f.listFiles(p, true)
-    var n = 0L
-    while (it.hasNext) if (it.next().getPath.getName.endsWith(".parquet")) n += 1
-    n
-  }
+    * METADATA listing ([[dataFiles]]), never a data scan. */
+  def countDataFiles(spark: SparkSession, dir: String): Long =
+    dataFiles(spark, dir).count(_.getPath.getName.endsWith(".parquet")).toLong
 
   /** Last-write time of `dir` in epoch millis: the max mtime over its
     * immediate entries, falling back to the directory's own status

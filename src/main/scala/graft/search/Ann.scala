@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.store.{CorpusStore, ServingSnapshot}
 import graft.vector.VectorOps
 
 /** Approximate nearest-neighbour search — the scale path past the
@@ -225,8 +226,12 @@ object Ann {
   /** The index's tombstoned ids, or None when nothing was deleted. */
   private[search] def tombstoneIds(spark: org.apache.spark.sql.SparkSession,
                                    path: String): Option[DataFrame] =
+    tombstoneScan(spark, path).map(_.distinct())
+
+  private def tombstoneScan(spark: org.apache.spark.sql.SparkSession,
+                            path: String): Option[DataFrame] =
     if (!graft.io.Fs.exists(spark, s"$path.tombstones")) None
-    else Some(spark.read.parquet(s"$path.tombstones").distinct())
+    else Some(CorpusStore.load(spark, s"$path.tombstones"))
 
   private[search] def dropTombstones(df: DataFrame, path: String,
                                      idCol: String): DataFrame =
@@ -252,7 +257,7 @@ object Ann {
     require(srcPath != dstPath,
       "compact rewrites the layout: dstPath must differ from srcPath")
     resetDstSidecars(spark, dstPath)
-    dropTombstones(spark.read.parquet(srcPath), srcPath, idCol)
+    dropTombstones(CorpusStore.load(spark, srcPath), srcPath, idCol)
       .repartition(col("__cluster"))
       .write.partitionBy("__cluster")
       .option("maxRecordsPerFile", recordsPerFile)
@@ -265,10 +270,10 @@ object Ann {
     // between the two must not fail the compact); the stale-dst case
     // is covered by resetDstSidecars' unconditional delete above.
     if (graft.io.Fs.exists(spark, s"$srcPath.model"))
-      spark.read.parquet(s"$srcPath.model").coalesce(1)
+      CorpusStore.load(spark, s"$srcPath.model").coalesce(1)
         .write.mode("overwrite").parquet(s"$dstPath.model")
     if (graft.io.Fs.exists(spark, s"$srcPath.stats"))
-      spark.read.parquet(s"$srcPath.stats").coalesce(1)
+      CorpusStore.load(spark, s"$srcPath.stats").coalesce(1)
         .write.mode("overwrite").parquet(s"$dstPath.stats")
   }
 
@@ -294,24 +299,36 @@ object Ann {
       .foreach(graft.io.Fs.delete(spark, _))
 
   /** Search a materialized IVF index: probes are ranked driver-side
-    * ([[probeIds]]) and applied as a LITERAL `IN` filter on the
-    * partition column, so pruning happens at PLAN time — the scan's
-    * PartitionFilters skip non-probed directories before any file is
-    * opened (asserted via scan metrics in AnnSpec). */
+    * ([[probeIds]]) from the query vector read back once
+    * ([[Search.queryVector]]), and tombstoned ids never rank. A small
+    * index is answered from the driver-resident serving snapshot
+    * ([[graft.store.ServingSnapshot]]; `spark.sql.autoBroadcastJoinThreshold`
+    * bounds it, -1 turns it off), scanning only the probed clusters'
+    * blocks. A larger one plans ONE job: the probes are a LITERAL `IN`
+    * filter on the partition column, so pruning happens at PLAN time —
+    * the scan's PartitionFilters skip non-probed directories before any
+    * file is opened (asserted via scan metrics in AnnSpec). Both paths
+    * return the same rows, sims and schema (index columns without
+    * `__cluster`, plus `sim`). */
   def ivfIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                    query: DataFrame, cents: Seq[Seq[Double]], k: Int, nprobe: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // element type may be float or double; widen in DOUBLE space like
-    // the kernels do
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
-    val probes = probeIds(cents, qvec, nprobe)
-    Search.knn(
-      dropTombstones(
-        spark.read.parquet(path)
-          .filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
+    val q = Search.queryVector(query)
+    val probes = probeIds(cents, q.getOrElse(Array.empty[Double]).toSeq, nprobe)
+    val index = CorpusStore.load(spark, path)
+    def scan = Search.knnScan(
+      dropTombstones(index.filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
         path, idCol),
-      query, k, idCol, vecCol)
+      q.getOrElse(Array.empty[Double]), if (q.isEmpty) 0 else k, idCol, vecCol)
+    q.flatMap { qv =>
+      val probed: Any => Boolean = {
+        case c: Int => probes.contains(c)
+        case _ => false
+      }
+      tombstoneScan(spark, path).fold(Option(Set.empty[Long]))(ServingSnapshot.idSet)
+        .flatMap(dead => ServingSnapshot.topK(index, qv, k, idCol, vecCol,
+          keep = Some("__cluster" -> probed), dead = dead, dropCols = Set("__cluster")))
+    }.getOrElse(scan)
   }
 
   /** Document-granular maxP retrieval over a materialized IVF index —
@@ -333,11 +350,10 @@ object Ann {
                        query: DataFrame, cents: Seq[Seq[Double]],
                        k: Int, nprobe: Int, docCol: String,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = probeIds(cents, qvec, nprobe)
     dropTombstones(
-      spark.read.parquet(path)
+      CorpusStore.load(spark, path)
         .filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
       path, idCol)
       .crossJoin(broadcast(query))
@@ -365,15 +381,14 @@ object Ann {
                            query: DataFrame, cents: Seq[Seq[Double]],
                            predicate: Column, k: Int, nprobe: Int,
                            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = probeIds(cents, qvec, nprobe)
     def survivors(df: DataFrame): DataFrame =
       dropTombstones(df, path, idCol).filter(predicate).drop("__cluster")
     val probed = survivors(
-      spark.read.parquet(path).filter(col("__cluster").isin(probes: _*)))
+      CorpusStore.load(spark, path).filter(col("__cluster").isin(probes: _*)))
     val cand =
-      if (probed.limit(k).count() < k) survivors(spark.read.parquet(path))
+      if (probed.limit(k).count() < k) survivors(CorpusStore.load(spark, path))
       else probed
     Search.knn(cand, query, k, idCol, vecCol)
   }
@@ -408,7 +423,7 @@ object Ann {
       .collect().map(_.getInt(0)).toSeq
     def survivors(df: DataFrame): DataFrame =
       dropTombstones(df, path, idCol).filter(predicate)
-    val all = spark.read.parquet(path)
+    val all = CorpusStore.load(spark, path)
     val probedCands = survivors(
         all.filter(col("__cluster").isin(probedClusters: _*)))
       .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
@@ -468,7 +483,7 @@ object Ann {
     import spark.implicits._
     val model = cents.zipWithIndex.map { case (c, i) => (i, c) }
       .toDF("__cluster", "centroid")
-    dropTombstones(spark.read.parquet(path), path, idCol)
+    dropTombstones(CorpusStore.load(spark, path), path, idCol)
       .join(broadcast(model), Seq("__cluster"))
       .agg(avg(VectorOps.cosine(col(vecCol), col("centroid"))).as("m"))
       .head().getDouble(0)
@@ -480,8 +495,8 @@ object Ann {
     * of the index joined to the broadcast k-row model. */
   private def meanAssignSim(spark: org.apache.spark.sql.SparkSession, path: String,
                             idCol: String, vecCol: String): Double =
-    dropTombstones(spark.read.parquet(path), path, idCol)
-      .join(broadcast(spark.read.parquet(s"$path.model")), Seq("__cluster"))
+    dropTombstones(CorpusStore.load(spark, path), path, idCol)
+      .join(broadcast(CorpusStore.load(spark, s"$path.model")), Seq("__cluster"))
       .agg(avg(VectorOps.cosine(col(vecCol), col("centroid"))).as("m"))
       .head().getDouble(0)
 
@@ -499,7 +514,7 @@ object Ann {
     import spark.implicits._
     // two independent eager counts — overlap (graft.io.Par)
     val (nRows, nTombs) = graft.io.Par.join2(
-      spark.read.parquet(path).count(),
+      CorpusStore.load(spark, path).count(),
       tombstoneIds(spark, path).map(_.count()).getOrElse(0L))
     Seq((nRows, nTombs)).toDF("n_rows", "n_tombstones")
   }
@@ -523,7 +538,7 @@ object Ann {
     // the recorded baseline and the current mean are independent eager
     // reads — overlap them (graft.io.Par)
     val (b6, c6) = graft.io.Par.join2(
-      r6(spark.read.parquet(s"$path.stats").head().getDouble(0)),
+      r6(CorpusStore.load(spark, s"$path.stats").head().getDouble(0)),
       r6(meanAssignSim(spark, path, idCol, vecCol)))
     Seq((b6, c6, r6(b6 - c6)))
       .toDF("build_mean_sim", "current_mean_sim", "drift")
@@ -545,7 +560,7 @@ object Ann {
                       dstPath: String, k: Int, iters: Int,
                       idCol: String = "vec_id", vecCol: String = "embedding"): Seq[Seq[Double]] = {
     require(srcPath != dstPath, "retrain rewrites the layout: dstPath must differ from srcPath")
-    val contents = dropTombstones(spark.read.parquet(srcPath), srcPath, idCol)
+    val contents = dropTombstones(CorpusStore.load(spark, srcPath), srcPath, idCol)
       .drop("__cluster")
     val cents = kmeansCentroids(contents, idCol, vecCol, k, iters)
     buildIvfIndex(contents, cents, dstPath, vecCol)
@@ -570,7 +585,7 @@ object Ann {
     * for tightness. */
   def recordRangeStats(spark: org.apache.spark.sql.SparkSession, path: String,
                        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val normed = dropTombstones(spark.read.parquet(path), path, idCol)
+    val normed = dropTombstones(CorpusStore.load(spark, path), path, idCol)
       .select(col("__cluster"), graft.functions.L2Normalize(col(vecCol)).as("__nv"))
     val mu = normed.groupBy(col("__cluster"))
       .agg(graft.functions.VectorAvg(col("__nv")).as("mu"))
@@ -595,7 +610,7 @@ object Ann {
                          qvec: Seq[Double], tau: Double): Seq[Int] = {
     val qn = math.sqrt(qvec.map(x => x * x).sum)
     val qhat = if (qn == 0.0) qvec.map(_ => 0.0) else qvec.map(_ / qn)
-    spark.read.parquet(s"$path.rstats").collect().toSeq
+    CorpusStore.load(spark, s"$path.rstats").collect().toSeq
       .map { r =>
         val cluster = r.getInt(r.fieldIndex("__cluster"))
         val mu = r.getSeq[Double](r.fieldIndex("mu"))
@@ -618,11 +633,10 @@ object Ann {
   def ivfRangeSearch(spark: org.apache.spark.sql.SparkSession, path: String,
                      query: DataFrame, tau: Double,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = rangeProbeClusters(spark, path, qvec, tau)
     dropTombstones(
-      spark.read.parquet(path)
+      CorpusStore.load(spark, path)
         .filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
       path, idCol)
       .crossJoin(broadcast(query))
@@ -675,7 +689,7 @@ object Ann {
   def ivfRangeSearchBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                           queries: DataFrame, tau: Double,
                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val stats = spark.read.parquet(s"$path.rstats")
+    val stats = CorpusStore.load(spark, s"$path.rstats")
     val qn = queries.select(col("qid"), col("qvec"),
       graft.functions.L2Normalize(col("qvec")).as("__qhat"))
     val probes = qn.crossJoin(broadcast(stats))
@@ -685,7 +699,7 @@ object Ann {
     val probed = probes.select(col("__cluster")).distinct()
       .collect().map(_.getInt(0)).toSeq
     dropTombstones(
-      spark.read.parquet(path).filter(col("__cluster").isin(probed: _*)),
+      CorpusStore.load(spark, path).filter(col("__cluster").isin(probed: _*)),
       path, idCol)
       .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
       .join(broadcast(queries), Seq("qid"))
@@ -806,7 +820,7 @@ object Ann {
   def lshIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                    query: DataFrame, planes: Seq[Seq[Double]], k: Int,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qv = query.head().getSeq[Number](0).map(_.doubleValue())
+    val qv = Search.probeVector(query)
     def dotLocal(p: Seq[Double]): Double = {
       // ascending index fold — bit-identical to the DotProduct loop
       var s = 0.0; var i = 0
@@ -818,7 +832,7 @@ object Ann {
     val probes = qbucket +: planes.indices.map(i => qbucket ^ (1 << i))
     Search.knn(
       dropTombstones(
-        spark.read.parquet(path)
+        CorpusStore.load(spark, path)
           .filter(col("__bucket").isin(probes: _*)), path, idCol)
         .drop("__bucket"),
       query, k, idCol, vecCol)
@@ -849,7 +863,7 @@ object Ann {
     import spark.implicits._
     // three independent eager reads + a driver listing — overlap
     val (nRows, nTombs, nFiles) = graft.io.Par.join3(
-      spark.read.parquet(path).count(),
+      CorpusStore.load(spark, path).count(),
       tombstoneIds(spark, path).map(_.count()).getOrElse(0L),
       graft.io.Fs.countDataFiles(spark, path))
     val nBuckets = graft.io.Fs.listDirNames(spark, path)
@@ -873,7 +887,7 @@ object Ann {
     // the planes aren't a parameter here)
     val nBuckets = graft.io.Fs.listDirNames(spark, srcPath)
       .count(_.startsWith("__bucket=")).toLong
-    dropTombstones(spark.read.parquet(srcPath), srcPath, idCol)
+    dropTombstones(CorpusStore.load(spark, srcPath), srcPath, idCol)
       .repartition(bucketWriteParts(spark, math.max(1L, nBuckets)),
         col("__bucket"))
       .write.partitionBy("__bucket")

@@ -599,8 +599,7 @@ object Pq {
                           query: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                           nprobe: Int, shortlist: Int,
                           idCol: String = "vec_id"): DataFrame = {
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = Ann.probeIds(cents, qvec, nprobe)
     val codes = Ann.dropTombstones(
       spark.read.parquet(s"$path/codes")
@@ -647,8 +646,7 @@ object Pq {
                              query: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                              predicate: Column, k: Int, nprobe: Int, shortlist: Int,
                              idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = Ann.probeIds(cents, qvec, nprobe)
     def survivors(df: DataFrame): DataFrame =
       Ann.dropTombstones(df, s"$path/codes", idCol)
@@ -852,8 +850,7 @@ object Pq {
   def ivfPqRangeSearch(spark: org.apache.spark.sql.SparkSession, path: String,
                        query: DataFrame, tau: Double, cb: Codebooks,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = Ann.rangeProbeClusters(spark, s"$path/codes", qvec, tau)
     // per-cluster qerr for the probed set — k rows of model state
     val qerrs = spark.read.parquet(s"$path/codes.rstats")

@@ -15,10 +15,17 @@ import graft.vector.VectorOps
   * unspecified; we define the total order `sim DESC, id ASC` (SURVEY §5).
   *
   * Scale notes:
-  *  - `knn` plans as broadcast(1-row query) + scan + TakeOrderedAndProject:
-  *    per-partition bounded heap, driver merges k rows — strictly better
-  *    than the reference's O(N log N) full sort, and embarrassingly
-  *    parallel over corpus partitions.
+  *  - `knn` reads the 1-row query back to the driver once
+  *    ([[queryVector]]; a local frame reads back without a job) and
+  *    scores it as a LITERAL. A bare scan of a small store is answered
+  *    from the driver-resident serving snapshot
+  *    ([[graft.store.ServingSnapshot]], bounded by
+  *    `spark.sql.autoBroadcastJoinThreshold`, -1 = off) as a
+  *    single-partition frame; anything else plans scan +
+  *    TakeOrderedAndProject: per-partition bounded heap, driver merges
+  *    k rows — strictly better than the reference's O(N log N) full
+  *    sort, and embarrassingly parallel over corpus partitions. Both
+  *    paths return the same rows, sims and schema.
   *  - `similarityJoin` broadcasts the (small) query side across corpus
   *    partitions; per-query top-k via a window on qid. For huge query
   *    sides you'd flip to block-partitioned crossJoin; the query side in
@@ -26,19 +33,81 @@ import graft.vector.VectorOps
   */
 object Search {
 
+  /** The vector of a 1-row query frame (column `qvec`), read back to
+    * the driver and widened to double (float elements widen exactly,
+    * as in the kernels). None for a 0-row frame, whose answer is empty.
+    * More than one row fails: a single-query operator would silently
+    * rank against all of them. A NULL vector or element fails too. */
+  def queryVector(query: DataFrame): Option[Array[Double]] = {
+    val vectors: Seq[Seq[Any]] = localColumn(query, "qvec").getOrElse(
+      query.select(col("qvec")).limit(2).collect().toSeq
+        .map(r => if (r.isNullAt(0)) null else r.getSeq[Any](0).toSeq))
+    vectors match {
+      case Seq() => None
+      case Seq(v) =>
+        require(v != null, "the query vector (qvec) is NULL")
+        require(!v.contains(null), "the query vector (qvec) holds a NULL element")
+        Some(v.iterator.map(_.asInstanceOf[Number].doubleValue()).toArray)
+      case _ =>
+        throw new IllegalArgumentException(
+          "a single-query search needs a 1-row query frame; got more than one row " +
+            "(use similarityJoin for a query table)")
+    }
+  }
+
+  /** [[queryVector]] for the index probes, which rank clusters before
+    * they score rows: a 0-row query probes with an empty vector, and
+    * the probe's own scoring of the (empty) query then yields no rows. */
+  private[search] def probeVector(query: DataFrame): Seq[Double] =
+    queryVector(query).getOrElse(Array.empty[Double]).toSeq
+
+  /** The values of array column `name` of a frame built from driver
+    * data (`Seq(...).toDF(...)`: a local relation, optionally renamed),
+    * read straight from its rows — collecting it would plan a query for
+    * the same values. None for any other plan. */
+  private def localColumn(df: DataFrame, name: String): Option[Seq[Seq[Any]]] = {
+    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
+    import org.apache.spark.sql.types.ArrayType
+    def read(rel: LocalRelation, source: Attribute): Option[Seq[Seq[Any]]] =
+      Some(rel.output.indexWhere(_.exprId == source.exprId)).filter(_ >= 0)
+        .collect { case i if source.dataType.isInstanceOf[ArrayType] =>
+          val et = source.dataType.asInstanceOf[ArrayType].elementType
+          rel.data.map(r => if (r.isNullAt(i)) null else r.getArray(i).toSeq[Any](et))
+        }
+    df.queryExecution.analyzed match {
+      case rel: LocalRelation => rel.output.find(_.name == name).flatMap(read(rel, _))
+      case Project(list, rel: LocalRelation) => list.collectFirst {
+        case a: Attribute if a.name == name => a
+        case Alias(a: Attribute, `name`) => a
+      }.flatMap(read(rel, _))
+      case _ => None
+    }
+  }
+
   /** Top-k most similar corpus rows to a single query vector.
-    * `query` must be a 1-row DataFrame with a vector column `qvec`.
-    * Returns the corpus row plus `sim` (rounded to 6).
-    * Empty corpus → 0 rows (early return in `vectorDb.ts:12-14` — free
-    * with Spark: empty scan yields empty result). */
+    * `query` must be a 1-row DataFrame with a vector column `qvec`
+    * ([[queryVector]]). Returns the corpus row plus `sim` (rounded to
+    * 6), ordered `sim DESC, id ASC`.
+    * Empty corpus or 0-row query → 0 rows (early return in
+    * `vectorDb.ts:12-14`). */
   def knn(corpus: DataFrame, query: DataFrame, k: Int,
           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    corpus
-      .crossJoin(broadcast(query))
-      .withColumn("sim", VectorOps.cosine6(col(vecCol), col("qvec")))
-      .drop("qvec")
-      .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
+    queryVector(query) match {
+      case None => scored(corpus, Array.empty, vecCol).limit(0)
+      case Some(q) =>
+        graft.store.ServingSnapshot.topK(corpus, q, k, idCol, vecCol)
+          .getOrElse(knnScan(corpus, q, k, idCol, vecCol))
+    }
+
+  /** [[knn]]'s partitioned Spark plan: one scan scored against the
+    * literal query, then TakeOrderedAndProject. */
+  private[search] def knnScan(corpus: DataFrame, q: Array[Double], k: Int,
+                              idCol: String, vecCol: String): DataFrame =
+    scored(corpus, q, vecCol).orderBy(col("sim").desc, col(idCol).asc).limit(k)
+
+  private def scored(corpus: DataFrame, q: Array[Double], vecCol: String): DataFrame =
+    corpus.withColumn("sim", VectorOps.cosine6(col(vecCol), typedlit(q)))
 
   /** Top-k over a PRE-NORMALIZED corpus: scores with the fused plain
     * dot product ([[graft.functions.DotProduct]]) — a third of the
@@ -48,13 +117,14 @@ object Search {
     * [[knn]] on the raw vectors, including the zero-vector (0.0) and
     * dim-mismatch (-1.0) edges. */
   def knnDot(corpus: DataFrame, query: DataFrame, k: Int,
-             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    val q = queryVector(query)
+    val qv = typedlit(q.getOrElse(Array.empty[Double]))
     corpus
-      .crossJoin(broadcast(query))
-      .withColumn("sim", round(graft.functions.DotProduct(col(vecCol), col("qvec")), 6))
-      .drop("qvec")
+      .withColumn("sim", round(graft.functions.DotProduct(col(vecCol), qv), 6))
       .orderBy(col("sim").desc, col(idCol).asc)
-      .limit(k)
+      .limit(if (q.isEmpty) 0 else k)
+  }
 
   /** Maximal Marginal Relevance (Carbonell-Goldstein 1998) re-ranking:
     * top-k diversified results from a relevance `shortlist`. Pure

@@ -85,8 +85,7 @@ object Sq {
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = Ann.probeIds(cents, qvec, nprobe)
     val qq = query.select(
       transform(VectorOps.quantizeInt8(col("qvec")), _.cast("double"))
@@ -339,8 +338,7 @@ object Sq {
                              idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
     require(shortlist >= k, s"shortlist ($shortlist) must cover k ($k)")
-    val qvec = query.select(col("qvec")).head().getSeq[Number](0)
-      .map(_.doubleValue()).toSeq
+    val qvec = Search.probeVector(query)
     val probes = Ann.probeIds(cents, qvec, nprobe)
     def survivors(df: DataFrame): DataFrame =
       Ann.dropTombstones(df, s"$path/codes", idCol)

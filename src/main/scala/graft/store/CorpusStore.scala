@@ -1,6 +1,7 @@
 package graft.store
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Corpus lifecycle — the Parquet-backed replacement for the reference's
   * in-memory array table (`/root/reference/services/vectorDb.ts:4-9,54-60`):
@@ -31,8 +32,70 @@ object CorpusStore {
     (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
   }
 
-  def load(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+  /** A store directory's GENERATION: its sorted data-file listing,
+    * `(path, length, mtime)` per file ([[graft.io.Fs.dataFiles]]).
+    * Any write that adds, replaces or deletes a file changes it. */
+  type Generation = Seq[(String, Long, Long)]
+
+  /** A handed-out relation: its generation, and the file whose footer
+    * gave its schema. */
+  private final case class Loaded(spark: SparkSession, gen: Generation, df: DataFrame,
+                                  schema: Option[StructType], source: Option[(String, Long, Long)])
+
+  /** The last relation handed out per path, at most [[MaxLoaded]]
+    * paths, least recently loaded first out. */
+  private val loaded = new java.util.LinkedHashMap[String, Loaded](16, 0.75f, true)
+  private val MaxLoaded = 64
+
+  /** The store at `path` as ONE relation per generation: a repeat load
+    * of an unchanged store lists its files and returns the same frame,
+    * so its plan is analyzed once. A new generation's schema comes from
+    * the Spark schema one parquet footer carries (the previous
+    * generation's, while the file it came from is still there), so no
+    * schema-inference job runs; partition columns are still discovered
+    * from the `k=v` directories the way `spark.read.parquet` does.
+    * Files without that footer key (written by another engine) fall
+    * back to Spark's inference. Every read of a store, and of an IVF
+    * index in [[graft.search.Ann]], goes through here. */
+  def load(spark: SparkSession, path: String): DataFrame = {
+    val files = graft.io.Fs.dataFiles(spark, path)
+    val gen: Generation = files.map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+    val prev = loaded.synchronized(Option(loaded.get(path))).filter(_.spark eq spark)
+    prev match {
+      // nothing listed (a missing path, a glob): Spark's own reader
+      case _ if gen.isEmpty => spark.read.parquet(path)
+      case Some(l) if l.gen == gen => l.df
+      case _ =>
+        val (schema, source) = prev.filter(_.source.exists(gen.contains)) match {
+          case Some(l) => (l.schema, l.source)
+          case None => (files.headOption.flatMap(footerSchema(spark, _)), gen.headOption)
+        }
+        val df = schema match {
+          case Some(s) => spark.read.schema(s).parquet(path)
+          case None => spark.read.parquet(path)
+        }
+        loaded.synchronized {
+          loaded.put(path, Loaded(spark, gen, df, schema, source))
+          if (loaded.size > MaxLoaded) loaded.remove(loaded.keySet.iterator.next())
+        }
+        df
+    }
+  }
+
+  /** The Spark schema a Spark writer records in every parquet footer
+    * (`org.apache.spark.sql.parquet.row.metadata`) — the schema
+    * `spark.read.parquet` infers, read from one file on the driver. */
+  private def footerSchema(spark: SparkSession,
+                           file: org.apache.hadoop.fs.FileStatus): Option[StructType] = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromStatus(file, spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get("org.apache.spark.sql.parquet.row.metadata"))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+    finally reader.close()
+  }
 
   /** Partition BACKFILL — the lakehouse `INSERT OVERWRITE ... PARTITION`
     * dynamic mode: only the partitions PRESENT IN `df` are replaced;

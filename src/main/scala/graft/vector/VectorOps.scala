@@ -32,10 +32,12 @@ object VectorOps {
   }
 
   /** DRIVER-side round-6, HALF_UP — the arithmetic of SQL `round(x, 6)`
-    * in both engines (rint would be half-even). Shared for the same
+    * in both engines (rint would be half-even); NaN and ±Infinity pass
+    * through unchanged, as in Spark's `round`. Shared for the same
     * one-definition reason as [[cosineLocal]]. */
   def round6(x: Double): Double =
-    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    if (x.isNaN || x.isInfinite) x
+    else BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
 
   /** Σ a_i·b_i accumulated in DoubleType, sequential order (parity with
     * DuckDB's `list_dot_product` over `DOUBLE[]`). Backed by the fused
