@@ -762,10 +762,7 @@ object Dedup {
                           k: Int, numHashes: Int, rowsPerBand: Int,
                           path: String, bandBuckets: Int = 64): Unit = {
     require(bandBuckets >= 1, s"bandBuckets >= 1: $bandBuckets")
-    // a fresh store resets streaming batch markers (see
-    // StreamIngest.oncePerBatch — stale ids would swallow a new
-    // stream's first batches)
-    graft.io.Fs.delete(df.sparkSession, s"$path/_applied_batches")
+    graft.store.Sidecars.reset(df.sparkSession, path)
     bandedSignatures(df, idCol, textCol, k, numHashes, rowsPerBand)
       .withColumn("__bb", pmod(hash(col("band"), col("bandsig")), lit(bandBuckets)))
       .repartition(col("__bb")) // cluster: one task (not every task) writes a bucket

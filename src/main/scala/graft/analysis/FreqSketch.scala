@@ -151,13 +151,13 @@ object FreqSketch {
   // shape the BM25 and IVF indexes already follow, at sketch size.
 
   /** Write a fresh sketch store: `cells/` (append-mergeable rows) +
-    * `config/` (one (depth, width) row — the geometry guard). Clears
-    * stale streaming batch markers, matching `buildBm25Index`. */
+    * `config/` (one (depth, width) row — the geometry guard). Resets
+    * the store's sidecars ([[graft.store.Sidecars]]) like every build. */
   def writeSketch(items: DataFrame, termCol: String, depth: Int, width: Int,
                   path: String): Unit = {
     val spark = items.sparkSession
     import spark.implicits._
-    graft.io.Fs.delete(spark, s"$path/_applied_batches")
+    graft.store.Sidecars.reset(spark, path)
     sketch(items, termCol, depth, width)
       .write.mode("overwrite").parquet(s"$path/cells")
     Seq((depth, width)).toDF("depth", "width")

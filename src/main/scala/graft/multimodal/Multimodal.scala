@@ -246,11 +246,7 @@ object Multimodal {
   def writeDHashStore(hashes: DataFrame, path: String,
                       bandBuckets: Int = 64): Unit = {
     require(bandBuckets >= 1, s"bandBuckets >= 1: $bandBuckets")
-    // streaming batch markers reset with the build (the
-    // StreamIngest.oncePerBatch contract shared by every store
-    // builder: a new stream's batch ids restart at 0, and a stale
-    // marker would silently swallow its first micro-batches)
-    graft.io.Fs.delete(hashes.sparkSession, s"$path/_applied_batches")
+    graft.store.Sidecars.reset(hashes.sparkSession, path)
     val valid = validDHashes(hashes)
     dhashBands(valid).drop("dhash_bits")
       .withColumn("__bb", pmod(hash(col("band"), col("bv")), lit(bandBuckets)))

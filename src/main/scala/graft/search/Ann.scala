@@ -3,7 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.store.{CorpusStore, ServingSnapshot}
+import graft.store.{CorpusStore, ServingSnapshot, Sidecars}
 import graft.vector.VectorOps
 
 /** Approximate nearest-neighbour search — the scale path past the
@@ -165,21 +165,7 @@ object Ann {
     * nprobe/k probe scans ~nprobe/k of the corpus bytes. */
   def buildIvfIndex(corpus: DataFrame, cents: Seq[Seq[Double]], path: String,
                     vecCol: String = "embedding"): Unit = {
-    // a fresh build resets EVERY sibling describing the old contents:
-    // stale tombstones would anti-join valid vectors out of the new
-    // index; stale range certificates (.rstats) would let
-    // ivfRangeSearch silently certify out clusters whose NEW contents
-    // exceed the old bounds (a range probe on a rebuilt-but-not-
-    // re-recorded path now fails loudly on the missing stats instead);
-    // stale .model/.stats would make assignmentDrift compare against
-    // the previous build's baseline; a stale policy oplog (and its
-    // resolutions sidecar) would merge the PREVIOUS generation's
-    // orders into the new stream's order book — batch ids restart at
-    // 0 with a fresh stream, so old rows are indistinguishable from
-    // new ones (round-16 advice)
-    Seq(s"$path.tombstones", s"$path.rstats", s"$path.model", s"$path.stats",
-        s"$path.oplog", s"$path.resolutions")
-      .foreach(graft.io.Fs.delete(corpus.sparkSession, _))
+    Sidecars.reset(corpus.sparkSession, path)
     corpus.withColumn("__cluster", assignCluster(col(vecCol), cents))
       .repartition(col("__cluster")) // cluster: one task (not every task) writes a partition
       .write.partitionBy("__cluster").mode("overwrite").parquet(path)
@@ -199,11 +185,7 @@ object Ann {
     * directories. */
   def appendToIvfIndex(delta: DataFrame, cents: Seq[Seq[Double]], path: String,
                        vecCol: String = "embedding"): Unit = {
-    // appended rows can exceed a recorded range certificate's radius,
-    // silently certifying their cluster out of ivfRangeSearch — delete
-    // the stats (mirroring buildIvfIndex's sibling reset) so a
-    // post-append range probe fails loudly until recordRangeStats runs
-    graft.io.Fs.delete(delta.sparkSession, s"$path.rstats")
+    Sidecars.appended(delta.sparkSession, path)
     delta.withColumn("__cluster", assignCluster(col(vecCol), cents))
       .repartition(col("__cluster")) // one file per cluster per append
       .write.partitionBy("__cluster").mode("append").parquet(path)
@@ -215,23 +197,16 @@ object Ann {
     * append). The cluster files are immutable, so the delete is
     * LOGICAL: ids append to `<path>.tombstones/`; probes anti-join
     * them (kNN has no corpus stats to correct, unlike BM25), and
-    * [[compactIvfIndex]] applies them physically. Tombstones are
-    * bounded by contract (deletes are batched and compacted away), so
-    * probes broadcast them. Deleting an unknown or already-deleted id
-    * is harmless — the anti-join is idempotent. */
+    * [[compactIvfIndex]] applies them physically. Deleting an unknown
+    * or already-deleted id is harmless — the anti-join is idempotent. */
   def deleteFromIvfIndex(ids: DataFrame, path: String,
                          idCol: String = "vec_id"): Unit =
-    ids.select(col(idCol)).write.mode("append").parquet(s"$path.tombstones")
+    Sidecars.addTombstones(ids.select(col(idCol)), Sidecars.tombstones(path))
 
   /** The index's tombstoned ids, or None when nothing was deleted. */
   private[search] def tombstoneIds(spark: org.apache.spark.sql.SparkSession,
                                    path: String): Option[DataFrame] =
-    tombstoneScan(spark, path).map(_.distinct())
-
-  private def tombstoneScan(spark: org.apache.spark.sql.SparkSession,
-                            path: String): Option[DataFrame] =
-    if (!graft.io.Fs.exists(spark, s"$path.tombstones")) None
-    else Some(CorpusStore.load(spark, s"$path.tombstones"))
+    Sidecars.readTombstones(spark, Sidecars.tombstones(path)).map(_.distinct())
 
   private[search] def dropTombstones(df: DataFrame, path: String,
                                      idCol: String): DataFrame =
@@ -256,47 +231,14 @@ object Ann {
     // in-place call would overwrite the very layout it is reading
     require(srcPath != dstPath,
       "compact rewrites the layout: dstPath must differ from srcPath")
-    resetDstSidecars(spark, dstPath)
+    Sidecars.reset(spark, dstPath)
     dropTombstones(CorpusStore.load(spark, srcPath), srcPath, idCol)
       .repartition(col("__cluster"))
       .write.partitionBy("__cluster")
       .option("maxRecordsPerFile", recordsPerFile)
       .mode("overwrite").parquet(dstPath)
-    // the recorded drift baseline MOVES with the layout (the
-    // Sq.compactIvfSqIndex contract): compaction changes bytes, not
-    // contents — meanAssignSim already excluded tombstoned rows, so
-    // the baseline stays valid on the compacted generation. Guarded
-    // per sidecar (recordIvfModel writes model before stats; a crash
-    // between the two must not fail the compact); the stale-dst case
-    // is covered by resetDstSidecars' unconditional delete above.
-    if (graft.io.Fs.exists(spark, s"$srcPath.model"))
-      CorpusStore.load(spark, s"$srcPath.model").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstPath.model")
-    if (graft.io.Fs.exists(spark, s"$srcPath.stats"))
-      CorpusStore.load(spark, s"$srcPath.stats").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstPath.stats")
+    Sidecars.carry(spark, srcPath, dstPath)
   }
-
-  /** Reset a compact DESTINATION's stale sidecars — the
-    * [[buildIvfIndex]] contract applied to every `compact*Index` dst
-    * (round-17 advice): the overwrite replaces the data directory but
-    * NOT its siblings, so a reused dst path would keep the previous
-    * generation's tombstones (anti-joining valid rows out of the new
-    * layout) and its policy oplog/resolutions — and since stream batch
-    * ids restart at 0, a stale `.resolutions` with a high
-    * drained-through batch makes [[graft.store.Maintenance.openOrders]]
-    * silently close the new generation's firings. The data dir's own
-    * `_applied_batches` markers go with the overwrite for single-dir
-    * indexes; composed stores (SQ8/IVF-PQ) reset theirs explicitly.
-    * `.model`/`.stats` reset UNCONDITIONALLY before any guarded copy
-    * (round-18 advice): a reused dst whose source never recorded a
-    * baseline must not keep the previous generation's — the next
-    * drift read would serve a wrong baseline instead of failing. */
-  private[search] def resetDstSidecars(spark: org.apache.spark.sql.SparkSession,
-                                       dstPath: String): Unit =
-    Seq(s"$dstPath.tombstones", s"$dstPath.oplog", s"$dstPath.resolutions",
-        s"$dstPath.model", s"$dstPath.stats")
-      .foreach(graft.io.Fs.delete(spark, _))
 
   /** Search a materialized IVF index: probes are ranked driver-side
     * ([[probeIds]]) from the query vector read back once
@@ -325,7 +267,8 @@ object Ann {
         case c: Int => probes.contains(c)
         case _ => false
       }
-      tombstoneScan(spark, path).fold(Option(Set.empty[Long]))(ServingSnapshot.idSet)
+      Sidecars.readTombstones(spark, Sidecars.tombstones(path))
+        .fold(Option(Set.empty[Long]))(ServingSnapshot.idSet)
         .flatMap(dead => ServingSnapshot.topK(index, qv, k, idCol, vecCol,
           keep = Some("__cluster" -> probed), dead = dead, dropCols = Set("__cluster")))
     }.getOrElse(scan)
@@ -467,10 +410,10 @@ object Ann {
       cents.zipWithIndex.map { case (c, i) => (i, c) }
         .toDF("__cluster", "centroid")
         .coalesce(1) // model state: k × dim doubles, one file
-        .write.mode("overwrite").parquet(s"$path.model"),
+        .write.mode("overwrite").parquet(Sidecars.model(path)),
       meanAssignSimWith(spark, path, cents, idCol, vecCol))
     Seq(m).toDF("mean_sim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path.stats")
+      .coalesce(1).write.mode("overwrite").parquet(Sidecars.stats(path))
   }
 
   /** [[meanAssignSim]] against CALLER-HELD centroids (no sidecar
@@ -496,7 +439,7 @@ object Ann {
   private def meanAssignSim(spark: org.apache.spark.sql.SparkSession, path: String,
                             idCol: String, vecCol: String): Double =
     dropTombstones(CorpusStore.load(spark, path), path, idCol)
-      .join(broadcast(CorpusStore.load(spark, s"$path.model")), Seq("__cluster"))
+      .join(broadcast(CorpusStore.load(spark, Sidecars.model(path))), Seq("__cluster"))
       .agg(avg(VectorOps.cosine(col(vecCol), col("centroid"))).as("m"))
       .head().getDouble(0)
 
@@ -538,7 +481,7 @@ object Ann {
     // the recorded baseline and the current mean are independent eager
     // reads — overlap them (graft.io.Par)
     val (b6, c6) = graft.io.Par.join2(
-      r6(CorpusStore.load(spark, s"$path.stats").head().getDouble(0)),
+      r6(CorpusStore.load(spark, Sidecars.stats(path)).head().getDouble(0)),
       r6(meanAssignSim(spark, path, idCol, vecCol)))
     Seq((b6, c6, r6(b6 - c6)))
       .toDF("build_mean_sim", "current_mean_sim", "drift")
@@ -575,14 +518,10 @@ object Ann {
     * gives `cos(q, x) = q̂·x̂ ≤ q̂·mu + ‖x̂ − mu‖ ≤ q̂·mu + radius`, so
     * a whole cluster is provably below a similarity threshold when its
     * bound is — EXACT pruning, unlike the top-k probe's best-effort
-    * nprobe. Stats describe the index CONTENTS AT RECORD TIME:
-    * appending rows can exceed the recorded radius and silently break
-    * the bound, so both [[buildIvfIndex]] and [[appendToIvfIndex]]
-    * DELETE the stats — a range probe between a write and the
-    * re-record fails loudly on the missing stats instead of consulting
-    * a stale certificate (deletes only shrink clusters and stay
-    * sound, so tombstones need no reset). Tombstoned rows are excluded
-    * for tightness. */
+    * nprobe. Stats describe the index CONTENTS AT RECORD TIME, so a
+    * build or an append deletes them ([[graft.store.Sidecars]]) and a
+    * range probe fails until they are recorded again. Tombstoned rows
+    * are excluded for tightness. */
   def recordRangeStats(spark: org.apache.spark.sql.SparkSession, path: String,
                        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val normed = dropTombstones(CorpusStore.load(spark, path), path, idCol)
@@ -598,7 +537,7 @@ object Ann {
       .groupBy(col("__cluster"))
       .agg(first(col("mu")).as("mu"), max(col("__d")).as("radius"))
       .coalesce(1) // model state: k rows
-      .write.mode("overwrite").parquet(s"$path.rstats")
+      .write.mode("overwrite").parquet(Sidecars.rstats(path))
   }
 
   /** Clusters a range query at threshold `tau` must scan: those whose
@@ -610,7 +549,7 @@ object Ann {
                          qvec: Seq[Double], tau: Double): Seq[Int] = {
     val qn = math.sqrt(qvec.map(x => x * x).sum)
     val qhat = if (qn == 0.0) qvec.map(_ => 0.0) else qvec.map(_ / qn)
-    CorpusStore.load(spark, s"$path.rstats").collect().toSeq
+    CorpusStore.load(spark, Sidecars.rstats(path)).collect().toSeq
       .map { r =>
         val cluster = r.getInt(r.fieldIndex("__cluster"))
         val mu = r.getSeq[Double](r.fieldIndex("mu"))
@@ -689,7 +628,7 @@ object Ann {
   def ivfRangeSearchBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                           queries: DataFrame, tau: Double,
                           idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val stats = CorpusStore.load(spark, s"$path.rstats")
+    val stats = CorpusStore.load(spark, Sidecars.rstats(path))
     val qn = queries.select(col("qid"), col("qvec"),
       graft.functions.L2Normalize(col("qvec")).as("__qhat"))
     val probes = qn.crossJoin(broadcast(stats))
@@ -786,12 +725,7 @@ object Ann {
     * same frozen planes. */
   def buildLshIndex(corpus: DataFrame, planes: Seq[Seq[Double]], path: String,
                     vecCol: String = "embedding"): Unit = {
-    // fresh build resets the delete sidecar (the buildIvfIndex
-    // contract: stale tombstones would anti-join valid rows out) and
-    // the policy oplog/resolutions (stale orders would merge into the
-    // new generation's order book)
-    Seq(s"$path.tombstones", s"$path.oplog", s"$path.resolutions")
-      .foreach(graft.io.Fs.delete(corpus.sparkSession, _))
+    Sidecars.reset(corpus.sparkSession, path)
     corpus.withColumn("__bucket", lshBucket(col(vecCol), planes))
       .repartition(lshWriteParts(corpus.sparkSession, planes.size),
         col("__bucket"))
@@ -882,7 +816,7 @@ object Ann {
                       idCol: String = "vec_id"): Unit = {
     require(srcPath != dstPath,
       "compact rewrites the layout: dstPath must differ from srcPath")
-    resetDstSidecars(spark, dstPath)
+    Sidecars.reset(spark, dstPath)
     // bucket fan from the source layout (driver metadata listing —
     // the planes aren't a parameter here)
     val nBuckets = graft.io.Fs.listDirNames(spark, srcPath)

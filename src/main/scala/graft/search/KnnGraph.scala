@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.Sidecars
 import graft.vector.VectorOps
 
 /** All-pairs kNN GRAPH construction — the backbone artifact for
@@ -329,26 +330,12 @@ object KnnGraph {
     * later appends score against, which is what makes the index
     * self-contained across arriving batches (batch 2's candidates
     * must include batch 1's nodes; a frozen caller-side corpus would
-    * miss them). A fresh build resets both sides. */
+    * miss them). A fresh build resets both sides and every sidecar
+    * ([[graft.store.Sidecars]]). */
   def writeGraphIndex(graph: DataFrame, corpus: DataFrame, path: String,
                       buckets: Int = 16,
                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    // fresh build resets every sibling describing the old contents
-    // (the `Ann.buildIvfIndex` contract): stale tombstones would
-    // anti-join valid nodes out of the new graph, and a stale coarse
-    // layer would route walks through the OLD corpus's sampled nodes
-    // (a missing layer fails loudly in the layered search instead)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.nodes")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.tombstones")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.layer1")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.layer1_conf")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.layer2")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.layer2_conf")
-    // the policy oplog/resolutions describe the OLD generation's
-    // orders; a rebuilt index starts with an empty order book
-    // (round-16 advice: restarting batch ids merge into a stale log)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.oplog")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.resolutions")
+    Sidecars.reset(corpus.sparkSession, path)
     // the edge store and the nodes side are independent writes — run
     // them as concurrent jobs (graft.io.Par: at small scale the
     // build's cost is job scheduling, not data)
@@ -358,7 +345,7 @@ object KnnGraph {
         .repartition(col("__bucket"))
         .write.partitionBy("__bucket").mode("overwrite").parquet(path),
       () => corpus.select(col(idCol).as("id"), col(vecCol).as("vec"))
-        .write.mode("overwrite").parquet(s"$path.nodes"))
+        .write.mode("overwrite").parquet(Sidecars.nodes(path)))
   }
 
   /** EXACT incremental append to a materialized graph index — the
@@ -379,8 +366,8 @@ object KnnGraph {
     // nodes side is an empty corpus — the "overlay" is then just the
     // delta's own exact graph
     val stored =
-      if (graft.io.Fs.exists(spark, s"$path.nodes"))
-        spark.read.parquet(s"$path.nodes")
+      if (graft.io.Fs.exists(spark, Sidecars.nodes(path)))
+        spark.read.parquet(Sidecars.nodes(path))
       else deltaN.filter(lit(false))
     val deltaDst = deltaN.select(col("id").as("dst"), col("vec").as("__dvec"))
     val oldToDelta = stored.select(col("id").as("src"), col("vec").as("__svec"))
@@ -402,7 +389,7 @@ object KnnGraph {
         .withColumn("__bucket", pmod(hash(col("src")), lit(buckets)))
         .repartition(col("__bucket"))
         .write.partitionBy("__bucket").mode("append").parquet(path),
-      () => deltaN.write.mode("append").parquet(s"$path.nodes"))
+      () => deltaN.write.mode("append").parquet(Sidecars.nodes(path)))
   }
 
   /** Probe the index for a bounded node set: top-k neighbors of each
@@ -457,7 +444,7 @@ object KnnGraph {
                                    buckets: Int = 16,
                                    idCol: String = "vec_id"): DataFrame = {
     import spark.implicits._
-    val nodesRaw = spark.read.parquet(s"$path.nodes")
+    val nodesRaw = spark.read.parquet(Sidecars.nodes(path))
       .select(col("id"), col("vec").as("__vec"))
     val vecs = graphTombstones(spark, path).fold(nodesRaw) { t =>
       nodesRaw.join(broadcast(t.select(col(t.columns.head).as("__tomb"))),
@@ -546,9 +533,9 @@ object KnnGraph {
   def writeGraphLayer2(spark: org.apache.spark.sql.SparkSession, path: String,
                        sampleEvery: Int, k: Int, buckets: Int = 16,
                        method: String = "exact"): Unit = {
-    require(graft.io.Fs.exists(spark, s"$path.layer1_conf"),
+    require(graft.io.Fs.exists(spark, Sidecars.layerConf(path, 1)),
       s"no layer1 at $path — layer2 nests the layer1 sample; build that first")
-    val r1 = spark.read.parquet(s"$path.layer1_conf").head()
+    val r1 = spark.read.parquet(Sidecars.layerConf(path, 1)).head()
       .getAs[Int]("sample_every")
     require(r1 == sampleEvery,
       s"layer2 nests the layer1 rule: sampleEvery $sampleEvery != layer1's $r1")
@@ -590,7 +577,7 @@ object KnnGraph {
     require(rate >= 2, s"sample rate must be >= 2: $rate")
     require(method == "exact" || method == "nndescent",
       s"layer method must be 'exact' or 'nndescent': $method")
-    val sampled = spark.read.parquet(s"$path.nodes")
+    val sampled = spark.read.parquet(Sidecars.nodes(path))
       .filter(pmod(portableHash(col("id")), lit(rate)) === 0)
       .select(col("id").as("vec_id"), col("vec").as("embedding"))
     require(sampled.limit(2).count() == 2,
@@ -603,13 +590,13 @@ object KnnGraph {
       .withColumn("__bucket", pmod(hash(col("src")), lit(buckets)))
       .repartition(col("__bucket"))
       .write.partitionBy("__bucket").mode("overwrite")
-      .parquet(s"$path.layer$level")
+      .parquet(Sidecars.layer(path, level))
     // the layer's build parameters persist next to it: the health op
     // and the relayer remedy need the sample rule (and the method),
     // and guessing them from the data would mis-measure coverage /
     // silently change the rebuild's cost class
     Seq((rate, k, method)).toDF("sample_every", "k", "method")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path.layer${level}_conf")
+      .coalesce(1).write.mode("overwrite").parquet(Sidecars.layerConf(path, level))
   }
 
   /** Coverage health of the coarse layer — the staleness signal the
@@ -630,16 +617,16 @@ object KnnGraph {
   def graphLayerHealth(spark: org.apache.spark.sql.SparkSession,
                        path: String, level: Int = 1): DataFrame = {
     import spark.implicits._
-    require(graft.io.Fs.exists(spark, s"$path.layer${level}_conf"),
+    require(graft.io.Fs.exists(spark, Sidecars.layerConf(path, level)),
       s"no layer$level at $path — run writeGraphLayer${if (level == 2) "2" else ""} first")
-    val conf = spark.read.parquet(s"$path.layer${level}_conf").head()
+    val conf = spark.read.parquet(Sidecars.layerConf(path, level)).head()
     val sampleEvery = conf.getAs[Int]("sample_every")
-    val nodesRaw = spark.read.parquet(s"$path.nodes").select(col("id"))
+    val nodesRaw = spark.read.parquet(Sidecars.nodes(path)).select(col("id"))
     val live = graphTombstones(spark, path).fold(nodesRaw) { t =>
       nodesRaw.join(broadcast(t.select(col(t.columns.head).as("__tomb"))),
         col("id") === col("__tomb"), "left_anti")
     }
-    val inLayer = spark.read.parquet(s"$path.layer$level")
+    val inLayer = spark.read.parquet(Sidecars.layer(path, level))
       .select(col("src").as("id")).distinct()
     // one fused pass (node count, due count, missing count) — this
     // health runs on every plan AND every post-drain verification, so
@@ -678,10 +665,10 @@ object KnnGraph {
                                   k: Int, degree: Int, beam: Int = 8,
                                   hopsCoarse: Int = 2, hopsFine: Int = 2,
                                   buckets: Int = 16): DataFrame = {
-    require(graft.io.Fs.exists(spark, s"$path.layer1"),
+    require(graft.io.Fs.exists(spark, Sidecars.layer(path, 1)),
       s"no coarse layer at $path.layer1 — run writeGraphLayer after the build")
     layeredWalk(spark, path, query,
-      Seq(s"$path.layer1" -> hopsCoarse, path -> hopsFine),
+      Seq(Sidecars.layer(path, 1) -> hopsCoarse, path -> hopsFine),
       k, degree, beam, buckets)
   }
 
@@ -701,7 +688,7 @@ object KnnGraph {
                           rungs: Seq[(String, Int)], k: Int, degree: Int,
                           beam: Int, buckets: Int): DataFrame = {
     import spark.implicits._
-    val nodesRaw = spark.read.parquet(s"$path.nodes")
+    val nodesRaw = spark.read.parquet(Sidecars.nodes(path))
       .select(col("id"), col("vec").as("__vec"))
     val vecs = graphTombstones(spark, path).fold(nodesRaw) { t =>
       nodesRaw.join(broadcast(t.select(col(t.columns.head).as("__tomb"))),
@@ -762,12 +749,12 @@ object KnnGraph {
                                    hopsCoarse: Int = 1, hopsMid: Int = 1,
                                    hopsFine: Int = 2,
                                    buckets: Int = 16): DataFrame = {
-    Seq("layer1", "layer2").foreach { l =>
-      require(graft.io.Fs.exists(spark, s"$path.$l"),
-        s"no $l at $path — build both layers before the 3-level walk")
+    Seq(1, 2).foreach { l =>
+      require(graft.io.Fs.exists(spark, Sidecars.layer(path, l)),
+        s"no layer$l at $path — build both layers before the 3-level walk")
     }
     layeredWalk(spark, path, query,
-      Seq(s"$path.layer2" -> hopsCoarse, s"$path.layer1" -> hopsMid,
+      Seq(Sidecars.layer(path, 2) -> hopsCoarse, Sidecars.layer(path, 1) -> hopsMid,
         path -> hopsFine),
       k, degree, beam, buckets)
   }
@@ -784,12 +771,11 @@ object KnnGraph {
     * batched, repair is one keyed recompute when you choose). */
   def deleteFromGraphIndex(ids: DataFrame, path: String,
                            idCol: String = "vec_id"): Unit =
-    ids.select(col(idCol)).write.mode("append").parquet(s"$path.tombstones")
+    Sidecars.addTombstones(ids.select(col(idCol)), Sidecars.tombstones(path))
 
   private def graphTombstones(spark: org.apache.spark.sql.SparkSession,
                               path: String): Option[DataFrame] =
-    if (!graft.io.Fs.exists(spark, s"$path.tombstones")) None
-    else Some(spark.read.parquet(s"$path.tombstones").distinct())
+    Sidecars.readTombstones(spark, Sidecars.tombstones(path)).map(_.distinct())
 
   private def dropGraphTombstones(edges: DataFrame, path: String): DataFrame =
     graphTombstones(edges.sparkSession, path).fold(edges) { t =>
@@ -865,7 +851,7 @@ object KnnGraph {
         .join(broadcast(ids), col("dst") === col("__tomb"), "left_semi")
         .select(col("src")).distinct()
         .join(broadcast(ids), col("src") === col("__tomb"), "left_anti")
-      val nodes = spark.read.parquet(s"$path.nodes")
+      val nodes = spark.read.parquet(Sidecars.nodes(path))
         .join(broadcast(ids), col("id") === col("__tomb"), "left_anti")
         .localCheckpoint()
       val vecs = nodes.select(col("id"), col("vec").as("__vec"))
@@ -919,7 +905,7 @@ object KnnGraph {
       // rewrite the nodes side without the deleted rows (checkpoint
       // first — the write overwrites its own input files); tombstones
       // stay until compact drops the stale edge rows physically
-      nodes.write.mode("overwrite").parquet(s"$path.nodes")
+      nodes.write.mode("overwrite").parquet(Sidecars.nodes(path))
     }
   }
 
@@ -934,7 +920,7 @@ object KnnGraph {
   def graphIndexHealth(spark: org.apache.spark.sql.SparkSession,
                        path: String): DataFrame = {
     val edges = spark.read.parquet(path)
-    val nodes = spark.read.parquet(s"$path.nodes")
+    val nodes = spark.read.parquet(Sidecars.nodes(path))
     // ONE edges scan (round-21 optimization: n_edge_rows is the sum of
     // the per-src counts the n_src/max aggregate already computes — the
     // old second count(*) scan re-read every edge row for it)
@@ -961,15 +947,8 @@ object KnnGraph {
                         recordsPerFile: Long = 1L << 20): Unit = {
     require(srcPath != dstPath,
       "compact rewrites the layout: dstPath must differ from srcPath")
-    // dst sidecar reset (round-17 advice, the writeGraphIndex list): a
-    // reused dst path must not keep a previous generation's
-    // tombstones, policy order book, or — worse — a stale coarse
-    // LAYER, which the layered walk would route through silently
-    // (this compact deliberately does NOT derive a layer; see below)
-    Seq(s"$dstPath.tombstones", s"$dstPath.oplog", s"$dstPath.resolutions",
-        s"$dstPath.layer1", s"$dstPath.layer1_conf",
-        s"$dstPath.layer2", s"$dstPath.layer2_conf")
-      .foreach(graft.io.Fs.delete(spark, _))
+    // this compact deliberately does NOT derive a layer; see below
+    Sidecars.reset(spark, dstPath)
     val w = Window.partitionBy(col("src"))
       .orderBy(col("sim").desc, col("dst").asc)
     // the edge rewrite and the nodes rewrite read different inputs and
@@ -991,12 +970,12 @@ object KnnGraph {
       // nodes side drops tombstoned rows too (repair already removes
       // them, but compact must not depend on repair having run)
       () => {
-        val nodes = spark.read.parquet(s"$srcPath.nodes")
+        val nodes = spark.read.parquet(Sidecars.nodes(srcPath))
         graphTombstones(spark, srcPath)
           .fold(nodes)(t => nodes.join(
             broadcast(t.select(col(t.columns.head).as("__tomb"))),
             col("id") === col("__tomb"), "left_anti"))
-          .write.mode("overwrite").parquet(s"$dstPath.nodes")
+          .write.mode("overwrite").parquet(Sidecars.nodes(dstPath))
       })
     // the coarse layer does NOT move: it is derived state pinned to a
     // node-set generation (its sample may reference nodes this rewrite

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.Sidecars
 import graft.text.TextAnalysis
 
 /** Lexical (keyword) retrieval and hybrid fusion — the other half of a
@@ -425,17 +426,7 @@ object Lexical {
   def buildBm25Index(docs: DataFrame, textCol: String, idCol: String,
                      path: String, termBuckets: Int = 64): Unit = {
     require(termBuckets >= 1, s"termBuckets >= 1: $termBuckets")
-    // a fresh build resets the path's METADATA too: stale tombstones
-    // would anti-join valid docs out of the new index, and stale
-    // streaming batch markers would make a new stream (batch ids
-    // restarting at 0) silently skip its first appends
-    graft.io.Fs.delete(docs.sparkSession, s"$path/tombstones")
-    graft.io.Fs.delete(docs.sparkSession, s"$path/_applied_batches")
-    // the policy oplog/resolutions describe the OLD generation's
-    // orders; a rebuilt index starts with an empty order book
-    // (round-16 advice: restarting batch ids merge into a stale log)
-    graft.io.Fs.delete(docs.sparkSession, s"$path.oplog")
-    graft.io.Fs.delete(docs.sparkSession, s"$path.resolutions")
+    Sidecars.reset(docs.sparkSession, path)
     val withDl = docs
       .select(col(idCol), TextAnalysis.tokens(col(textCol)).as("toks"))
       .withColumn("dl", size(col("toks")))
@@ -552,9 +543,10 @@ object Lexical {
   def deleteFromBm25Index(ids: DataFrame, idCol: String, path: String): Unit = {
     val spark = ids.sparkSession
     bm25IndexBuckets(spark, path): Unit // consistency guard only
-    spark.read.parquet(s"$path/doclens")
-      .join(ids.select(col(idCol)), Seq(idCol), "left_semi")
-      .write.mode("append").parquet(s"$path/tombstones")
+    Sidecars.addTombstones(
+      spark.read.parquet(s"$path/doclens")
+        .join(ids.select(col(idCol)), Seq(idCol), "left_semi"),
+      Sidecars.bm25Tombstones(path))
   }
 
   /** The index's distinct tombstone rows, or None when nothing was
@@ -563,18 +555,21 @@ object Lexical {
     * them. */
   private def bm25Tombstones(spark: org.apache.spark.sql.SparkSession,
                              path: String): Option[DataFrame] =
-    if (!graft.io.Fs.exists(spark, s"$path/tombstones")) None
-    else Some(spark.read.parquet(s"$path/tombstones").distinct())
+    Sidecars.readTombstones(spark, Sidecars.bm25Tombstones(path)).map(_.distinct())
 
   /** Physically apply tombstones: rewrite postings without tombstoned
     * docs (same bucket layout, so probes are unchanged), collapse
     * stats to one corrected row, refresh doclens, clear tombstones.
     * The small-files remedy AND the delete remedy in one pass —
-    * [[Ann.compactIvfIndex]]'s contract extended with deletes. */
+    * [[Ann.compactIvfIndex]]'s contract extended with deletes.
+    * `dstPath` must differ from `srcPath`, and starts sidecar-free. */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        srcPath: String, dstPath: String, idCol: String,
                        recordsPerFile: Long = 1L << 20): Unit = {
+    require(srcPath != dstPath,
+      "compact rewrites the layout: dstPath must differ from srcPath")
     val termBuckets = bm25IndexBuckets(spark, srcPath)
+    Sidecars.reset(spark, dstPath)
     val tombs = bm25Tombstones(spark, srcPath)
     def dropTombs(df: DataFrame): DataFrame =
       tombs.fold(df)(t => df.join(broadcast(t.select(col(idCol))), Seq(idCol), "left_anti"))
@@ -622,10 +617,7 @@ object Lexical {
       "rebucket rewrites the layout: dstPath must differ from srcPath")
     require(newTermBuckets >= 1, s"termBuckets >= 1: $newTermBuckets")
     bm25IndexBuckets(spark, srcPath): Unit // consistency guard only
-    graft.io.Fs.delete(spark, s"$dstPath/tombstones")
-    graft.io.Fs.delete(spark, s"$dstPath/_applied_batches")
-    graft.io.Fs.delete(spark, s"$dstPath.oplog")
-    graft.io.Fs.delete(spark, s"$dstPath.resolutions")
+    Sidecars.reset(spark, dstPath)
     val tombs = bm25Tombstones(spark, srcPath)
     def dropTombs(df: DataFrame): DataFrame =
       tombs.fold(df)(t =>

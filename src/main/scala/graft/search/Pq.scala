@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.store.Sidecars
 import graft.vector.VectorOps
 
 /** Product quantization (Jégou et al., "Product Quantization for
@@ -434,29 +435,13 @@ object Pq {
   def buildIvfPqIndex(corpus: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                       path: String, idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = {
+    Sidecars.reset(corpus.sparkSession, path)
+    Sidecars.reset(corpus.sparkSession, s"$path/codes")
     corpus
       .withColumn("__cluster", Ann.assignCluster(col(vecCol), cents))
       .select(col(idCol), col("__cluster"), encodeCol(col(vecCol), cb).as("codes"))
       .repartition(col("__cluster")) // cluster: one task (not every task) writes a partition
       .write.partitionBy("__cluster").mode("overwrite").parquet(s"$path/codes")
-    // fresh build resets delete metadata (stale tombstones would
-    // shortlist-exclude valid vectors) AND range certificates (the
-    // Ann.buildIvfIndex contract: new contents may exceed a recorded
-    // radius — a range probe before the re-record must fail loudly)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path/codes.tombstones")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path/codes.rstats")
-    // ... and the reconstruction-drift baseline: a stale one would
-    // make reconstructionDrift compare against the previous build
-    graft.io.Fs.delete(corpus.sparkSession, s"$path/codes.qstats")
-    // ... and streaming batch markers (StreamIngest.oncePerBatch —
-    // a new stream's batch ids restart at 0; stale markers would
-    // silently swallow its first micro-batches)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path/_applied_batches")
-    // ... and the policy oplog/resolutions: stale orders from the old
-    // generation would merge into the new stream's order book under
-    // its restarting batch ids (round-16 advice)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.oplog")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.resolutions")
     corpus.select(col(idCol), col(vecCol))
       .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
       .write.mode("overwrite").parquet(s"$path/vectors")
@@ -477,10 +462,8 @@ object Pq {
   def appendToIvfPqIndex(delta: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                          path: String, idCol: String = "vec_id",
                          vecCol: String = "embedding"): Unit = {
-    // appended rows can exceed a recorded range certificate's radius —
-    // delete it (the Ann.appendToIvfIndex contract) so a post-append
-    // range probe fails loudly until recordIvfPqRangeStats runs
-    graft.io.Fs.delete(delta.sparkSession, s"$path/codes.rstats")
+    Sidecars.appended(delta.sparkSession, path)
+    Sidecars.appended(delta.sparkSession, s"$path/codes")
     delta
       .withColumn("__cluster", Ann.assignCluster(col(vecCol), cents))
       .select(col(idCol), col("__cluster"), encodeCol(col(vecCol), cb).as("codes"))
@@ -566,15 +549,8 @@ object Pq {
                         idCol: String = "vec_id"): Unit = {
     require(srcPath != dstPath,
       "compact rewrites the layout: dstPath must differ from srcPath")
-    // store-level dst sidecar reset (round-17 advice; the
-    // Sq.compactIvfSqIndex rationale — a reused dst path must not keep
-    // the previous generation's order book or batch markers). The
-    // recorded error baseline resets UNCONDITIONALLY before the
-    // guarded copy (round-18 advice): a reused dst whose source never
-    // recorded one must not serve a stale previous-generation baseline.
-    Seq(s"$dstPath.oplog", s"$dstPath.resolutions",
-        s"$dstPath/_applied_batches", s"$dstPath/codes.qstats")
-      .foreach(graft.io.Fs.delete(spark, _))
+    // the codes side resets and carries inside compactIvfIndex
+    Sidecars.reset(spark, dstPath)
     Ann.compactIvfIndex(spark, s"$srcPath/codes", s"$dstPath/codes",
       recordsPerFile, idCol)
     Ann.dropTombstones(spark.read.parquet(s"$srcPath/vectors"),
@@ -582,14 +558,7 @@ object Pq {
       .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
       .write.option("maxRecordsPerFile", recordsPerFile)
       .mode("overwrite").parquet(s"$dstPath/vectors")
-    // the recorded recon-error baseline MOVES with the layout (the
-    // Sq.compactIvfSqIndex contract): compaction changes bytes, not
-    // contents — reconstructionDrift's current side already excludes
-    // tombstoned rows, so the baseline stays valid, and a compacted
-    // index that silently lost it would fail the next drift read
-    if (graft.io.Fs.exists(spark, s"$srcPath/codes.qstats"))
-      spark.read.parquet(s"$srcPath/codes.qstats").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstPath/codes.qstats")
+    Sidecars.carry(spark, srcPath, dstPath)
   }
 
   /** The pruned-codes ADC shortlist of a materialized index probe —
@@ -800,9 +769,8 @@ object Pq {
     * independent of the query, so `adc + qerr` is a per-row UPPER
     * BOUND on the true cosine — the certificate that lets the range
     * search filter on the 8-byte codes without ever losing a true
-    * answer. Same lifecycle contract as the IVF stats: build and
-    * append DELETE them (stale bounds may be exceeded), deletes only
-    * shrink and stay sound. */
+    * answer. Same lifecycle as the IVF stats: a build or an append
+    * deletes them ([[graft.store.Sidecars]]). */
   def recordIvfPqRangeStats(spark: org.apache.spark.sql.SparkSession, path: String,
                             cb: Codebooks, idCol: String = "vec_id",
                             vecCol: String = "embedding"): Unit = {
@@ -824,7 +792,7 @@ object Pq {
       .agg(first(col("mu")).as("mu"), max(col("__d")).as("radius"),
         max(col("__e")).as("qerr"))
       .coalesce(1) // model state: k rows
-      .write.mode("overwrite").parquet(s"$path/codes.rstats")
+      .write.mode("overwrite").parquet(Sidecars.rstats(s"$path/codes"))
   }
 
   /** EXACT range search over a materialized IVF-PQ index — every
@@ -853,7 +821,7 @@ object Pq {
     val qvec = Search.probeVector(query)
     val probes = Ann.rangeProbeClusters(spark, s"$path/codes", qvec, tau)
     // per-cluster qerr for the probed set — k rows of model state
-    val qerrs = spark.read.parquet(s"$path/codes.rstats")
+    val qerrs = spark.read.parquet(Sidecars.rstats(s"$path/codes"))
       .filter(col("__cluster").isin(probes: _*))
       .select(col("__cluster"), col("qerr"))
     val cand = Ann.dropTombstones(
@@ -899,7 +867,7 @@ object Pq {
                        vecCol: String = "embedding"): Unit = {
     import spark.implicits._
     Seq(meanReconError(spark, path, cb, idCol, vecCol)).toDF("mean_err")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codes.qstats")
+      .coalesce(1).write.mode("overwrite").parquet(Sidecars.qstats(s"$path/codes"))
   }
 
   /** Codebook-staleness drift vs the recorded baseline — the
@@ -916,7 +884,7 @@ object Pq {
     def r6(x: Double): Double = VectorOps.round6(x)
     // baseline + current error are independent eager reads — overlap
     val (b6, c6) = graft.io.Par.join2(
-      r6(spark.read.parquet(s"$path/codes.qstats").head().getDouble(0)),
+      r6(spark.read.parquet(Sidecars.qstats(s"$path/codes")).head().getDouble(0)),
       r6(meanReconError(spark, path, cb, idCol, vecCol)))
     Seq((b6, c6, r6(c6 - b6)))
       .toDF("build_mean_err", "current_mean_err", "drift")

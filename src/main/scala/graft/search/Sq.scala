@@ -3,6 +3,7 @@ package graft.search
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.store.Sidecars
 import graft.vector.VectorOps
 
 /** SQ8 (int8 scalar-quantized) materialized IVF index — the middle
@@ -29,8 +30,8 @@ import graft.vector.VectorOps
   * physically to BOTH sides, [[retrainIvfSqIndex]] re-learns the
   * coarse centroids from the survivors, and
   * [[graft.store.Snapshots.syncIvfSqIndex]] drives the whole
-  * lifecycle from a snapshot diff. A fresh build resets stale delete
-  * state the way every fresh build in the family does.
+  * lifecycle from a snapshot diff. A fresh build resets the store's
+  * sidecars the way every fresh build does ([[graft.store.Sidecars]]).
   */
 object Sq {
 
@@ -40,21 +41,8 @@ object Sq {
   def buildIvfSqIndex(corpus: DataFrame, cents: Seq[Seq[Double]], path: String,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding"): Unit = {
-    graft.io.Fs.delete(corpus.sparkSession, s"$path/codes.tombstones")
-    // streaming batch markers reset with the build (the
-    // StreamIngest.oncePerBatch contract: a new stream's batch ids
-    // restart at 0, and stale markers would swallow its first batches);
-    // stale model/stats would make ivfSqDrift compare against the
-    // previous build's baseline (the buildIvfIndex sibling-reset rule)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path/_applied_batches")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.model")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.stats")
-    // the policy oplog (and its resolutions sidecar) describes the OLD
-    // generation's orders: a rebuilt store starts with an empty order
-    // book, or the new stream's restarting batch ids would merge into
-    // the stale log (round-16 advice)
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.oplog")
-    graft.io.Fs.delete(corpus.sparkSession, s"$path.resolutions")
+    Sidecars.reset(corpus.sparkSession, path)
+    Sidecars.reset(corpus.sparkSession, s"$path/codes")
     // the two sides are independent writes — run them as concurrent
     // jobs (graft.io.Par: the build's cost at small scale is job
     // scheduling, not data)
@@ -127,7 +115,9 @@ object Sq {
     * same-centroids-then-probe (spec-pinned in SqSpec). */
   def appendToIvfSqIndex(delta: DataFrame, cents: Seq[Seq[Double]], path: String,
                          idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Unit =
+                         vecCol: String = "embedding"): Unit = {
+    Sidecars.appended(delta.sparkSession, path)
+    Sidecars.appended(delta.sparkSession, s"$path/codes")
     // independent sides → concurrent append jobs (the build's shape)
     graft.io.Par.unit(
       () => delta
@@ -140,6 +130,7 @@ object Sq {
       () => delta.select(col(idCol), col(vecCol))
         .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
         .write.mode("append").parquet(s"$path/vectors"))
+  }
 
   /** Tombstone-delete vectors from a materialized SQ8-IVF index —
     * [[Ann.deleteFromIvfIndex]]'s contract; the codes side owns the
@@ -164,21 +155,8 @@ object Sq {
                         idCol: String = "vec_id"): Unit = {
     require(srcPath != dstPath,
       "compact rewrites the layout: dstPath must differ from srcPath")
-    // store-level dst sidecars reset like compactBm25Index's (round-17
-    // advice): a reused dst path must not keep the previous
-    // generation's order book — stream batch ids restart at 0, so a
-    // stale .resolutions would silently close the new generation's
-    // firings in openOrders. The composed store's own _applied_batches
-    // markers live INSIDE dstPath (the per-side overwrites don't
-    // remove the parent dir), so they reset here too; the codes-side
-    // sidecars reset inside compactIvfIndex. The recorded .model/.stats
-    // reset UNCONDITIONALLY before the guarded copy below (round-18
-    // advice): a reused dst whose SOURCE never recorded a baseline must
-    // not keep the previous generation's — the next drift read would
-    // serve a wrong baseline instead of failing on the missing sidecar.
-    Seq(s"$dstPath.oplog", s"$dstPath.resolutions",
-        s"$dstPath/_applied_batches", s"$dstPath.model", s"$dstPath.stats")
-      .foreach(graft.io.Fs.delete(spark, _))
+    // the codes side resets and carries inside compactIvfIndex
+    Sidecars.reset(spark, dstPath)
     Ann.compactIvfIndex(spark, s"$srcPath/codes", s"$dstPath/codes",
       recordsPerFile, idCol)
     Ann.dropTombstones(spark.read.parquet(s"$srcPath/vectors"),
@@ -186,21 +164,7 @@ object Sq {
       .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
       .write.option("maxRecordsPerFile", recordsPerFile)
       .mode("overwrite").parquet(s"$dstPath/vectors")
-    // recorded model sidecars MOVE with the layout: compaction changes
-    // bytes, not contents — the drift baseline stays valid (current
-    // mean already excluded tombstoned rows), and a compacted index
-    // that silently lost its baseline would fail the next drift read.
-    // Each sidecar is guarded by ITS OWN existence (round-16 advice):
-    // recordIvfSqModel writes model before stats, so a crash between
-    // the two leaves model-without-stats — a single gate on .model
-    // would then fail this compact on the missing stats read, while
-    // independent guards carry over exactly what exists
-    if (graft.io.Fs.exists(spark, s"$srcPath.model"))
-      spark.read.parquet(s"$srcPath.model").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstPath.model")
-    if (graft.io.Fs.exists(spark, s"$srcPath.stats"))
-      spark.read.parquet(s"$srcPath.stats").coalesce(1)
-        .write.mode("overwrite").parquet(s"$dstPath.stats")
+    Sidecars.carry(spark, srcPath, dstPath)
   }
 
   /** Re-train an appended/deleted SQ8-IVF index from its CURRENT
@@ -242,8 +206,8 @@ object Sq {
                        idCol: String = "vec_id",
                        vecCol: String = "embedding"): Unit = {
     import spark.implicits._
-    // model MUST land before stats (the crash-ordering contract the
-    // compact's independent sidecar guards rely on), but the baseline
+    // model MUST land before stats (the crash-ordering contract
+    // Sidecars.carry's independent guards rely on), but the baseline
     // SCAN is independent of the model write — it runs against the
     // caller-held centroids, never the sidecar — so overlap them and
     // write stats last
@@ -251,10 +215,10 @@ object Sq {
       cents.zipWithIndex.map { case (c, i) => (i, c) }
         .toDF("__cluster", "centroid")
         .coalesce(1) // model state: k × dim doubles, one file
-        .write.mode("overwrite").parquet(s"$path.model"),
+        .write.mode("overwrite").parquet(Sidecars.model(path)),
       meanAssignSimWith(spark, path, cents, idCol, vecCol))
     Seq(m).toDF("mean_sim")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path.stats")
+      .coalesce(1).write.mode("overwrite").parquet(Sidecars.stats(path))
   }
 
   /** Mean cosine between each surviving vector and its ASSIGNED coarse
@@ -269,7 +233,7 @@ object Sq {
     * state, a driver read by construction. */
   def readIvfSqModel(spark: org.apache.spark.sql.SparkSession,
                      path: String): Seq[Seq[Double]] =
-    spark.read.parquet(s"$path.model").orderBy(col("__cluster")).collect()
+    spark.read.parquet(Sidecars.model(path)).orderBy(col("__cluster")).collect()
       .map(_.getSeq[Double](1).toSeq).toSeq
 
   private def meanAssignSim(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -308,7 +272,7 @@ object Sq {
     def r6(x: Double): Double = VectorOps.round6(x)
     // baseline + current mean are independent eager reads — overlap
     val (b6, c6) = graft.io.Par.join2(
-      r6(spark.read.parquet(s"$path.stats").head().getDouble(0)),
+      r6(spark.read.parquet(Sidecars.stats(path)).head().getDouble(0)),
       r6(meanAssignSim(spark, path, idCol, vecCol)))
     Seq((b6, c6, r6(b6 - c6)))
       .toDF("build_mean_sim", "current_mean_sim", "drift")

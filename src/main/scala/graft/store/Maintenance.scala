@@ -352,7 +352,7 @@ object Maintenance {
   /** [[orderBookOf]] over an index's persisted oplog. */
   def orderBook(spark: org.apache.spark.sql.SparkSession,
                 path: String): DataFrame =
-    orderBookOf(spark.read.parquet(s"$path.oplog"))
+    orderBookOf(spark.read.parquet(Sidecars.oplog(path)))
 
   /** DRAIN the order book — the WRITE side that closes the streaming
     * maintenance loop (round-16 verdict item 2: the book was read-only;
@@ -396,7 +396,7 @@ object Maintenance {
       .orderBy(col("last_severity").desc, col("index_kind").asc,
         col("index_name").asc, col("action").asc, col("signal").asc)
       .localCheckpoint()
-    report.write.mode("append").parquet(s"$path.resolutions")
+    report.write.mode("append").parquet(Sidecars.resolutions(path))
     report
   }
 
@@ -536,7 +536,7 @@ object Maintenance {
       .orderBy(col("last_severity").desc, col("index_kind").asc,
         col("index_name").asc, col("action").asc, col("signal").asc)
       .localCheckpoint()
-    report.write.mode("append").parquet(s"$path.resolutions")
+    report.write.mode("append").parquet(Sidecars.resolutions(path))
     report
   }
 
@@ -793,7 +793,7 @@ object Maintenance {
     // admitted key is a book row key, and the child union only adds) —
     // no emptiness probe job before the append
     report.drop("cost_rows")
-      .write.mode("append").parquet(s"$path.resolutions")
+      .write.mode("append").parquet(Sidecars.resolutions(path))
     report
   }
 
@@ -881,7 +881,7 @@ object Maintenance {
     // semi-join keeps at least one row per admitted order), so the
     // write needs no emptiness probe job
     report.drop("cost_rows")
-      .write.mode("append").parquet(s"$path.resolutions")
+      .write.mode("append").parquet(Sidecars.resolutions(path))
     report
   }
 
@@ -904,12 +904,12 @@ object Maintenance {
     * identical remedy won't fix, not a backlog problem. */
   def openOrders(spark: org.apache.spark.sql.SparkSession,
                  path: String): DataFrame = {
-    val log = spark.read.parquet(s"$path.oplog")
-    if (!graft.io.Fs.exists(spark, s"$path.resolutions"))
+    val log = spark.read.parquet(Sidecars.oplog(path))
+    if (!graft.io.Fs.exists(spark, Sidecars.resolutions(path)))
       orderBookOf(log).withColumn("n_acks", lit(0L))
     else {
       val keys = Seq("index_kind", "index_name", "action", "signal")
-      val drained = spark.read.parquet(s"$path.resolutions")
+      val drained = spark.read.parquet(Sidecars.resolutions(path))
         .filter(col("resolved"))
         .groupBy(keys.map(col): _*)
         .agg(max(col("last_batch")).as("__drained_through"),
@@ -1233,7 +1233,7 @@ object Maintenance {
       // conf read from the ORIGINAL path: a fresh compact destination
       // carries no layers yet, but the derived state's parameters are
       // a property of the watched store, not of one generation
-      val p = s"$path.layer${level}_conf"
+      val p = Sidecars.layerConf(path, level)
       if (!graft.io.Fs.exists(spark, p)) None
       else {
         val c = spark.read.parquet(p).head()
@@ -1285,8 +1285,8 @@ object Maintenance {
     def afterSignals: DataFrame = {
       // the graph health chain is lazy but the layer reads are eager
       // count chains — overlap whatever layers exist
-      val hasL1 = graft.io.Fs.exists(spark, s"$effPath.layer1_conf")
-      val hasL2 = graft.io.Fs.exists(spark, s"$effPath.layer2_conf")
+      val hasL1 = graft.io.Fs.exists(spark, Sidecars.layerConf(effPath, 1))
+      val hasL2 = graft.io.Fs.exists(spark, Sidecars.layerConf(effPath, 2))
       val base = graphSignals(
         graft.search.KnnGraph.graphIndexHealth(spark, effPath), k, name)
       if (hasL1 && hasL2) {

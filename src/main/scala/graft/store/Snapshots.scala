@@ -215,15 +215,14 @@ object Snapshots {
       d.filter(col("status").isin("added", "changed")).select(col(idCol)),
       Seq(idCol), "left_semi")
     graft.search.Ann.appendToIvfIndex(fresh, cents, dstIdx, vecCol)
-    if (!graft.io.Fs.exists(spark, s"$srcIdx.stats")) None
+    if (!graft.io.Fs.exists(spark, Sidecars.stats(srcIdx))) None
     else {
-      // carry the BUILD-time baseline (not a fresh one — drift vs the
-      // original build is the question) and the model synced against
+      // the compact carried the BUILD-time baseline (not a fresh one —
+      // drift vs the original build is the question); the model is the
+      // one the sync appended against
       cents.zipWithIndex.map { case (c, i) => (i, c) }
         .toDF("__cluster", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dstIdx.model")
-      spark.read.parquet(s"$srcIdx.stats")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dstIdx.stats")
+        .coalesce(1).write.mode("overwrite").parquet(Sidecars.model(dstIdx))
       Some(graft.search.Ann.assignmentDrift(spark, dstIdx, idCol, vecCol))
     }
   }

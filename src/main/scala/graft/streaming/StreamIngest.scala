@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
 
 import graft.embed.Featurizer
+import graft.store.Sidecars
 import graft.text.Chunker
 
 /** Structured Streaming ingest — the incremental batch pipeline of the
@@ -64,10 +65,8 @@ object StreamIngest {
     * unprotected window shrinks from "every restart double-appends" to
     * "a crash between the append completing and the marker write" —
     * stated, not hidden; a sink needing true exactly-once puts the
-    * marker and the data in one transactional store. A fresh
-    * build/writeSignatureStore at the path CLEARS the markers (batch
-    * ids restart with a new stream — stale markers would silently
-    * swallow its first batches). */
+    * marker and the data in one transactional store. A fresh build at
+    * the path clears the markers ([[graft.store.Sidecars.reset]]). */
   private[graft] def oncePerBatch(spark: SparkSession, markerDir: String,
                                   batchId: Long)(body: => Unit): Unit =
     if (!graft.io.Fs.exists(spark, s"$markerDir/batch-$batchId")) {
@@ -90,7 +89,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else try graft.search.Lexical.appendToBm25Index(batch, textCol, idCol, path)
           catch {
@@ -121,7 +120,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else graft.search.Ann.appendToIvfIndex(batch, cents, path, vecCol)
         }
@@ -154,7 +153,7 @@ object StreamIngest {
       signals: => DataFrame): Unit =
     graft.store.Maintenance.plan(signals, rules)
       .withColumn("batch_id", lit(batchId))
-      .write.mode("append").parquet(s"$path.oplog")
+      .write.mode("append").parquet(Sidecars.oplog(path))
 
   def ivfPolicySink(vecs: DataFrame, cents: Seq[Seq[Double]], path: String,
                     indexName: String,
@@ -164,11 +163,11 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Ann.appendToIvfIndex(batch, cents, path, vecCol)
-            if (graft.io.Fs.exists(batch.sparkSession, s"$path.stats"))
+            if (graft.io.Fs.exists(batch.sparkSession, Sidecars.stats(path)))
               logFired(path, batchId, rules)(
                 graft.store.Maintenance.ivfSignals(
                   graft.search.Ann.assignmentDrift(batch.sparkSession,
@@ -196,11 +195,11 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
-            if (graft.io.Fs.exists(batch.sparkSession, s"$path/codes.qstats"))
+            if (graft.io.Fs.exists(batch.sparkSession, Sidecars.qstats(s"$path/codes")))
               logFired(path, batchId, rules)(
                 graft.store.Maintenance.pqSignals(
                   graft.search.Pq.reconstructionDrift(batch.sparkSession,
@@ -224,7 +223,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else {
             try graft.search.Lexical.appendToBm25Index(batch, textCol, idCol, path)
@@ -256,7 +255,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.KnnGraph.appendToGraphIndex(batch, path, buckets,
@@ -283,11 +282,11 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Sq.appendToIvfSqIndex(batch, cents, path, idCol, vecCol)
-            if (graft.io.Fs.exists(batch.sparkSession, s"$path.stats")) {
+            if (graft.io.Fs.exists(batch.sparkSession, Sidecars.stats(path))) {
               // drift + health are independent eager reads — overlap
               val (d, h) = graft.io.Par.join2(
                 graft.search.Sq.ivfSqDrift(batch.sparkSession, path, idCol, vecCol),
@@ -323,7 +322,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Ann.appendToLshIndex(batch, planes, path, vecCol)
@@ -353,7 +352,7 @@ object StreamIngest {
     // health it had just measured — same state, the append is the last
     // mutation before the drain)
     val hShared: Option[DataFrame] =
-      if (graft.io.Fs.exists(s, s"$path.stats")) {
+      if (graft.io.Fs.exists(s, Sidecars.stats(path))) {
         // drift + health are independent eager reads — overlap them
         val (d, h) = graft.io.Par.join2(
           graft.search.Sq.ivfSqDrift(s, path, idCol, vecCol),
@@ -404,7 +403,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           // an EMPTY cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way, and open
           // orders must not wait another drainEvery batches because
@@ -436,7 +435,7 @@ object StreamIngest {
                           health0: Option[DataFrame] = None)
                          (costs: => DataFrame): Unit =
     if ((batchId + 1) % drainEvery == 0 &&
-        graft.io.Fs.exists(spark, s"$path.oplog")) {
+        graft.io.Fs.exists(spark, Sidecars.oplog(path))) {
       val d = dispatcherFor(batchId)
       // hand the batch body's pinned health read to the dispatcher: a
       // first-rewrite price read on the still-watched generation can
@@ -518,11 +517,11 @@ object StreamIngest {
     val base = Seq(
       ("graph", indexName, "compact", h.getAs[Long]("n_edge_rows")))
     val relayers =
-      if (!graft.io.Fs.exists(s, s"$path.layer1_conf")) Nil
+      if (!graft.io.Fs.exists(s, Sidecars.layerConf(path, 1))) Nil
       else {
         val n = h.getAs[Long]("n_nodes")
         Seq(("graph", indexName, "relayer", n)) ++
-          (if (graft.io.Fs.exists(s, s"$path.layer2_conf"))
+          (if (graft.io.Fs.exists(s, Sidecars.layerConf(path, 2)))
             Seq(("graph", indexName, "relayer2", n)) else Nil)
       }
     (base ++ relayers)
@@ -561,7 +560,7 @@ object StreamIngest {
       vecCol: String): Unit = {
     val s = batch.sparkSession
     graft.search.Ann.appendToIvfIndex(batch, cents, path, vecCol)
-    if (graft.io.Fs.exists(s, s"$path.stats"))
+    if (graft.io.Fs.exists(s, Sidecars.stats(path)))
       logFired(path, batchId, rules)(
         graft.store.Maintenance.ivfSignals(
           graft.search.Ann.assignmentDrift(s, path, vecCol = vecCol),
@@ -586,7 +585,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           val s = batch.sparkSession
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
@@ -611,7 +610,7 @@ object StreamIngest {
       idCol: String, vecCol: String): Unit = {
     val s = batch.sparkSession
     graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
-    if (graft.io.Fs.exists(s, s"$path/codes.qstats"))
+    if (graft.io.Fs.exists(s, Sidecars.qstats(s"$path/codes")))
       logFired(path, batchId, rules)(
         graft.store.Maintenance.pqSignals(
           graft.search.Pq.reconstructionDrift(s, path, cb, idCol, vecCol),
@@ -635,7 +634,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
           if (batch.isEmpty)
@@ -693,7 +692,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           // empty cadence batches still run their window (round-18
           // advice); the oplog-exists guard covers the
           // first-batch-never-built case
@@ -747,7 +746,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
           if (batch.isEmpty)
@@ -809,7 +808,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
           if (batch.isEmpty)
@@ -864,7 +863,7 @@ object StreamIngest {
             indexName)))
     }
     if ((batchId + 1) % drainEvery == 0 &&
-        graft.io.Fs.exists(s, s"$path.oplog")) {
+        graft.io.Fs.exists(s, Sidecars.oplog(path))) {
       val (tokD, encD) = windowFor(batchId)
       val (disp, after) = graft.store.Maintenance.defaultDispatch(
         Seq(tokD, encD))
@@ -903,7 +902,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           tokenizerCascadePolicyDrainBatch(batch, batchId, textCol, idCol,
             path, indexName, encPath, encName, rules, drainEvery,
             budgetRows, windowFor)
@@ -948,7 +947,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           // empty cadence batches still run their window (round-18
           // advice)
           if (batch.isEmpty)
@@ -987,7 +986,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
         }
@@ -1016,7 +1015,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else graft.search.KnnGraph.appendToGraphIndex(batch, path, buckets,
             idCol, vecCol)
@@ -1035,7 +1034,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else graft.search.Sq.appendToIvfSqIndex(batch, cents, path, idCol, vecCol)
         }
@@ -1054,7 +1053,7 @@ object StreamIngest {
     items.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else if (!graft.io.Fs.exists(batch.sparkSession, s"$path/config"))
             graft.analysis.FreqSketch.writeSketch(batch, termCol, depth, width, path)
@@ -1081,7 +1080,7 @@ object StreamIngest {
     media.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$storePath/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(storePath), batchId) {
           if (!batch.isEmpty) {
             val hashes = graft.multimodal.Multimodal
               .decodeDHash(batch.sparkSession, batch).toDF()
@@ -1125,7 +1124,7 @@ object StreamIngest {
     results.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$path/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
           if (batch.isEmpty) ()
           else batch.write.mode("append").parquet(s"$path/log")
         }
@@ -1151,7 +1150,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, s"$sigPath/_applied_batches", batchId) {
+        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(sigPath), batchId) {
           if (!batch.isEmpty) {
             val kept = batch.join(
               graft.analysis.Dedup.dedupDelta(batch, idCol, textCol, sigPath, threshold)

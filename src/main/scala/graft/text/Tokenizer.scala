@@ -101,7 +101,7 @@ object Tokenizer {
         .write.mode("overwrite").parquet(s"$path.seen"),
       () => fertilityStats(docs, textCol, vocab, maxPieceLen, maxWordLen)
         .select(col("fertility"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$path.stats"),
+        .coalesce(1).write.mode("overwrite").parquet(graft.store.Sidecars.stats(path)),
       () => Seq((vocabSize, maxPieceLen, maxWordLen, seedSize, rounds))
         .toDF("vocab_size", "max_piece_len", "max_word_len", "seed_size",
           "rounds")
@@ -130,7 +130,7 @@ object Tokenizer {
     // three independent eager reads of tiny store sides — overlap
     val (conf, b6, vocab) = graft.io.Par.join3(
       spark.read.parquet(s"$path.conf").head(),
-      spark.read.parquet(s"$path.stats").head().getDouble(0),
+      spark.read.parquet(graft.store.Sidecars.stats(path)).head().getDouble(0),
       spark.read.parquet(path).localCheckpoint())
     fertilityStats(batch, textCol, vocab,
         conf.getAs[Int]("max_piece_len"), conf.getAs[Int]("max_word_len"))
@@ -162,7 +162,7 @@ object Tokenizer {
       () => fertilityStats(seen, "text", vocab,
           conf.getAs[Int]("max_piece_len"), conf.getAs[Int]("max_word_len"))
         .select(col("fertility"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dstPath.stats"),
+        .coalesce(1).write.mode("overwrite").parquet(graft.store.Sidecars.stats(dstPath)),
       () => spark.read.parquet(s"$srcPath.conf")
         .coalesce(1).write.mode("overwrite").parquet(s"$dstPath.conf"))
   }
