@@ -22,8 +22,9 @@ import graft.vector.VectorOps
   *     label has no relevant corpus row contribute 0 (never NULL — a
   *     NULL cell would NaN-mismatch the oracle hash compare).
   *
-  * Scale shape: one batch top-k ([[Search.similarityJoin]] — broadcast
-  * queries × corpus scan + per-qid window, the `simjoin_top3` path;
+  * Scale shape: one batch top-k ([[Search.similarityJoin]] — the
+  * serving snapshot for a small store, else broadcast queries × corpus
+  * scan + per-qid window, the `simjoin_top3` path;
   * swap in [[Search.similarityJoinBlocked]] when the query batch
   * outgrows a broadcast), then per-query aggregates over ≤ k rows each
   * and one label-keyed count join. Nothing here scans pairs beyond the

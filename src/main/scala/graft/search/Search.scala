@@ -1,8 +1,13 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, GenericInternalRow}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, SubqueryAlias}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.PlanBridge
+import org.apache.spark.sql.types._
 
 import graft.vector.VectorOps
 
@@ -26,10 +31,19 @@ import graft.vector.VectorOps
   *    k rows — strictly better than the reference's O(N log N) full
   *    sort, and embarrassingly parallel over corpus partitions. Both
   *    paths return the same rows, sims and schema.
-  *  - `similarityJoin` broadcasts the (small) query side across corpus
-  *    partitions; per-query top-k via a window on qid. For huge query
-  *    sides you'd flip to block-partitioned crossJoin; the query side in
-  *    all driver workloads is small, so broadcast is the right plan.
+  *  - `similarityJoin` over a bare scan of a small store (the same
+  *    bound) is answered from the same snapshot: the query side is read
+  *    on the driver, each query takes its top-k from the held blocks,
+  *    and the result is one single-partition frame, so the per-qid
+  *    aggregate of a batch RAG answer adds no exchange. A NULL or
+  *    repeated `qid`, a NULL `qvec` or element, or a column name on both
+  *    sides takes the Spark plan, whose window would merge or rename
+  *    them. That plan broadcasts the (small) query side across corpus
+  *    partitions and takes each query's top-k with a window on qid; it
+  *    stays the path for large stores, where holding the vectors on the
+  *    driver would not fit and the scan is real work to spread over
+  *    executors. For huge query sides, flip to
+  *    [[similarityJoinBlocked]].
   */
 object Search {
 
@@ -62,28 +76,50 @@ object Search {
     queryVector(query).getOrElse(Array.empty[Double]).toSeq
 
   /** The values of array column `name` of a frame built from driver
-    * data (`Seq(...).toDF(...)`: a local relation, optionally renamed),
-    * read straight from its rows — collecting it would plan a query for
-    * the same values. None for any other plan. */
+    * data ([[localSource]]), read straight from its rows — collecting it
+    * would plan a query for the same values. None for any other plan. */
   private def localColumn(df: DataFrame, name: String): Option[Seq[Seq[Any]]] = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-    import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, Project}
-    import org.apache.spark.sql.types.ArrayType
-    def read(rel: LocalRelation, source: Attribute): Option[Seq[Seq[Any]]] =
-      Some(rel.output.indexWhere(_.exprId == source.exprId)).filter(_ >= 0)
-        .collect { case i if source.dataType.isInstanceOf[ArrayType] =>
-          val et = source.dataType.asInstanceOf[ArrayType].elementType
-          rel.data.map(r => if (r.isNullAt(i)) null else r.getArray(i).toSeq[Any](et))
-        }
-    df.queryExecution.analyzed match {
-      case rel: LocalRelation => rel.output.find(_.name == name).flatMap(read(rel, _))
-      case Project(list, rel: LocalRelation) => list.collectFirst {
-        case a: Attribute if a.name == name => a
-        case Alias(a: Attribute, `name`) => a
-      }.flatMap(read(rel, _))
-      case _ => None
+    val plan = df.queryExecution.analyzed
+    for {
+      a <- plan.output.find(_.name == name)
+      et <- Some(a.dataType).collect { case ArrayType(et, _) => et }
+      (rel, ordinals) <- localSource(plan)
+      i <- ordinals.get(a.exprId)
+    } yield rel.data.map(r => if (r.isNullAt(i)) null else r.getArray(i).toSeq[Any](et))
+  }
+
+  /** The rows of a frame built from driver data ([[localSource]]), in
+    * the frame's column order. None for any other plan, or when a
+    * column is computed rather than selected. */
+  private def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
+    val plan = df.queryExecution.analyzed
+    localSource(plan).flatMap { case (rel, ordinals) =>
+      val cols = plan.output.flatMap(a => ordinals.get(a.exprId).map(i => (i, a.dataType)))
+      if (cols.size < plan.output.size) None
+      else Some(rel.data.map(r =>
+        new GenericInternalRow(cols.map { case (i, dt) => r.get(i, dt) }.toArray): InternalRow))
     }
   }
+
+  /** The local relation under a frame built from driver data
+    * (`Seq(...).toDF(...)`, then any chain of selections, renames and
+    * aliases), with the relation ordinal of each output attribute that
+    * is one of its columns. None when any other operator is in the
+    * way. */
+  private def localSource(plan: LogicalPlan): Option[(LocalRelation, Map[ExprId, Int])] =
+    plan match {
+      case rel: LocalRelation =>
+        Some((rel, rel.output.iterator.zipWithIndex.map { case (a, i) => a.exprId -> i }.toMap))
+      case Project(list, child) => localSource(child).map { case (rel, ordinals) =>
+        (rel, list.flatMap {
+          case a: Attribute => ordinals.get(a.exprId).map(a.exprId -> _)
+          case al @ Alias(a: Attribute, _) => ordinals.get(a.exprId).map(al.exprId -> _)
+          case _ => None
+        }.toMap)
+      }
+      case SubqueryAlias(_, child) => localSource(child)
+      case _ => None
+    }
 
   /** Top-k most similar corpus rows to a single query vector.
     * `query` must be a 1-row DataFrame with a vector column `qvec`
@@ -199,12 +235,13 @@ object Search {
     picked.toSeq
   }
 
-  /** BATCH MMR — [[mmrTopK]] over a query TABLE, fully DISTRIBUTED:
-    * ONE distributed batch shortlist ([[similarityJoin]] — per-qid
-    * windows, no per-query Spark job), then the inherently-sequential
-    * greedy runs EXECUTOR-SIDE per qid (`groupByKey(qid).flatMapGroups`
-    * over the same pure [[mmrGreedy]] kernel the single-query form
-    * uses) — the driver never sees a shortlist row or a vector.
+  /** BATCH MMR — [[mmrTopK]] over a query TABLE: ONE batch shortlist
+    * ([[similarityJoin]] — the serving snapshot for a small store,
+    * else per-qid windows; never a per-query Spark job), then the
+    * inherently-sequential greedy runs EXECUTOR-SIDE per qid
+    * (`groupByKey(qid).flatMapGroups` over the same pure [[mmrGreedy]]
+    * kernel the single-query form uses) — off the snapshot, the driver
+    * never sees a shortlist row or a vector.
     * Per-group state is one shortlist (the single-query contract);
     * across a 100 k-query batch the greedies parallelize over
     * executors instead of serializing through one driver thread.
@@ -234,11 +271,27 @@ object Search {
   }
 
   /** Batch similarity join: for every row of `queries` (id `qid`, vector
-    * `qvec`), the top-k most similar corpus rows. Broadcast nested-loop
-    * join + per-qid window top-k (`row_number <= k`, total order
-    * `sim DESC, id ASC`). */
+    * `qvec`), the top-k most similar corpus rows — the corpus columns,
+    * the query columns but `qvec`, `sim` (round-6 cosine) and `rank`
+    * (int, 1..k in the total order `sim DESC, id ASC`).
+    *
+    * A bare scan of a small store (the bound of [[knn]]) is answered
+    * from the serving snapshot ([[graft.store.ServingSnapshot]]): the
+    * query side is read on the driver (a local frame without a job,
+    * else the rows the broadcast would collect), and each query takes
+    * its top-k from the held blocks. The result is one single-partition
+    * frame, so a per-qid aggregate over it adds no exchange. Everything
+    * else takes the Spark plan, [[similarityJoinPlan]]; both return the
+    * same rows, sims, ranks and schema. */
   def similarityJoin(corpus: DataFrame, queries: DataFrame, k: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    snapshotJoin(corpus, queries, k, idCol, vecCol)
+      .getOrElse(similarityJoinPlan(corpus, queries, k, idCol, vecCol))
+
+  /** [[similarityJoin]]'s Spark plan: broadcast nested-loop join +
+    * per-qid window top-k (`row_number <= k`). */
+  private[search] def similarityJoinPlan(corpus: DataFrame, queries: DataFrame, k: Int,
+                                         idCol: String, vecCol: String): DataFrame = {
     val scored = corpus
       .crossJoin(broadcast(queries))
       .withColumn("sim", VectorOps.cosine6(col(vecCol), col("qvec")))
@@ -248,6 +301,67 @@ object Search {
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .drop("qvec")
+  }
+
+  /** [[similarityJoin]] from the serving snapshot. None wherever the
+    * Spark plan is not k independent per-query top-ks under the same
+    * column names, and for any store the snapshot refuses
+    * ([[graft.store.ServingSnapshot.serve]]):
+    *  - a non-integral, NULL or repeated `qid` (the window keys on it
+    *    and merges repeats);
+    *  - a NULL `qvec` or a NULL element in it;
+    *  - a column name on both sides, or a `sim` or `rank` column
+    *    (`withColumn` would replace it in place). */
+  private def snapshotJoin(corpus: DataFrame, queries: DataFrame, k: Int,
+                           idCol: String, vecCol: String): Option[DataFrame] = {
+    val qSchema = queries.schema
+    val names = (corpus.columns ++ queries.columns).map(_.toLowerCase(java.util.Locale.ROOT))
+    def at(name: String): Option[Int] = Some(qSchema.fieldNames.indexOf(name)).filter(_ >= 0)
+    for {
+      qidAt <- at("qid")
+      qidType = qSchema(qidAt).dataType
+      if graft.store.ServingSnapshot.isIntegral(qidType)
+      qvecAt <- at("qvec")
+      qvecType <- Some(qSchema(qvecAt).dataType).collect {
+        case a @ ArrayType(FloatType | DoubleType, _) => a
+      }
+      if names.distinct.length == names.length && !names.exists(Set("sim", "rank"))
+      served <- graft.store.ServingSnapshot.serve(corpus, idCol, vecCol)
+      rows = localRows(queries).getOrElse(collectRows(queries))
+      vectors <- queryVectors(rows, qidAt, qidType, qvecAt, qvecType.elementType)
+    } yield {
+      val rest = qSchema.indices.filter(_ != qvecAt)
+      val out = rows.zip(served.topK(vectors, k)).flatMap { case (qr, top) =>
+        val qValues = rest.map(i => qr.get(i, qSchema(i).dataType))
+        top.zipWithIndex.map { case ((values, sim), i) =>
+          new GenericInternalRow(values ++ qValues ++ Seq(sim, i + 1)): InternalRow
+        }
+      }
+      val sim = served.sim.copy(nullable =
+        served.sim.nullable || qSchema(qvecAt).nullable || qvecType.containsNull)
+      PlanBridge.singlePartitionFrame(corpus.sparkSession,
+        StructType(served.fields ++ rest.map(qSchema(_)) :+ sim :+
+          StructField("rank", IntegerType, nullable = false)), out)
+    }
+  }
+
+  /** A non-local query side, collected as the broadcast collects it. */
+  private def collectRows(df: DataFrame): Seq[InternalRow] = {
+    val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
+    df.collect().toSeq.map(r => toInternal(r).asInstanceOf[InternalRow])
+  }
+
+  /** Each query's vector widened to double, or None when a `qid` is
+    * NULL or repeated, or a vector is NULL or holds a NULL element. */
+  private def queryVectors(rows: Seq[InternalRow], qidAt: Int, qidType: DataType,
+                           qvecAt: Int, et: DataType): Option[Seq[Array[Double]]] = {
+    val qids = rows.map(r => if (r.isNullAt(qidAt)) null else r.get(qidAt, qidType))
+    val vectors = rows.map(r => if (r.isNullAt(qvecAt)) null else r.getArray(qvecAt))
+    val ok = !qids.contains(null) && qids.distinct.size == qids.size &&
+      vectors.forall(a => a != null && !(0 until a.numElements()).exists(a.isNullAt))
+    if (!ok) None
+    else Some(vectors.map(a =>
+      if (et == FloatType) a.toFloatArray().map(_.toDouble) else a.toDoubleArray()))
   }
 
   /** Block-partitioned similarity join — the scale path when the query

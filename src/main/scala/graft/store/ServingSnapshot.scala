@@ -39,11 +39,16 @@ import graft.vector.VectorOps
   *    a bounded serving cache, not a collect of the data path: a store
   *    past the bound takes the partitioned Spark plan.
   *  - Scores use the cosine kernel's own loop
-  *    ([[CosineSimilarity.packed]]) and [[VectorOps.round6]]; the order
+  *    ([[CosineSimilarity.packed]], or [[CosineSimilarity.packedEach]]
+  *    for many queries in one pass) and [[VectorOps.round6]]; the order
   *    is Spark's `sim DESC NULLS LAST, id ASC NULLS FIRST` with NaN
-  *    above every number. So the result equals the Spark plan's, row
-  *    for row, and comes back as a single-partition frame with the
-  *    Spark plan's schema: an aggregate over it is one job of one task.
+  *    above every number. A raw sim more than 1e-6 below the current
+  *    k-th skips the round-6 (a `BigDecimal` round trip) and the
+  *    candidate: rounding cannot lift it past the k-th. So the result
+  *    equals the Spark plan's, row for row, and comes back as a
+  *    single-partition frame with the Spark plan's schema: an aggregate
+  *    over it is one job of one task. `Search.knn`, the IVF probe and
+  *    the batch `Search.similarityJoin` all read it through [[serve]].
   */
 object ServingSnapshot {
 
@@ -82,16 +87,50 @@ object ServingSnapshot {
   private val entries = new java.util.LinkedHashMap[String, Entry](16, 0.75f, true)
 
   /** Exact top-`k` of `corpus` against `q` from the snapshot, or None
-    * when the snapshot does not apply (not a bare store scan, over the
-    * size bound, or column types it does not hold) and the caller must
-    * plan the Spark scan. `keep` selects blocks by the value of one
-    * partition column, `dead` drops ids (tombstones), `dropCols` leaves
-    * columns out of the result — the probe of a materialized IVF
-    * index. */
+    * when the snapshot does not apply ([[serve]]) and the caller must
+    * plan the Spark scan. */
   def topK(corpus: DataFrame, q: Array[Double], k: Int, idCol: String, vecCol: String,
            keep: Option[(String, Any => Boolean)] = None,
            dead: Long => Boolean = _ => false,
            dropCols: Set[String] = Set.empty): Option[DataFrame] =
+    serve(corpus, idCol, vecCol, keep, dead, dropCols).map { s =>
+      val rows = s.topK(Seq(q), k).head.map { case (values, sim) =>
+        new GenericInternalRow(values :+ sim): InternalRow
+      }
+      PlanBridge.singlePartitionFrame(corpus.sparkSession, StructType(s.fields :+ s.sim), rows)
+    }
+
+  /** A small store's held generation, ready to score against any number
+    * of query vectors: what [[topK]] and the batch similarity join
+    * (`Search.similarityJoin`) read. `fields` are the corpus columns a
+    * result row carries; `sim` is the similarity column against a
+    * non-NULL literal query (a nullable query side widens its
+    * nullability). */
+  final class Served private[ServingSnapshot] (
+      val fields: Seq[StructField], val sim: StructField,
+      chosen: IndexedSeq[(Block, InternalRow)],
+      getters: Seq[(Block, InternalRow, Int) => Any], dead: Long => Boolean) {
+
+    /** Each query's top-`k` rows, in Spark's order: each row's values
+      * of `fields`, and its sim (null for a NULL similarity). One pass
+      * over the held rows scores them all. */
+    def topK(qs: Seq[Array[Double]], k: Int): Seq[Seq[(Array[Any], Any)]] =
+      select(chosen.map(_._1), qs, k, dead).map(_.map { case (bi, ri, s) =>
+        val (b, pv) = chosen(bi)
+        (getters.iterator.map(_(b, pv, ri)).toArray, if (b.odd.contains(ri)) null else s)
+      })
+  }
+
+  /** The snapshot of `corpus`, brought up to its current generation, or
+    * None when the snapshot does not apply (not a bare store scan, over
+    * the size bound, or column types it does not hold). `keep` selects
+    * blocks by the value of one partition column, `dead` drops ids
+    * (tombstones), `dropCols` leaves columns out of the result — the
+    * probe of a materialized IVF index. */
+  def serve(corpus: DataFrame, idCol: String, vecCol: String,
+            keep: Option[(String, Any => Boolean)] = None,
+            dead: Long => Boolean = _ => false,
+            dropCols: Set[String] = Set.empty): Option[Served] =
     for {
       (rel, output) <- bareScan(corpus)
       spark = corpus.sparkSession
@@ -115,7 +154,6 @@ object ServingSnapshot {
       val blocks = refresh(spark, rel, output, dirs, idCol, vecCol)
       val parts = dirs.filter(d => partOk(d.values))
       val chosen = parts.flatMap(d => d.files.map(f => (blocks(key(f.fileStatus)), d.values)))
-      val top = select(chosen.map(_._1), q, k, dead)
       val outFields = output.filterNot(f => dropCols(f.name))
       val sim = StructField("sim", DoubleType, vecField.nullable || vecType.containsNull)
       val rest = restCols(output, vecCol, rel)
@@ -129,12 +167,7 @@ object ServingSnapshot {
             (b: Block, _: InternalRow, ri: Int) => b.rest(ri).get(ord, f.dataType)
         }
       }
-      val rows = top.map { case (bi, ri, s) =>
-        val (b, pv) = chosen(bi)
-        val simValue = if (b.odd.contains(ri)) null else s
-        new GenericInternalRow((getters.map(_(b, pv, ri)) :+ simValue).toArray[Any]): InternalRow
-      }
-      PlanBridge.singlePartitionFrame(spark, StructType(outFields :+ sim), rows)
+      new Served(outFields, sim, chosen.toIndexedSeq, getters, dead)
     }
 
   /** The ids of a bare scan (tombstones), as longs. None when the
@@ -155,7 +188,7 @@ object ServingSnapshot {
 
   // ------------------------------------------------------------- internals
 
-  private def isIntegral(dt: DataType): Boolean = dt match {
+  private[graft] def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
@@ -285,12 +318,13 @@ object ServingSnapshot {
         else UnsafeArrayData.fromPrimitiveArray(d)
     }
 
-  /** Top-k `(block, row, sim)` in Spark's order: sim DESC with NaN
-    * first and NULL (held as NaN + an odd row) last, then id ASC with
-    * NULL first. */
-  private def select(blocks: Seq[Block], q: Array[Double], k: Int,
-                     dead: Long => Boolean): Seq[(Int, Int, Double)] = {
-    if (k <= 0) return Nil
+  /** Each query's top-k `(block, row, sim)` in Spark's order: sim DESC
+    * with NaN first and NULL (held as NaN + an odd row) last, then id
+    * ASC with NULL first. One pass over the held rows serves every
+    * query ([[CosineSimilarity.packedEach]]). */
+  private def select(blocks: Seq[Block], qs: Seq[Array[Double]], k: Int,
+                     dead: Long => Boolean): Seq[Seq[(Int, Int, Double)]] = {
+    if (k <= 0 || qs.isEmpty) return qs.map(_ => Nil)
     // candidate: block, row, sim, simNull, id, idNull
     final case class C(bi: Int, ri: Int, sim: Double, simNull: Boolean, id: Long, idNull: Boolean)
     def before(a: C, b: C): Boolean =
@@ -301,8 +335,11 @@ object ServingSnapshot {
         else if (a.idNull != b.idNull) a.idNull
         else a.id < b.id
       }
-    val top = new Array[C](k)
-    var size = 0
+    val queries = qs.toArray
+    val nbs = queries.map(CosineSimilarity.sqNorm)
+    val raw = new Array[Double](queries.length)
+    val tops = Array.fill(queries.length)(new Array[C](k))
+    val sizes = new Array[Int](queries.length)
     var bi = 0
     while (bi < blocks.size) {
       val b = blocks(bi)
@@ -312,20 +349,32 @@ object ServingSnapshot {
         val idNull = b.idNull(ri)
         if (idNull || !dead(b.ids(ri))) {
           val simNull = hasOdd && b.odd.contains(ri)
-          val sim = if (simNull) Double.NaN
-            else VectorOps.round6(CosineSimilarity.packed(b.vec, b.off(ri), b.off(ri + 1) - b.off(ri), q))
-          val c = C(bi, ri, sim, simNull, b.ids(ri), idNull)
-          if (size < k || before(c, top(size - 1))) {
-            var j = math.min(size, k - 1)
-            while (j > 0 && before(c, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
-            top(j) = c
-            if (size < k) size += 1
+          if (simNull) java.util.Arrays.fill(raw, Double.NaN)
+          else CosineSimilarity.packedEach(b.vec, b.off(ri), b.off(ri + 1) - b.off(ri),
+            queries, nbs, raw)
+          var qi = 0
+          while (qi < queries.length) {
+            val top = tops(qi)
+            val size = sizes(qi)
+            // round6 moves a sim by at most 5e-7 and never reorders two, so
+            // a raw sim more than 1e-6 below the k-th rounded sim cannot
+            // rank; NaN sims, and NULL ones (held as NaN), are never skipped
+            if (size < k || !(raw(qi) < top(k - 1).sim - 1e-6)) {
+              val c = C(bi, ri, VectorOps.round6(raw(qi)), simNull, b.ids(ri), idNull)
+              if (size < k || before(c, top(size - 1))) {
+                var j = math.min(size, k - 1)
+                while (j > 0 && before(c, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
+                top(j) = c
+                if (size < k) sizes(qi) += 1
+              }
+            }
+            qi += 1
           }
         }
         ri += 1
       }
       bi += 1
     }
-    top.iterator.take(size).map(c => (c.bi, c.ri, c.sim)).toSeq
+    tops.indices.map(qi => tops(qi).iterator.take(sizes(qi)).map(c => (c.bi, c.ri, c.sim)).toSeq)
   }
 }

@@ -65,14 +65,17 @@ object StreamIngest {
     * unprotected window shrinks from "every restart double-appends" to
     * "a crash between the append completing and the marker write" —
     * stated, not hidden; a sink needing true exactly-once puts the
-    * marker and the data in one transactional store. A fresh build at
-    * the path clears the markers ([[graft.store.Sidecars.reset]]). */
-  private[graft] def oncePerBatch(spark: SparkSession, markerDir: String,
-                                  batchId: Long)(body: => Unit): Unit =
+    * marker and the data in one transactional store. The markers of
+    * the index at `path` live in [[Sidecars.appliedBatches]]; a fresh
+    * build at the path clears them ([[graft.store.Sidecars.reset]]). */
+  private[graft] def oncePerBatch(spark: SparkSession, path: String,
+                                  batchId: Long)(body: => Unit): Unit = {
+    val markerDir = Sidecars.appliedBatches(path)
     if (!graft.io.Fs.exists(spark, s"$markerDir/batch-$batchId")) {
       body
       graft.io.Fs.createMarker(spark, markerDir, s"batch-$batchId"): Unit
     }
+  }
 
   /** Streaming maintenance of a materialized BM25 index: each
     * micro-batch of documents appends its postings into the index's
@@ -89,7 +92,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else try graft.search.Lexical.appendToBm25Index(batch, textCol, idCol, path)
           catch {
@@ -120,7 +123,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else graft.search.Ann.appendToIvfIndex(batch, cents, path, vecCol)
         }
@@ -163,7 +166,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Ann.appendToIvfIndex(batch, cents, path, vecCol)
@@ -195,7 +198,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
@@ -223,7 +226,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else {
             try graft.search.Lexical.appendToBm25Index(batch, textCol, idCol, path)
@@ -255,7 +258,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.KnnGraph.appendToGraphIndex(batch, path, buckets,
@@ -282,7 +285,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Sq.appendToIvfSqIndex(batch, cents, path, idCol, vecCol)
@@ -322,7 +325,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else {
             graft.search.Ann.appendToLshIndex(batch, planes, path, vecCol)
@@ -403,7 +406,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           // an EMPTY cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way, and open
           // orders must not wait another drainEvery batches because
@@ -585,7 +588,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           val s = batch.sparkSession
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
@@ -634,7 +637,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
           if (batch.isEmpty)
@@ -692,7 +695,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           // empty cadence batches still run their window (round-18
           // advice); the oplog-exists guard covers the
           // first-batch-never-built case
@@ -746,7 +749,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
           if (batch.isEmpty)
@@ -808,7 +811,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           // an empty cadence batch still runs its window (round-18
           // advice): the batch id is consumed either way
           if (batch.isEmpty)
@@ -902,7 +905,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           tokenizerCascadePolicyDrainBatch(batch, batchId, textCol, idCol,
             path, indexName, encPath, encName, rules, drainEvery,
             budgetRows, windowFor)
@@ -947,7 +950,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           // empty cadence batches still run their window (round-18
           // advice)
           if (batch.isEmpty)
@@ -986,7 +989,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
         }
@@ -1015,7 +1018,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else graft.search.KnnGraph.appendToGraphIndex(batch, path, buckets,
             idCol, vecCol)
@@ -1034,7 +1037,7 @@ object StreamIngest {
     vecs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else graft.search.Sq.appendToIvfSqIndex(batch, cents, path, idCol, vecCol)
         }
@@ -1053,7 +1056,7 @@ object StreamIngest {
     items.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else if (!graft.io.Fs.exists(batch.sparkSession, s"$path/config"))
             graft.analysis.FreqSketch.writeSketch(batch, termCol, depth, width, path)
@@ -1080,7 +1083,7 @@ object StreamIngest {
     media.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(storePath), batchId) {
+        oncePerBatch(batch.sparkSession, storePath, batchId) {
           if (!batch.isEmpty) {
             val hashes = graft.multimodal.Multimodal
               .decodeDHash(batch.sparkSession, batch).toDF()
@@ -1124,7 +1127,7 @@ object StreamIngest {
     results.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(path), batchId) {
+        oncePerBatch(batch.sparkSession, path, batchId) {
           if (batch.isEmpty) ()
           else batch.write.mode("append").parquet(s"$path/log")
         }
@@ -1150,7 +1153,7 @@ object StreamIngest {
     docs.writeStream
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        oncePerBatch(batch.sparkSession, Sidecars.appliedBatches(sigPath), batchId) {
+        oncePerBatch(batch.sparkSession, sigPath, batchId) {
           if (!batch.isEmpty) {
             val kept = batch.join(
               graft.analysis.Dedup.dedupDelta(batch, idCol, textCol, sigPath, threshold)

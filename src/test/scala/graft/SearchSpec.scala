@@ -86,15 +86,38 @@ class SearchSpec extends SparkSpec {
     assert(ctx == "first\n---\nsecond\n---\nthird")
   }
 
+  /** `body` with the serving snapshot off: every search plans its
+    * Spark scan or join. */
+  private def withoutSnapshot[A](body: => A): A = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try body finally spark.conf.set(key, prev)
+  }
+
+  private def fromSnapshot(df: org.apache.spark.sql.DataFrame): Boolean =
+    df.queryExecution.analyzed.getClass.getSimpleName == "LogicalRDD"
+
   test("similarityJoin: per-query top-k with rank") {
     val corpus = Seq((1L, Seq(1f, 0f)), (2L, Seq(0f, 1f)), (3L, Seq(1f, 1f)))
       .toDF("vec_id", "embedding")
     val queries = Seq((10L, Seq(1f, 0f)), (20L, Seq(0f, 1f)))
       .toDF("qid", "qvec")
-    val out = Search.similarityJoin(corpus, queries, 2)
+    def ranked(c: org.apache.spark.sql.DataFrame) = Search.similarityJoin(c, queries, 2)
       .select("qid", "vec_id", "rank").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(out == Set((10L, 1L, 1), (10L, 3L, 2), (20L, 2L, 1), (20L, 3L, 2)))
+    val want = Set((10L, 1L, 1), (10L, 3L, 2), (20L, 2L, 1), (20L, 3L, 2))
+    assert(ranked(corpus) == want)
+    // a stored corpus: served from the snapshot, then by the Spark plan
+    val path = java.nio.file.Files.createTempDirectory("graft-simjoin").toString + "/store"
+    graft.store.CorpusStore.overwrite(corpus, path)
+    val stored = graft.store.CorpusStore.load(spark, path)
+    assert(fromSnapshot(Search.similarityJoin(stored, queries, 2)))
+    assert(ranked(stored) == want)
+    withoutSnapshot {
+      assert(!fromSnapshot(Search.similarityJoin(stored, queries, 2)))
+      assert(ranked(stored) == want)
+    }
   }
 
   test("blocked similarity join == broadcast similarity join on real data") {
@@ -104,9 +127,12 @@ class SearchSpec extends SparkSpec {
     def norm(df: org.apache.spark.sql.DataFrame) =
       df.select("qid", "vec_id", "sim", "rank").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3))).toSet
-    val broadcastForm = norm(Search.similarityJoin(emb, qs, 3))
+    assert(fromSnapshot(Search.similarityJoin(emb, qs, 3)))
+    val snapshotForm = norm(Search.similarityJoin(emb, qs, 3))
+    val broadcastForm = withoutSnapshot(norm(Search.similarityJoin(emb, qs, 3)))
     val blockedForm = norm(Search.similarityJoinBlocked(emb, qs, 3, blocks = 7))
     assert(broadcastForm == blockedForm)
+    assert(snapshotForm == blockedForm)
   }
 
   test("knnDot over a normalized corpus returns the same top-k ids as knn on raw vectors") {

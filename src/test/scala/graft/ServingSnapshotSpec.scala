@@ -1,6 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
@@ -34,18 +34,49 @@ class ServingSnapshotSpec extends SparkSpec {
     df.queryExecution.analyzed.getClass.getSimpleName == "LogicalRDD"
 
   /** Run `ask` on the snapshot and on the Spark plan; require both
-    * paths were taken and agree row for row, schema included. */
-  private def same(ask: => DataFrame): Seq[Row] = {
+    * paths were taken and agree row for row (in `order`), schema
+    * included. */
+  private def same(ask: => DataFrame, order: Seq[Row] => Seq[Row] = identity): Seq[Row] = {
     val snap = ask
     assert(fromSnapshot(snap), "the small store must be served from the snapshot")
-    val got = snap.collect().toSeq
+    val got = order(snap.collect().toSeq)
     val (want, wantSchema, sparkPlan) = withThreshold("-1") {
       val s = ask
-      (s.collect().toSeq, s.schema, s.queryExecution.analyzed.getClass.getSimpleName)
+      (order(s.collect().toSeq), s.schema, s.queryExecution.analyzed.getClass.getSimpleName)
     }
     assert(sparkPlan != "LogicalRDD", "threshold -1 must turn the snapshot off")
     assert(snap.schema == wantSchema, s"${snap.schema.treeString} vs ${wantSchema.treeString}")
-    assert(got == want, s"snapshot $got\nspark    $want")
+    assert(values(got) == values(want), s"snapshot $got\nspark    $want")
+    got
+  }
+
+  /** Row values with NaN made equal to itself (also inside vectors). */
+  private def values(rows: Seq[Row]): Seq[Any] = {
+    def v(x: Any): Any = x match {
+      case d: Double if d.isNaN => "NaN"
+      case f: Float if f.isNaN => "NaN"
+      case r: Row => r.toSeq.map(v)
+      case s: scala.collection.Seq[_] => s.map(v)
+      case other => other
+    }
+    rows.map(v)
+  }
+
+  /** A join's row order is not part of its answer. */
+  private def sorted(rows: Seq[Row]): Seq[Row] = rows.sortBy(_.toString)
+
+  /** [[same]] for the batch similarity join. */
+  private def sameJoin(join: => DataFrame): Seq[Row] = same(join, sorted)
+
+  /** The Spark plan answers `join` under the default threshold, and
+    * its answer is the one the snapshot-off session gives. */
+  private def fallsBack(join: => DataFrame): Seq[Row] = {
+    val df = join
+    assert(!fromSnapshot(df), "this input must take the Spark plan")
+    val got = sorted(df.collect().toSeq)
+    val want = withThreshold("-1")(sorted(join.collect().toSeq))
+    assert(df.schema == withThreshold("-1")(join.schema))
+    assert(values(got) == values(want), s"default $got\nspark   $want")
     got
   }
 
@@ -149,9 +180,16 @@ class ServingSnapshotSpec extends SparkSpec {
 
   /** Jobs and tasks started inside `body` under a job group of its own. */
   private def counted(body: => Unit): (Int, Int) = {
+    val (jobs, tasks, _) = listened(body)
+    (jobs, tasks)
+  }
+
+  /** Jobs, tasks and shuffle bytes (written + read) of `body`. */
+  private def listened(body: => Unit): (Int, Int, Long) = {
     val group = s"snap-${System.nanoTime()}"
     val jobs = new AtomicInteger
     val tasks = new AtomicInteger
+    val shuffled = new AtomicLong
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -159,14 +197,18 @@ class ServingSnapshotSpec extends SparkSpec {
           jobs.incrementAndGet(); e.stageIds.foreach(stages.add)
         }
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
-        if (stages.contains(e.stageId)) tasks.incrementAndGet()
+        if (stages.contains(e.stageId)) {
+          tasks.incrementAndGet()
+          Option(e.taskMetrics).foreach(m => shuffled.addAndGet(
+            m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead))
+        }
     }
     spark.sparkContext.addSparkListener(l)
     try {
       spark.sparkContext.setJobGroup(group, "serving snapshot spec")
       try body finally spark.sparkContext.clearJobGroup()
       Thread.sleep(500) // listener events arrive asynchronously
-      (jobs.get, tasks.get)
+      (jobs.get, tasks.get, shuffled.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -201,6 +243,148 @@ class ServingSnapshotSpec extends SparkSpec {
     assert(Fs.dataFiles(spark, path).forall(f => !f.getPath.getName.startsWith("_")))
   }
 
+  test("similarityJoin snapshot ≡ Spark plan: ties, zero vector, dim mismatch, k > rows, query columns") {
+    val path = tmp("join")
+    write(path, corpusRows)
+    val qs = Seq(
+      (1L, "ones", Seq(1.0, 1.0, 0.0, 0.0)),
+      (2L, "zero", Seq(0.0, 0.0, 0.0, 0.0)),
+      (3L, "short", Seq(1.0, 1.0)),
+      (4L, "mixed", Seq(0.3, -1.0, 2.0, 0.5))).toDF("qid", "question", "qvec")
+    val top = sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), qs, 5))
+    assert(top.size == 20)
+    assert(top.head.schema.fieldNames.toSeq ==
+      Seq("vec_id", "text", "embedding", "qid", "question", "sim", "rank"))
+    val ones = top.filter(_.getAs[Long]("qid") == 1L).sortBy(_.getAs[Int]("rank"))
+    assert(ones.map(_.getAs[Int]("rank")) == (1 to 5))
+    val tied = ones.takeWhile(_.getAs[Double]("sim") == 1.0).map(_.getAs[Long]("vec_id"))
+    assert(tied.size > 1 && tied == tied.sorted, s"equal sims break ties by the lower id: $tied")
+    // k past the store: every row for every query, from nested
+    // selections of a local frame
+    val all = sameJoin(Search.similarityJoin(CorpusStore.load(spark, path),
+      qs.select("qvec", "qid").select("qid", "qvec"), 100))
+    assert(all.size == 4 * corpusRows.size)
+    val sims = all.map(r => (r.getAs[Long]("qid"), r.getAs[Long]("vec_id")) -> r.getAs[Double]("sim")).toMap
+    assert(sims((2L, 1L)) == 0.0 && sims((1L, 102L)) == 0.0, "a zero vector scores 0.0")
+    assert(sims((3L, 1L)) == -1.0 && sims((3L, 103L)) == 1.0, "a dimension mismatch scores -1.0")
+    // a computed query side (an int qid cast) is collected
+    sameJoin(Search.similarityJoin(CorpusStore.load(spark, path),
+      qs.select(col("qid").cast("int").as("qid"), col("qvec"), col("question")), 3))
+  }
+
+  test("similarityJoin snapshot ≡ Spark plan: array<float>, NULL vectors, a partitioned store") {
+    val path = tmp("joinfloat")
+    corpusRows.map { case (id, t, v) => (id, t, if (id == 7L) null else v.map(_.toFloat)) }
+      .toDF("vec_id", "text", "embedding").write.parquet(path)
+    val qs = Seq((1L, Seq(0.1f, 0.7f, -0.2f, 0.4f)), (2L, Seq(1f, 0f, 0f, 0f))).toDF("qid", "qvec")
+    val all = sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), qs, 100))
+    assert(all.filter(_.getAs[Long]("vec_id") == 7L).forall(r =>
+      r.isNullAt(r.fieldIndex("sim")) && r.getAs[Int]("rank") == corpusRows.size),
+      "a NULL similarity ranks last")
+    // a stored query side (float vectors), collected on the driver
+    val stored = CorpusStore.load(spark, path).filter(col("vec_id") < 5)
+      .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
+    sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), stored, 4))
+    val parted = tmp("joinparted")
+    CorpusStore.overwrite(corpusRows.toDF("vec_id", "text", "embedding")
+      .withColumn("part", (col("vec_id") % 3).cast("int")), parted, Seq("part"))
+    sameJoin(Search.similarityJoin(CorpusStore.load(spark, parted), qs, 6))
+  }
+
+  test("similarityJoin snapshot: an appended generation, an empty store, an empty query side") {
+    val path = tmp("joingen")
+    write(path, corpusRows.take(30))
+    val qs = Seq((5L, Seq(5.0, -3.0, 1.0, 0.25)), (6L, Seq(0.0, 1.0, 0.0, 0.0))).toDF("qid", "qvec")
+    sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), qs, 5))
+    write(path, Seq((500L, "planted", Seq(5.0, -3.0, 1.0, 0.25))), append = true)
+    val next = sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), qs, 5))
+    assert(next.exists(r => r.getAs[Long]("qid") == 5L && r.getAs[Int]("rank") == 1 &&
+      r.getAs[Long]("vec_id") == 500L && r.getAs[Double]("sim") == 1.0))
+    val none = Seq.empty[(Long, Seq[Double])].toDF("qid", "qvec")
+    assert(sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), none, 5)).isEmpty)
+    val empty = tmp("joinempty")
+    write(empty, Nil)
+    assert(sameJoin(Search.similarityJoin(CorpusStore.load(spark, empty), qs, 5)).isEmpty)
+  }
+
+  test("similarityJoin falls back to the Spark plan where the snapshot would answer differently") {
+    val path = tmp("joinfallback")
+    write(path, corpusRows)
+    def load: DataFrame = CorpusStore.load(spark, path)
+    val v = Seq(1.0, 0.5, -0.5, 0.0)
+    val qs = Seq((1L, v)).toDF("qid", "qvec")
+    // a repeated qid: the window ranks both queries' rows as one
+    assert(fallsBack(Search.similarityJoin(load,
+      Seq((1L, v), (1L, v.reverse)).toDF("qid", "qvec"), 3)).size == 3)
+    fallsBack(Search.similarityJoin(load,
+      spark.sql("SELECT CAST(NULL AS BIGINT) AS qid, array(1D, 0D, 0D, 0D) AS qvec"), 3))
+    fallsBack(Search.similarityJoin(load,
+      spark.sql("SELECT 1L AS qid, CAST(NULL AS ARRAY<DOUBLE>) AS qvec"), 3))
+    fallsBack(Search.similarityJoin(load,
+      spark.sql("SELECT 1L AS qid, array(1D, CAST(NULL AS DOUBLE), 0D, 0D) AS qvec"), 3))
+    // a column on both sides, and a sim column withColumn replaces
+    fallsBack(Search.similarityJoin(load, Seq((1L, "q", v)).toDF("qid", "text", "qvec"), 3))
+    fallsBack(Search.similarityJoin(load, Seq((1L, 0.5, v)).toDF("qid", "sim", "qvec"), 3))
+    // stores and columns the snapshot refuses
+    fallsBack(Search.similarityJoin(load.filter(col("vec_id") > 10), qs, 3))
+    fallsBack(Search.similarityJoin(load, qs, 3, idCol = "text"))
+    withThreshold("1")(fallsBack(Search.similarityJoin(load, qs, 3)))
+  }
+
+  test("a batch answer over a small store runs one job of one task with no shuffle") {
+    val path = tmp("batchjobs")
+    write(path, corpusRows)
+    val qs = Seq((0L, "why?", Seq(1.0, 2.0, 3.0, 4.0)), (1L, "how?", Seq(0.0, 1.0, 0.0, 1.0)))
+      .toDF("qid", "question", "qvec")
+    def answer(): Array[Row] = Search.contextAggBatch(
+        Search.similarityJoin(CorpusStore.load(spark, path), qs.select("qid", "qvec"), 5),
+        col("vec_id"), col("text"), col("sim"))
+      .join(qs.select("qid", "question"), "qid")
+      .withColumn("prompt", Search.prompt(col("context"), col("question")))
+      .collect()
+    def contexts(): Array[Row] = Search.contextAggBatch(
+        Search.similarityJoin(CorpusStore.load(spark, path), qs.select("qid", "qvec"), 5),
+        col("vec_id"), col("text"), col("sim"))
+      .collect()
+    assert(answer().length == 2) // the first batch of the generation loads its files
+    assert(listened(contexts(): Unit) == ((1, 1, 0L)),
+      "similarity join → contextAggBatch → collect: one job, one task, no shuffle")
+    // the join back onto the question table adds only the broadcast of
+    // that local table, a job of its own; the answer's job stays one task
+    val (jobs, tasks, shuffled) = listened(answer(): Unit)
+    assert(jobs == 2 && shuffled == 0L, s"$jobs jobs, $shuffled shuffle bytes")
+    assert(tasks - 1 == listened(qs.select("qid", "question").rdd.count(): Unit)._2,
+      "the tasks past the answer's one are the question table's")
+    val nested = Seq((7L, Seq(1.0, 2.0))).toDF("id", "qvec").select("qvec", "id").select("qvec")
+    assert(counted(Search.queryVector(nested): Unit) == ((0, 0)),
+      "a selection over a local frame reads its vector without a job")
+  }
+
+  test("round-6 pre-filter ≡ Spark plan: sims within 1e-6 of the k-th, HALF_UP boundaries, NaN, NULL") {
+    // against (1, 0), the raw cosine of (s, sqrt(1 - s²)) is s up to an ulp
+    def at(s: Double): Seq[Double] = Seq(s, math.sqrt(1 - s * s))
+    val offsets = Seq(-2e-6, -1.1e-6, -1e-6, -9e-7, -6e-7, -5e-7, -4e-7, -1e-7, 0.0,
+      1e-7, 4e-7, 5e-7, 6e-7, 9e-7, 1e-6, 1.1e-6, 2e-6)
+    val band = offsets.zipWithIndex.flatMap { case (d, i) =>
+      Seq((10L + 2 * i, s"b$i", at(0.5 + d)), (11L + 2 * i, s"b$i'", at(0.5 + d)))
+    }
+    val edges = Seq((1L, "half-up below", at(0.4999995)), (2L, "half-up above", at(0.5000005)),
+      (3L, "half-up", at(0.1234565)), (4L, "NaN", Seq(Double.NaN, 1.0)),
+      (5L, "NULL", null), (6L, "far", at(0.1)), (7L, "far", at(0.2)), (8L, "near top", at(0.9)))
+    val rows = new scala.util.Random(5).shuffle(band ++ edges)
+    val path = tmp("band")
+    rows.toDF("vec_id", "text", "embedding").repartition(2).write.parquet(path)
+    val n = rows.size
+    (1 to n + 1).foreach { k =>
+      val top = same(Search.knn(CorpusStore.load(spark, path), q(Seq(1.0, 0.0)), k))
+      assert(top.size == math.min(k, n))
+      assert(top.head.getAs[Long]("vec_id") == 4L && top.head.getAs[Double]("sim").isNaN,
+        "a NaN sim ranks first")
+    }
+    val qs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0)), (3L, Seq(2.0, 0.0))).toDF("qid", "qvec")
+    Seq(3, 12, 25).foreach(k => sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), qs, k)))
+  }
+
   test("round6 keeps NaN and infinities; the packed kernel keeps the cosine edges") {
     assert(VectorOps.round6(Double.NaN).isNaN)
     assert(VectorOps.round6(Double.PositiveInfinity) == Double.PositiveInfinity)
@@ -209,5 +393,25 @@ class ServingSnapshotSpec extends SparkSpec {
     assert(f.packed(Array(9.0, 1.0, 0.0), 1, 2, Array(3.0, 0.0)) == 1.0)
     assert(f.packed(Array(0.0, 0.0), 0, 2, Array(1.0, 1.0)) == 0.0)
     assert(f.packed(Array(1.0), 0, 1, Array(1.0, 1.0)) == -1.0)
+  }
+
+  test("packedEach ≡ packed bit for bit: groups of four, short and zero queries, NaN") {
+    val f = graft.functions.CosineSimilarity
+    val r = new scala.util.Random(17)
+    val rows = Array.fill(40 * 9)(if (r.nextInt(4) == 0) 0.0 else r.nextGaussian() * 3)
+    rows(9 * 7 + 2) = Double.NaN
+    java.util.Arrays.fill(rows, 9 * 3, 9 * 4, 0.0)
+    val qs = Array.tabulate(11)(j =>
+      if (j == 5) Array.fill(8)(1.0) else if (j == 2) Array.fill(9)(0.0)
+      else Array.fill(9)(r.nextGaussian()))
+    val out = new Array[Double](qs.length)
+    (0 until 40).foreach { i =>
+      f.packedEach(rows, 9 * i, 9, qs, qs.map(f.sqNorm), out)
+      qs.indices.foreach { j =>
+        val want = f.packed(rows, 9 * i, 9, qs(j))
+        assert(java.lang.Double.doubleToRawLongBits(out(j)) ==
+          java.lang.Double.doubleToRawLongBits(want), s"row $i query $j: ${out(j)} vs $want")
+      }
+    }
   }
 }

@@ -999,12 +999,14 @@ class StoreStreamSpec extends SparkSpec {
   }
 
   test("foreachBatch replay guard: a re-delivered batch id is a no-op") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-once").toString + "/markers"
+    val idx = java.nio.file.Files.createTempDirectory("graft-once").toString + "/index"
     var applied = 0
-    graft.streaming.StreamIngest.oncePerBatch(spark, dir, 7L) { applied += 1 }
-    graft.streaming.StreamIngest.oncePerBatch(spark, dir, 7L) { applied += 1 } // restart replay
-    graft.streaming.StreamIngest.oncePerBatch(spark, dir, 8L) { applied += 1 }
+    graft.streaming.StreamIngest.oncePerBatch(spark, idx, 7L) { applied += 1 }
+    graft.streaming.StreamIngest.oncePerBatch(spark, idx, 7L) { applied += 1 } // restart replay
+    graft.streaming.StreamIngest.oncePerBatch(spark, idx, 8L) { applied += 1 }
     assert(applied == 2, s"batch 7 must apply once, batch 8 once: $applied")
+    assert(graft.io.Fs.exists(spark, s"${graft.store.Sidecars.appliedBatches(idx)}/batch-8"),
+      "markers live in the index's applied-batches sidecar")
   }
 
   test("fresh build clears stale batch markers: a NEW stream's batch 0 is not swallowed") {
@@ -1013,11 +1015,11 @@ class StoreStreamSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val idx = java.nio.file.Files.createTempDirectory("graft-stale").toString + "/index"
     // stream 1 leaves markers batch-0..n at the path
-    graft.streaming.StreamIngest.oncePerBatch(spark, s"$idx/_applied_batches", 0L) {}
+    graft.streaming.StreamIngest.oncePerBatch(spark, idx, 0L) {}
     // operator rebuild at the same path (fresh index, fresh stream next)
     graft.search.Lexical.buildBm25Index(docs.limit(10), "text", "doc_id", idx)
     var applied = 0
-    graft.streaming.StreamIngest.oncePerBatch(spark, s"$idx/_applied_batches", 0L) {
+    graft.streaming.StreamIngest.oncePerBatch(spark, idx, 0L) {
       applied += 1
     }
     assert(applied == 1, "stale marker must not swallow the new stream's batch 0")
