@@ -151,48 +151,6 @@ object CosineSimilarity {
       else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
     }
 
-  /** `Σ b_i²` in index order: the `nb` that [[packed]] sums. */
-  def sqNorm(b: Array[Double]): Double = {
-    var nb = 0.0
-    var i = 0
-    while (i < b.length) { nb += b(i) * b(i); i += 1 }
-    nb
-  }
-
-  /** [[packed]] of one row against many queries: `out(j)` is
-    * `packed(a, off, n, qs(j))` bit for bit, with `nbs(j)` =
-    * `sqNorm(qs(j))`. Four queries of the row's length share each read
-    * of the row; each keeps its own sum in the same index order (no
-    * reassociation), so the four dependent add chains run side by side
-    * instead of one after another. */
-  def packedEach(a: Array[Double], off: Int, n: Int, qs: Array[Array[Double]],
-                 nbs: Array[Double], out: Array[Double]): Unit = {
-    def cos(dot: Double, na: Double, nb: Double): Double =
-      if (na == 0.0 || nb == 0.0) 0.0
-      else dot / (java.lang.Math.sqrt(na) * java.lang.Math.sqrt(nb))
-    var j = 0
-    while (j < qs.length) {
-      if (j + 4 <= qs.length && qs(j).length == n && qs(j + 1).length == n &&
-          qs(j + 2).length == n && qs(j + 3).length == n) {
-        val b0 = qs(j); val b1 = qs(j + 1); val b2 = qs(j + 2); val b3 = qs(j + 3)
-        var d0 = 0.0; var d1 = 0.0; var d2 = 0.0; var d3 = 0.0; var na = 0.0
-        var i = 0
-        while (i < n) {
-          val x = a(off + i)
-          d0 += x * b0(i); d1 += x * b1(i); d2 += x * b2(i); d3 += x * b3(i)
-          na += x * x
-          i += 1
-        }
-        out(j) = cos(d0, na, nbs(j)); out(j + 1) = cos(d1, na, nbs(j + 1))
-        out(j + 2) = cos(d2, na, nbs(j + 2)); out(j + 3) = cos(d3, na, nbs(j + 3))
-        j += 4
-      } else {
-        out(j) = packed(a, off, n, qs(j))
-        j += 1
-      }
-    }
-  }
-
   /** Column builder: `cos_sim(a, b)`. */
   def apply(a: Column, b: Column): Column = {
     val eu = org.apache.spark.sql.graftbridge.ColumnBridge

@@ -1,13 +1,17 @@
 package graft.search
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, ExprId, GenericInternalRow}
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.PlanBridge
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.vector.VectorOps
 
@@ -38,7 +42,9 @@ import graft.vector.VectorOps
   *    aggregate of a batch RAG answer adds no exchange. A NULL or
   *    repeated `qid`, a NULL `qvec` or element, or a column name on both
   *    sides takes the Spark plan, whose window would merge or rename
-  *    them. That plan broadcasts the (small) query side across corpus
+  *    them; so does a query side or an estimated result past the same
+  *    bound, which the driver would hold and score on one thread. That
+  *    plan broadcasts the (small) query side across corpus
   *    partitions and takes each query's top-k with a window on qid; it
   *    stays the path for large stores, where holding the vectors on the
   *    driver would not fit and the scan is real work to spread over
@@ -236,15 +242,19 @@ object Search {
   }
 
   /** BATCH MMR — [[mmrTopK]] over a query TABLE: ONE batch shortlist
-    * ([[similarityJoin]] — the serving snapshot for a small store,
-    * else per-qid windows; never a per-query Spark job), then the
+    * ([[similarityJoin]]; never a per-query Spark job), then the
     * inherently-sequential greedy runs EXECUTOR-SIDE per qid
     * (`groupByKey(qid).flatMapGroups` over the same pure [[mmrGreedy]]
-    * kernel the single-query form uses) — off the snapshot, the driver
-    * never sees a shortlist row or a vector.
-    * Per-group state is one shortlist (the single-query contract);
-    * across a 100 k-query batch the greedies parallelize over
-    * executors instead of serializing through one driver thread.
+    * kernel the single-query form uses).
+    * Per-group state is one shortlist (the single-query contract).
+    * On the serving snapshot the shortlists are one single-partition
+    * frame, so every greedy runs in one task with no exchange; the
+    * snapshot only answers batches whose whole shortlist fits
+    * `spark.sql.autoBroadcastJoinThreshold`, so that task is bounded.
+    * A larger batch (a 100 k-query table) or store takes the per-qid
+    * window plan: the driver never sees a shortlist row or a vector,
+    * and the greedies parallelize over executors instead of
+    * serializing through one task.
     * Batch restricted to one query ≡ [[mmrTopK]] (spec-pinned, both
     * against the driver-fold). Returns
     * `(qid, id, mmr_rank, relevance, mmr_score)`, k rows per qid. */
@@ -260,7 +270,7 @@ object Search {
       .as[(Long, Long, Double, Seq[Double])]
       .groupByKey(_._1)
       .flatMapGroups { (qid, it) =>
-        // restore the per-qid knn total order after the group shuffle
+        // restore the per-qid knn total order: grouping does not keep it
         val ordered = it.toSeq.sortBy(t => (-t._3, t._2))
           .map(t => (t._2, t._3, t._4))
         mmrGreedy(ordered, k, lambda).map { case (id, rank, rel, score) =>
@@ -280,13 +290,17 @@ object Search {
     * query side is read on the driver (a local frame without a job,
     * else the rows the broadcast would collect), and each query takes
     * its top-k from the held blocks. The result is one single-partition
-    * frame, so a per-qid aggregate over it adds no exchange. Everything
-    * else takes the Spark plan, [[similarityJoinPlan]]; both return the
-    * same rows, sims, ranks and schema. */
+    * frame, so a per-qid aggregate over it adds no exchange. A query
+    * side or an estimated result past the same bound, and the inputs
+    * [[snapshotJoin]] lists, take the Spark plan,
+    * [[similarityJoinPlan]]; both return the same rows, sims, ranks and
+    * schema. */
   def similarityJoin(corpus: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    snapshotJoin(corpus, queries, k, idCol, vecCol)
-      .getOrElse(similarityJoinPlan(corpus, queries, k, idCol, vecCol))
+    snapshotJoin(corpus, queries, k, idCol, vecCol) match {
+      case Right(answer) => answer
+      case Left(planned) => similarityJoinPlan(corpus, planned, k, idCol, vecCol)
+    }
 
   /** [[similarityJoin]]'s Spark plan: broadcast nested-loop join +
     * per-qid window top-k (`row_number <= k`). */
@@ -303,59 +317,126 @@ object Search {
       .drop("qvec")
   }
 
-  /** [[similarityJoin]] from the serving snapshot. None wherever the
-    * Spark plan is not k independent per-query top-ks under the same
-    * column names, and for any store the snapshot refuses
-    * ([[graft.store.ServingSnapshot.serve]]):
-    *  - a non-integral, NULL or repeated `qid` (the window keys on it
-    *    and merges repeats);
+  /** [[similarityJoin]] from the serving snapshot: Right(answer), or
+    * Left(the query side the Spark plan should join) wherever the plan
+    * is not k independent per-query top-ks under the same column names,
+    * for any store the snapshot refuses
+    * ([[graft.store.ServingSnapshot.serve]]), and past the bound:
+    *  - a NULL or repeated `qid` (the window keys on it and merges
+    *    repeats; -0.0 repeats 0.0 and NaN repeats NaN there), or a `qid`
+    *    type whose grouping is not plain value equality ([[keyed]]);
     *  - a NULL `qvec` or a NULL element in it;
     *  - a column name on both sides, or a `sim` or `rank` column
-    *    (`withColumn` would replace it in place). */
+    *    (`withColumn` would replace it in place);
+    *  - a query side, or an estimated result (queries × min(k, held
+    *    rows) × row bytes), larger than
+    *    `spark.sql.autoBroadcastJoinThreshold`: the result is held on
+    *    the driver and scored on one thread, so it gets the store's
+    *    bound.
+    * The input is checked before the snapshot lists a file. A query side
+    * that was collected and then refused goes to the plan as the
+    * collected rows, so it is not read twice. */
   private def snapshotJoin(corpus: DataFrame, queries: DataFrame, k: Int,
-                           idCol: String, vecCol: String): Option[DataFrame] = {
+                           idCol: String, vecCol: String): Either[DataFrame, DataFrame] = {
     val qSchema = queries.schema
     val names = (corpus.columns ++ queries.columns).map(_.toLowerCase(java.util.Locale.ROOT))
     def at(name: String): Option[Int] = Some(qSchema.fieldNames.indexOf(name)).filter(_ >= 0)
-    for {
+    val shape = for {
       qidAt <- at("qid")
-      qidType = qSchema(qidAt).dataType
-      if graft.store.ServingSnapshot.isIntegral(qidType)
+      if keyed(qSchema(qidAt).dataType)
       qvecAt <- at("qvec")
       qvecType <- Some(qSchema(qvecAt).dataType).collect {
         case a @ ArrayType(FloatType | DoubleType, _) => a
       }
       if names.distinct.length == names.length && !names.exists(Set("sim", "rank"))
       served <- graft.store.ServingSnapshot.serve(corpus, idCol, vecCol)
-      rows = localRows(queries).getOrElse(collectRows(queries))
-      vectors <- queryVectors(rows, qidAt, qidType, qvecAt, qvecType.elementType)
-    } yield {
-      val rest = qSchema.indices.filter(_ != qvecAt)
-      val out = rows.zip(served.topK(vectors, k)).flatMap { case (qr, top) =>
-        val qValues = rest.map(i => qr.get(i, qSchema(i).dataType))
-        top.zipWithIndex.map { case ((values, sim), i) =>
-          new GenericInternalRow(values ++ qValues ++ Seq(sim, i + 1)): InternalRow
+    } yield (qidAt, qvecAt, qvecType, served)
+    shape match {
+      case None => Left(queries)
+      case Some((qidAt, qvecAt, qvecType, served)) =>
+        val (rows, collected) = localRows(queries) match {
+          case Some(rows) => (rows, None)
+          case None => val c = queries.collect().toSeq; (toInternal(c, qSchema), Some(c))
         }
-      }
-      val sim = served.sim.copy(nullable =
-        served.sim.nullable || qSchema(qvecAt).nullable || qvecType.containsNull)
-      PlanBridge.singlePartitionFrame(corpus.sparkSession,
-        StructType(served.fields ++ rest.map(qSchema(_)) :+ sim :+
-          StructField("rank", IntegerType, nullable = false)), out)
+        def refused = Left(collected.fold(queries)(c =>
+          queries.sparkSession.createDataFrame(c.asJava, qSchema)))
+        val bound = PlanBridge.autoBroadcastJoinThreshold(queries.sparkSession)
+        val rest = qSchema.indices.filter(_ != qvecAt)
+        val restBytes = rows.iterator.map(r => rest.iterator.map(i =>
+          bytesOf(r.get(i, qSchema(i).dataType), qSchema(i).dataType)).sum).sum
+        val qvecBytes = rows.iterator.map(r =>
+          bytesOf(r.get(qvecAt, qvecType), qvecType)).sum
+        queryVectors(rows, qidAt, qSchema(qidAt).dataType, qvecAt, qvecType.elementType) match {
+          case None => refused
+          case Some(_) if restBytes + qvecBytes > bound => refused
+          case Some(vectors) =>
+            val perQuery = math.min(k.max(0).toLong, served.rows)
+            val resultBytes = perQuery * (rows.size * (served.rowBytes + 12L) + restBytes)
+            if (resultBytes > bound) refused
+            else Right(snapshotAnswer(corpus, served, rows, vectors, k, qSchema, qvecAt, qvecType))
+        }
     }
   }
 
-  /** A non-local query side, collected as the broadcast collects it. */
-  private def collectRows(df: DataFrame): Seq[InternalRow] = {
-    val toInternal = CatalystTypeConverters.createToCatalystConverter(df.schema)
-    df.collect().toSeq.map(r => toInternal(r).asInstanceOf[InternalRow])
+  /** The snapshot join's frame: each query row's top-k, with the Spark
+    * plan's schema. */
+  private def snapshotAnswer(corpus: DataFrame, served: graft.store.ServingSnapshot.Served,
+                             rows: Seq[InternalRow], vectors: Seq[Array[Double]], k: Int,
+                             qSchema: StructType, qvecAt: Int,
+                             qvecType: ArrayType): DataFrame = {
+    val rest = qSchema.indices.filter(_ != qvecAt)
+    val out = rows.zip(served.topK(vectors, k)).flatMap { case (qr, top) =>
+      val qValues = rest.map(i => qr.get(i, qSchema(i).dataType))
+      top.zipWithIndex.map { case ((values, sim), i) =>
+        new GenericInternalRow(values ++ qValues ++ Seq(sim, i + 1)): InternalRow
+      }
+    }
+    val sim = served.sim.copy(nullable =
+      served.sim.nullable || qSchema(qvecAt).nullable || qvecType.containsNull)
+    PlanBridge.singlePartitionFrame(corpus.sparkSession,
+      StructType(served.fields ++ rest.map(qSchema(_)) :+ sim :+
+        StructField("rank", IntegerType, nullable = false)), out)
+  }
+
+  /** A `qid` type whose values the window groups exactly as [[groupKey]]
+    * compares them: atomic, with strings under the default (binary)
+    * collation. Nested types and other collations take the Spark plan. */
+  private def keyed(dt: DataType): Boolean = dt match {
+    case _: NumericType | BooleanType | BinaryType | DateType | TimestampType |
+         TimestampNTZType => true
+    case st: StringType => st == StringType
+    case _ => false
+  }
+
+  /** A `qid` value as the window groups it: -0.0 with 0.0, every NaN
+    * with every other, byte arrays by content. */
+  private def groupKey(v: Any): Any = v match {
+    case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
+    case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case other => other
+  }
+
+  /** Estimated bytes of one value of a driver-held row. */
+  private def bytesOf(v: Any, dt: DataType): Long = (v, dt) match {
+    case (null, _) => 0L
+    case (a: ArrayData, ArrayType(et, _)) => 8L + a.numElements().toLong * et.defaultSize
+    case (s: UTF8String, _) => s.numBytes().toLong
+    case (b: Array[Byte], _) => b.length.toLong
+    case _ => dt.defaultSize.toLong
+  }
+
+  /** Collected rows in Catalyst's internal form. */
+  private def toInternal(rows: Seq[Row], schema: StructType): Seq[InternalRow] = {
+    val convert = CatalystTypeConverters.createToCatalystConverter(schema)
+    rows.map(r => convert(r).asInstanceOf[InternalRow])
   }
 
   /** Each query's vector widened to double, or None when a `qid` is
     * NULL or repeated, or a vector is NULL or holds a NULL element. */
   private def queryVectors(rows: Seq[InternalRow], qidAt: Int, qidType: DataType,
                            qvecAt: Int, et: DataType): Option[Seq[Array[Double]]] = {
-    val qids = rows.map(r => if (r.isNullAt(qidAt)) null else r.get(qidAt, qidType))
+    val qids = rows.map(r => if (r.isNullAt(qidAt)) null else groupKey(r.get(qidAt, qidType)))
     val vectors = rows.map(r => if (r.isNullAt(qvecAt)) null else r.getArray(qvecAt))
     val ok = !qids.contains(null) && qids.distinct.size == qids.size &&
       vectors.forall(a => a != null && !(0 until a.numElements()).exists(a.isNullAt))

@@ -39,8 +39,8 @@ import graft.vector.VectorOps
   *    a bounded serving cache, not a collect of the data path: a store
   *    past the bound takes the partitioned Spark plan.
   *  - Scores use the cosine kernel's own loop
-  *    ([[CosineSimilarity.packed]], or [[CosineSimilarity.packedEach]]
-  *    for many queries in one pass) and [[VectorOps.round6]]; the order
+  *    ([[CosineSimilarity.packed]]; many queries share one pass over
+  *    the held rows) and [[VectorOps.round6]]; the order
   *    is Spark's `sim DESC NULLS LAST, id ASC NULLS FIRST` with NaN
   *    above every number. A raw sim more than 1e-6 below the current
   *    k-th skips the round-6 (a `BigDecimal` round trip) and the
@@ -105,11 +105,23 @@ object ServingSnapshot {
     * (`Search.similarityJoin`) read. `fields` are the corpus columns a
     * result row carries; `sim` is the similarity column against a
     * non-NULL literal query (a nullable query side widens its
-    * nullability). */
+    * nullability). The generation is brought up to date on first use
+    * of [[rows]], [[rowBytes]] or [[topK]], so a caller can still
+    * refuse its input before any file is listed or read. */
   final class Served private[ServingSnapshot] (
       val fields: Seq[StructField], val sim: StructField,
-      chosen: IndexedSeq[(Block, InternalRow)],
+      load: () => IndexedSeq[(Block, InternalRow)],
       getters: Seq[(Block, InternalRow, Int) => Any], dead: Long => Boolean) {
+
+    private lazy val chosen = load()
+
+    /** Rows held for this answer (before tombstones drop any). */
+    lazy val rows: Long = chosen.iterator.map(_._1.n.toLong).sum
+
+    /** Held bytes per row: the driver-side size of one result row's
+      * corpus values, vector included. */
+    def rowBytes: Long =
+      if (rows == 0) 0L else chosen.iterator.map(_._1.bytes).sum / rows
 
     /** Each query's top-`k` rows, in Spark's order: each row's values
       * of `fields`, and its sim (null for a NULL similarity). One pass
@@ -121,8 +133,8 @@ object ServingSnapshot {
       })
   }
 
-  /** The snapshot of `corpus`, brought up to its current generation, or
-    * None when the snapshot does not apply (not a bare store scan, over
+  /** The snapshot of `corpus` (brought up to its current generation on
+    * first use, see [[Served]]), or None when the snapshot does not apply (not a bare store scan, over
     * the size bound, or column types it does not hold). `keep` selects
     * blocks by the value of one partition column, `dead` drops ids
     * (tombstones), `dropCols` leaves columns out of the result — the
@@ -150,10 +162,12 @@ object ServingSnapshot {
         }
       }
     } yield {
-      val dirs = rel.location.listFiles(Nil, Nil)
-      val blocks = refresh(spark, rel, output, dirs, idCol, vecCol)
-      val parts = dirs.filter(d => partOk(d.values))
-      val chosen = parts.flatMap(d => d.files.map(f => (blocks(key(f.fileStatus)), d.values)))
+      def chosen(): IndexedSeq[(Block, InternalRow)] = {
+        val dirs = rel.location.listFiles(Nil, Nil)
+        val blocks = refresh(spark, rel, output, dirs, idCol, vecCol)
+        dirs.filter(d => partOk(d.values))
+          .flatMap(d => d.files.map(f => (blocks(key(f.fileStatus)), d.values))).toIndexedSeq
+      }
       val outFields = output.filterNot(f => dropCols(f.name))
       val sim = StructField("sim", DoubleType, vecField.nullable || vecType.containsNull)
       val rest = restCols(output, vecCol, rel)
@@ -167,7 +181,7 @@ object ServingSnapshot {
             (b: Block, _: InternalRow, ri: Int) => b.rest(ri).get(ord, f.dataType)
         }
       }
-      new Served(outFields, sim, chosen.toIndexedSeq, getters, dead)
+      new Served(outFields, sim, () => chosen(), getters, dead)
     }
 
   /** The ids of a bare scan (tombstones), as longs. None when the
@@ -188,7 +202,7 @@ object ServingSnapshot {
 
   // ------------------------------------------------------------- internals
 
-  private[graft] def isIntegral(dt: DataType): Boolean = dt match {
+  private def isIntegral(dt: DataType): Boolean = dt match {
     case ByteType | ShortType | IntegerType | LongType => true
     case _ => false
   }
@@ -321,10 +335,12 @@ object ServingSnapshot {
   /** Each query's top-k `(block, row, sim)` in Spark's order: sim DESC
     * with NaN first and NULL (held as NaN + an odd row) last, then id
     * ASC with NULL first. One pass over the held rows serves every
-    * query ([[CosineSimilarity.packedEach]]). */
+    * query. */
   private def select(blocks: Seq[Block], qs: Seq[Array[Double]], k: Int,
                      dead: Long => Boolean): Seq[Seq[(Int, Int, Double)]] = {
-    if (k <= 0 || qs.isEmpty) return qs.map(_ => Nil)
+    // a top never holds more than the held rows, however large k is
+    val cap = math.min(k.toLong, blocks.iterator.map(_.n.toLong).sum).toInt
+    if (cap <= 0 || qs.isEmpty) return qs.map(_ => Nil)
     // candidate: block, row, sim, simNull, id, idNull
     final case class C(bi: Int, ri: Int, sim: Double, simNull: Boolean, id: Long, idNull: Boolean)
     def before(a: C, b: C): Boolean =
@@ -336,9 +352,7 @@ object ServingSnapshot {
         else a.id < b.id
       }
     val queries = qs.toArray
-    val nbs = queries.map(CosineSimilarity.sqNorm)
-    val raw = new Array[Double](queries.length)
-    val tops = Array.fill(queries.length)(new Array[C](k))
+    val tops = Array.fill(queries.length)(new Array[C](cap))
     val sizes = new Array[Int](queries.length)
     var bi = 0
     while (bi < blocks.size) {
@@ -349,23 +363,23 @@ object ServingSnapshot {
         val idNull = b.idNull(ri)
         if (idNull || !dead(b.ids(ri))) {
           val simNull = hasOdd && b.odd.contains(ri)
-          if (simNull) java.util.Arrays.fill(raw, Double.NaN)
-          else CosineSimilarity.packedEach(b.vec, b.off(ri), b.off(ri + 1) - b.off(ri),
-            queries, nbs, raw)
+          val off = b.off(ri)
+          val n = b.off(ri + 1) - off
           var qi = 0
           while (qi < queries.length) {
             val top = tops(qi)
             val size = sizes(qi)
+            val raw = if (simNull) Double.NaN else CosineSimilarity.packed(b.vec, off, n, queries(qi))
             // round6 moves a sim by at most 5e-7 and never reorders two, so
             // a raw sim more than 1e-6 below the k-th rounded sim cannot
             // rank; NaN sims, and NULL ones (held as NaN), are never skipped
-            if (size < k || !(raw(qi) < top(k - 1).sim - 1e-6)) {
-              val c = C(bi, ri, VectorOps.round6(raw(qi)), simNull, b.ids(ri), idNull)
-              if (size < k || before(c, top(size - 1))) {
-                var j = math.min(size, k - 1)
+            if (size < cap || !(raw < top(cap - 1).sim - 1e-6)) {
+              val c = C(bi, ri, VectorOps.round6(raw), simNull, b.ids(ri), idNull)
+              if (size < cap || before(c, top(size - 1))) {
+                var j = math.min(size, cap - 1)
                 while (j > 0 && before(c, top(j - 1))) { top(j) = top(j - 1); j -= 1 }
                 top(j) = c
-                if (size < k) sizes(qi) += 1
+                if (size < cap) sizes(qi) += 1
               }
             }
             qi += 1

@@ -270,6 +270,11 @@ class ServingSnapshotSpec extends SparkSpec {
     // a computed query side (an int qid cast) is collected
     sameJoin(Search.similarityJoin(CorpusStore.load(spark, path),
       qs.select(col("qid").cast("int").as("qid"), col("qvec"), col("question")), 3))
+    // string and fractional question ids
+    sameJoin(Search.similarityJoin(CorpusStore.load(spark, path),
+      qs.select(col("question").as("qid"), col("qvec")), 4))
+    sameJoin(Search.similarityJoin(CorpusStore.load(spark, path),
+      qs.select((col("qid") / 2).as("qid"), col("qvec")), 4))
   }
 
   test("similarityJoin snapshot ≡ Spark plan: array<float>, NULL vectors, a partitioned store") {
@@ -322,6 +327,23 @@ class ServingSnapshotSpec extends SparkSpec {
       spark.sql("SELECT 1L AS qid, CAST(NULL AS ARRAY<DOUBLE>) AS qvec"), 3))
     fallsBack(Search.similarityJoin(load,
       spark.sql("SELECT 1L AS qid, array(1D, CAST(NULL AS DOUBLE), 0D, 0D) AS qvec"), 3))
+    // the window groups -0.0 with 0.0 and NaN with NaN: repeated qids
+    assert(fallsBack(Search.similarityJoin(load,
+      Seq((0.0, v), (-0.0, v.reverse)).toDF("qid", "qvec"), 3)).size == 3)
+    assert(fallsBack(Search.similarityJoin(load,
+      Seq((Double.NaN, v), (Double.NaN, v.reverse)).toDF("qid", "qvec"), 3)).size == 3)
+    // a nested qid: the window normalizes the floats inside it too
+    assert(fallsBack(Search.similarityJoin(load,
+      Seq((Tuple1(0.0), v), (Tuple1(-0.0), v.reverse)).toDF("qid", "qvec"), 3)).size == 3)
+    // a collected query side that is refused reaches the plan as the
+    // collected rows, so the plan does not read the source again
+    val stored = tmp("joinfallbackq")
+    Seq((1L, v), (1L, v.reverse), (2L, v)).toDF("qid", "qvec").write.parquet(stored)
+    val repeated = fallsBack(Search.similarityJoin(load, spark.read.parquet(stored), 3))
+    assert(repeated.size == 6)
+    assert(Search.similarityJoin(load, spark.read.parquet(stored), 3).queryExecution.analyzed
+      .collectFirst { case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r }
+      .exists(_.data.size == 3), "the plan joins the collected rows")
     // a column on both sides, and a sim column withColumn replaces
     fallsBack(Search.similarityJoin(load, Seq((1L, "q", v)).toDF("qid", "text", "qvec"), 3))
     fallsBack(Search.similarityJoin(load, Seq((1L, 0.5, v)).toDF("qid", "sim", "qvec"), 3))
@@ -329,6 +351,28 @@ class ServingSnapshotSpec extends SparkSpec {
     fallsBack(Search.similarityJoin(load.filter(col("vec_id") > 10), qs, 3))
     fallsBack(Search.similarityJoin(load, qs, 3, idCol = "text"))
     withThreshold("1")(fallsBack(Search.similarityJoin(load, qs, 3)))
+  }
+
+  test("similarityJoin takes the Spark plan for a query side or a result past the bound") {
+    val path = tmp("joinbound")
+    write(path, corpusRows)
+    def load: DataFrame = CorpusStore.load(spark, path)
+    val storeBytes = Fs.dataFiles(spark, path).map(_.getLen).sum
+    val qs = Seq((1L, Seq(1.0, 1.0, 0.0, 0.0)), (2L, Seq(0.0, 1.0, 0.0, 0.0)),
+      (3L, Seq(1.0, 0.0, 2.0, 0.0)), (4L, Seq(0.3, -1.0, 2.0, 0.5))).toDF("qid", "qvec")
+    val long = Seq((1L, Seq.fill(2000)(1.0))).toDF("qid", "qvec")
+    // the bound admits the store, so a small batch is served
+    withThreshold(storeBytes.toString) {
+      assert(fromSnapshot(Search.similarityJoin(load, qs, 2)))
+      // every row for 4 queries holds more than the store's bytes
+      assert(fallsBack(Search.similarityJoin(load, qs, 100)).size == 4 * corpusRows.size)
+      // one query of 16 kB (a dimension mismatch: every sim is -1.0)
+      assert(fallsBack(Search.similarityJoin(load, long, 1)).map(_.getAs[Double]("sim")) ==
+        Seq(-1.0))
+    }
+    // under the default bound both are served
+    sameJoin(Search.similarityJoin(load, qs, 100))
+    sameJoin(Search.similarityJoin(load, long, 1))
   }
 
   test("a batch answer over a small store runs one job of one task with no shuffle") {
@@ -393,25 +437,5 @@ class ServingSnapshotSpec extends SparkSpec {
     assert(f.packed(Array(9.0, 1.0, 0.0), 1, 2, Array(3.0, 0.0)) == 1.0)
     assert(f.packed(Array(0.0, 0.0), 0, 2, Array(1.0, 1.0)) == 0.0)
     assert(f.packed(Array(1.0), 0, 1, Array(1.0, 1.0)) == -1.0)
-  }
-
-  test("packedEach ≡ packed bit for bit: groups of four, short and zero queries, NaN") {
-    val f = graft.functions.CosineSimilarity
-    val r = new scala.util.Random(17)
-    val rows = Array.fill(40 * 9)(if (r.nextInt(4) == 0) 0.0 else r.nextGaussian() * 3)
-    rows(9 * 7 + 2) = Double.NaN
-    java.util.Arrays.fill(rows, 9 * 3, 9 * 4, 0.0)
-    val qs = Array.tabulate(11)(j =>
-      if (j == 5) Array.fill(8)(1.0) else if (j == 2) Array.fill(9)(0.0)
-      else Array.fill(9)(r.nextGaussian()))
-    val out = new Array[Double](qs.length)
-    (0 until 40).foreach { i =>
-      f.packedEach(rows, 9 * i, 9, qs, qs.map(f.sqNorm), out)
-      qs.indices.foreach { j =>
-        val want = f.packed(rows, 9 * i, 9, qs(j))
-        assert(java.lang.Double.doubleToRawLongBits(out(j)) ==
-          java.lang.Double.doubleToRawLongBits(want), s"row $i query $j: ${out(j)} vs $want")
-      }
-    }
   }
 }
