@@ -400,20 +400,19 @@ object Search {
 
   /** A `qid` type whose values the window groups exactly as [[groupKey]]
     * compares them: atomic, with strings under the default (binary)
-    * collation. Nested types and other collations take the Spark plan. */
+    * collation. Nested types, byte arrays (compared by reference on the
+    * driver) and other collations take the Spark plan. */
   private def keyed(dt: DataType): Boolean = dt match {
-    case _: NumericType | BooleanType | BinaryType | DateType | TimestampType |
-         TimestampNTZType => true
+    case _: NumericType | BooleanType | DateType | TimestampType | TimestampNTZType => true
     case st: StringType => st == StringType
     case _ => false
   }
 
   /** A `qid` value as the window groups it: -0.0 with 0.0, every NaN
-    * with every other, byte arrays by content. */
+    * with every other. */
   private def groupKey(v: Any): Any = v match {
     case d: Double => java.lang.Double.doubleToLongBits(if (d == 0.0) 0.0 else d)
     case f: Float => java.lang.Float.floatToIntBits(if (f == 0.0f) 0.0f else f)
-    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
     case other => other
   }
 
@@ -422,7 +421,6 @@ object Search {
     case (null, _) => 0L
     case (a: ArrayData, ArrayType(et, _)) => 8L + a.numElements().toLong * et.defaultSize
     case (s: UTF8String, _) => s.numBytes().toLong
-    case (b: Array[Byte], _) => b.length.toLong
     case _ => dt.defaultSize.toLong
   }
 
