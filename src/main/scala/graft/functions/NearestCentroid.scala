@@ -56,18 +56,7 @@ case class NearestCentroid(child: Expression, cents: Seq[Seq[Double]])
     }
     m
   }
-  @transient private lazy val norms: Array[Double] = {
-    val ns = new Array[Double](k)
-    var i = 0
-    while (i < k) {
-      var s = 0.0
-      var j = 0
-      while (j < d) { val x = cents(i)(j); s += x * x; j += 1 }
-      ns(i) = math.sqrt(s)
-      i += 1
-    }
-    ns
-  }
+  @transient private lazy val norms: Array[Double] = NearestCentroid.norms(mat, k, d)
 
   override def dataType: DataType = IntegerType
 
@@ -88,33 +77,17 @@ case class NearestCentroid(child: Expression, cents: Seq[Seq[Double]])
 
   override protected def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    if (n != d) return 0 // all sims -1 → tie → lowest index
+    if (a.numElements() != d) return 0 // all sims -1 → tie → lowest index
     val isF = elemIsFloat
     val nn = elemNullable
     val v = new Array[Double](d)
-    var na = 0.0
     var j = 0
     while (j < d) {
       if (nn && a.isNullAt(j)) return null
-      val x = if (isF) a.getFloat(j).toDouble else a.getDouble(j)
-      v(j) = x; na += x * x
+      v(j) = if (isF) a.getFloat(j).toDouble else a.getDouble(j)
       j += 1
     }
-    val sqna = math.sqrt(na)
-    var best = Double.NegativeInfinity
-    var bestI = 0
-    var i = 0
-    while (i < k) {
-      var dot = 0.0
-      val off = i * d
-      var jj = 0
-      while (jj < d) { dot += mat(off + jj) * v(jj); jj += 1 }
-      val sim = if (na == 0.0 || norms(i) == 0.0) 0.0 else dot / (sqna * norms(i))
-      if (sim > best) { best = sim; bestI = i }
-      i += 1
-    }
-    bestI
+    NearestCentroid.nearest(mat, norms, d, v, 0)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -190,5 +163,47 @@ object NearestCentroid {
   def apply(vec: Column, cents: Seq[Seq[Double]]): Column = {
     val eu = org.apache.spark.sql.graftbridge.ColumnBridge
     eu.column(NearestCentroid(eu.expression(vec), cents))
+  }
+
+  /** Per-centroid norms `sqrt(sum x²)` of a row-major `k × d` matrix,
+    * accumulated in index order. */
+  def norms(mat: Array[Double], k: Int, d: Int): Array[Double] = {
+    val ns = new Array[Double](k)
+    var i = 0
+    while (i < k) {
+      var s = 0.0
+      var j = 0
+      while (j < d) { val x = mat(i * d + j); s += x * x; j += 1 }
+      ns(i) = math.sqrt(s)
+      i += 1
+    }
+    ns
+  }
+
+  /** Index of the centroid nearest `v[off, off + d)` by cosine, lowest
+    * index on ties: the argmax of the expression, over a row-major
+    * `mat` of `norms.length` centroids and their [[norms]]. The
+    * interpreted expression and the driver-side k-means
+    * ([[graft.search.Ann.kmeansCentroids]]) both call it; the generated
+    * code in `doGenCode` is the same loop written out. */
+  def nearest(mat: Array[Double], norms: Array[Double], d: Int,
+              v: Array[Double], off: Int): Int = {
+    var na = 0.0
+    var j = 0
+    while (j < d) { val x = v(off + j); na += x * x; j += 1 }
+    val sqna = math.sqrt(na)
+    var best = Double.NegativeInfinity
+    var bestI = 0
+    var i = 0
+    while (i < norms.length) {
+      var dot = 0.0
+      val o = i * d
+      var jj = 0
+      while (jj < d) { dot += mat(o + jj) * v(off + jj); jj += 1 }
+      val sim = if (na == 0.0 || norms(i) == 0.0) 0.0 else dot / (sqna * norms(i))
+      if (sim > best) { best = sim; bestI = i }
+      i += 1
+    }
+    bestI
   }
 }

@@ -24,7 +24,11 @@ import org.apache.spark.sql.types._
   * reduction order (last-ulp nondeterminism across cluster layouts, as
   * with any floating aggregate — fine for index construction, not for
   * oracle-checked outputs). Rows with mismatched dimension vs the first
-  * row seen in the buffer throw.
+  * row seen in the buffer throw. The driver path of
+  * `graft.search.Ann.kmeansCentroids` computes the same per-cluster sums
+  * and counts without this aggregate: one partial per held data file,
+  * merged in file order, so its result does not depend on thread count
+  * and differs from this one only in the last ulps of the merge.
   */
 case class VectorAvg(
     child: Expression,

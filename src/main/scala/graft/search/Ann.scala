@@ -71,37 +71,163 @@ object Ann {
 
   /** Lloyd's k-means over a vector column — the batch index-construction
     * path for IVF when no coarse key exists. Centroids are model state
-    * (k × dim doubles — kilobytes), so they live driver-side as literals
-    * between iterations; each iteration is one distributed assign pass
-    * (k fused-cosine evals per row, no join, no shuffle) plus one
-    * per-dim avg aggregation. Deterministic: init = the k lowest-id
-    * vectors; empty clusters keep their previous centroid. */
+    * (k × dim doubles — kilobytes), so they live driver-side between
+    * iterations. Deterministic: init = the k lowest-id vectors (NULL ids
+    * first, as `orderBy(idCol)` sorts them); each row goes to its
+    * nearest centroid by cosine, lowest index on ties
+    * ([[graft.functions.NearestCentroid]]); each centroid becomes the
+    * mean of its rows, and an empty cluster keeps its previous
+    * centroid. Two paths compute this:
+    *
+    *  - A bare scan of a small store (one that
+    *    [[graft.store.ServingSnapshot.serve]] accepts: within
+    *    `spark.sql.autoBroadcastJoinThreshold`, integral ids) trains on
+    *    the driver from the held vectors, with no Spark job. Each
+    *    iteration computes one partial per held block (one data file):
+    *    every row's assignment through `NearestCentroid.nearest`, and
+    *    per cluster the vector sum in row order and the count. The
+    *    partials are merged in block order, so the centroids do not
+    *    depend on how many threads ran them. The blocks are spread over
+    *    at most `defaultParallelism` driver threads of one pool per call.
+    *  - Any other input runs the Spark plan ([[kmeansPlan]]): init by
+    *    `orderBy.limit`, then per iteration one distributed assign pass
+    *    (k fused-cosine evals per row, no join) and one `vector_avg`
+    *    aggregation, whose partials merge in Spark's reduction order.
+    *    A held store the driver path cannot match exactly takes the plan
+    *    too, so the plan's answer or error stands there: a NULL vector
+    *    or element, mixed dimensions, dimension 0, or no rows.
+    *
+    * The two paths differ only in sum order, so their centroids agree to
+    * the last few ulps and they assign every row alike unless it sits
+    * within those ulps of a tie. Rows with equal ids, which `orderBy`
+    * leaves in no set order, enter the driver path's init in block,
+    * then row, order. */
   def kmeansCentroids(df: DataFrame, idCol: String, vecCol: String,
-                      k: Int, iters: Int,
-                      persistInput: Boolean = false): Seq[Seq[Double]] = {
+                      k: Int, iters: Int): Seq[Seq[Double]] = {
     require(k >= 2, "k >= 2")
-    // The input is scanned iters+1 times (init + one assign pass per
-    // Lloyd iteration). persistInput trades memory for rescans — measured
-    // at sf0.1 it does NOT win against a plain parquet rescan (see
-    // PLANS.md "k-means iteration caching"), so the default stays off;
-    // it exists for inputs behind expensive upstream transforms.
-    val in = if (persistInput) df.select(col(idCol), col(vecCol)).persist() else df
-    try {
-      var cents: Seq[Seq[Double]] = in.orderBy(col(idCol)).limit(k)
-        .select(transform(col(vecCol), x => x.cast("double")).as("v"))
-        .collect().map(_.getSeq[Double](0).toSeq).toSeq
-      (0 until iters).foreach { _ =>
-        val updated = in
-          .withColumn("__cluster", assignCluster(col(vecCol), cents))
-          .groupBy(col("__cluster"))
-          .agg(graft.functions.VectorAvg(col(vecCol)).as("centroid"))
-          .collect()
-          .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
-          .toMap
-        cents = cents.indices.map(i => updated.getOrElse(i, cents(i)))
+    ServingSnapshot.serve(df, idCol, vecCol)
+      .flatMap(s => kmeansHeld(s.held, k, iters, df.sparkSession.sparkContext.defaultParallelism))
+      .getOrElse(kmeansPlan(df, idCol, vecCol, k, iters))
+  }
+
+  /** The Spark plan of [[kmeansCentroids]]: the input is scanned
+    * iters + 1 times (init + one assign pass per iteration). */
+  private def kmeansPlan(df: DataFrame, idCol: String, vecCol: String,
+                         k: Int, iters: Int): Seq[Seq[Double]] = {
+    var cents: Seq[Seq[Double]] = df.orderBy(col(idCol)).limit(k)
+      .select(transform(col(vecCol), x => x.cast("double")).as("v"))
+      .collect().map(_.getSeq[Double](0).toSeq).toSeq
+    (0 until iters).foreach { _ =>
+      val updated = df
+        .withColumn("__cluster", assignCluster(col(vecCol), cents))
+        .groupBy(col("__cluster"))
+        .agg(graft.functions.VectorAvg(col(vecCol)).as("centroid"))
+        .collect()
+        .map(r => r.getInt(0) -> r.getSeq[Double](1).toSeq)
+        .toMap
+      cents = cents.indices.map(i => updated.getOrElse(i, cents(i)))
+    }
+    cents
+  }
+
+  /** One held block's share of a Lloyd iteration: the clusters its rows
+    * went to, in first-assigned order, their vector sums (`d` each,
+    * packed) and row counts. It is sized by the clusters the block
+    * touches, so an iteration's partials never hold more values than
+    * the vectors themselves. */
+  private final class Partial(val clusters: Array[Int], val sums: Array[Double],
+                              val counts: Array[Long])
+
+  /** [[kmeansCentroids]] over held blocks on the driver, or None where
+    * it could not match the Spark plan exactly: no rows, a NULL vector
+    * or element, mixed dimensions, or dimension 0. */
+  private def kmeansHeld(held: IndexedSeq[ServingSnapshot.Held], k: Int, iters: Int,
+                         parallelism: Int): Option[Seq[Seq[Double]]] = {
+    val rows = held.iterator.map(_.ids.length).sum
+    if (rows == 0) return None
+    val first = held.find(_.ids.nonEmpty).get
+    val d = first.off(1) - first.off(0)
+    // a NULL vector or element holds no values, so it reads as dimension
+    // 0: one dimension above 0 throughout refuses it too
+    if (d == 0 || held.exists(b => b.ids.indices.exists(i => b.off(i + 1) - b.off(i) != d)))
+      return None
+    // init: the k lowest ids, NULL first; equal ids keep block, then row, order
+    val order = held.indices.iterator.flatMap(bi => held(bi).ids.indices.map(ri => (bi, ri)))
+      .toArray.sortBy { case (bi, ri) =>
+        val b = held(bi)
+        (!b.idNull(ri), if (b.idNull(ri)) 0L else b.ids(ri))
       }
-      cents
-    } finally if (persistInput) { in.unpersist(); () }
+    val kk = math.min(k, rows)
+    val mat = new Array[Double](kk * d)
+    order.iterator.take(kk).zipWithIndex.foreach { case ((bi, ri), c) =>
+      val b = held(bi)
+      System.arraycopy(b.vec, b.off(ri), mat, c * d, d)
+    }
+    val threads = math.max(1, math.min(parallelism, held.size))
+    val pool = if (threads > 1 && iters > 0) Some(java.util.concurrent.Executors.newFixedThreadPool(threads))
+      else None
+    try {
+      (0 until iters).foreach { _ =>
+        val norms = graft.functions.NearestCentroid.norms(mat, kk, d)
+        def partial(b: ServingSnapshot.Held): Partial = lloydPartial(b, mat, norms, kk, d)
+        val parts = pool.fold(held.map(partial)) { p =>
+          held.map(b => p.submit(new java.util.concurrent.Callable[Partial] {
+            def call(): Partial = partial(b)
+          })).map(_.get())
+        }
+        val sums = new Array[Double](kk * d)
+        val counts = new Array[Long](kk)
+        parts.foreach { p =>
+          var s = 0
+          while (s < p.clusters.length) {
+            val c = p.clusters(s)
+            var j = 0
+            while (j < d) { sums(c * d + j) += p.sums(s * d + j); j += 1 }
+            counts(c) += p.counts(s)
+            s += 1
+          }
+        }
+        var c = 0
+        while (c < kk) {
+          if (counts(c) > 0) {
+            var j = 0
+            while (j < d) { mat(c * d + j) = sums(c * d + j) / counts(c).toDouble; j += 1 }
+          }
+          c += 1
+        }
+      }
+    } finally pool.foreach(_.shutdown())
+    Some((0 until kk).map(c => mat.slice(c * d, (c + 1) * d).toSeq))
+  }
+
+  /** One block's assignments against `mat`, then its [[Partial]]. */
+  private def lloydPartial(b: ServingSnapshot.Held, mat: Array[Double], norms: Array[Double],
+                           k: Int, d: Int): Partial = {
+    val n = b.ids.length
+    val assign = new Array[Int](n)
+    val slot = Array.fill(k)(-1)
+    var used = 0
+    var i = 0
+    while (i < n) {
+      val c = graft.functions.NearestCentroid.nearest(mat, norms, d, b.vec, b.off(i))
+      assign(i) = c
+      if (slot(c) < 0) { slot(c) = used; used += 1 }
+      i += 1
+    }
+    val clusters = new Array[Int](used)
+    (0 until k).foreach(c => if (slot(c) >= 0) clusters(slot(c)) = c)
+    val sums = new Array[Double](used * d)
+    val counts = new Array[Long](used)
+    i = 0
+    while (i < n) {
+      val s = slot(assign(i))
+      val off = b.off(i)
+      var j = 0
+      while (j < d) { sums(s * d + j) += b.vec(off + j); j += 1 }
+      counts(s) += 1
+      i += 1
+    }
+    new Partial(clusters, sums, counts)
   }
 
   /** Nearest-centroid id (cosine argmax, lowest id on ties) against a

@@ -47,10 +47,27 @@ import graft.vector.VectorOps
   *    candidate: rounding cannot lift it past the k-th. So the result
   *    equals the Spark plan's, row for row, and comes back as a
   *    single-partition frame with the Spark plan's schema: an aggregate
-  *    over it is one job of one task. `Search.knn`, the IVF probe and
-  *    the batch `Search.similarityJoin` all read it through [[serve]].
+  *    over it is one job of one task.
+  *
+  * Readers, all through [[serve]] and all under the same bound (the
+  * store's on-disk bytes at most `spark.sql.autoBroadcastJoinThreshold`):
+  * `Search.knn`, the IVF probe, the batch `Search.similarityJoin`, and
+  * the k-means of an IVF build (`Ann.kmeansCentroids`), which runs its
+  * whole Lloyd loop over the held vectors ([[Served.held]]).
   */
 object ServingSnapshot {
+
+  /** One held data file's ids and vectors, for a driver pass that needs
+    * no result rows (k-means). Row `i`'s id is `ids(i)`, NULL when
+    * `idNull(i)`; its vector is `vec[off(i), off(i + 1))`, an empty
+    * range when the vector is NULL or holds a NULL element. The arrays
+    * are the snapshot's own: read them, never write them. */
+  sealed trait Held {
+    def ids: Array[Long]
+    def idNull: Array[Boolean]
+    def vec: Array[Double]
+    def off: Array[Int]
+  }
 
   /** One data file's rows, packed. Row `i`'s vector is
     * `vec[off(i), off(i + 1))`; rows whose vector is NULL or holds a
@@ -58,7 +75,7 @@ object ServingSnapshot {
     * `odd` instead. `rest` holds the row's other data columns. */
   private final case class Block(
       ids: Array[Long], idNull: Array[Boolean], vec: Array[Double], off: Array[Int],
-      odd: Map[Int, ArrayData], rest: Array[InternalRow]) {
+      odd: Map[Int, ArrayData], rest: Array[InternalRow]) extends Held {
     def n: Int = ids.length
     lazy val bytes: Long = 8L * vec.length + 12L * n +
       rest.iterator.map {
@@ -102,18 +119,23 @@ object ServingSnapshot {
 
   /** A small store's held generation, ready to score against any number
     * of query vectors: what [[topK]] and the batch similarity join
-    * (`Search.similarityJoin`) read. `fields` are the corpus columns a
-    * result row carries; `sim` is the similarity column against a
-    * non-NULL literal query (a nullable query side widens its
-    * nullability). The generation is brought up to date on first use
-    * of [[rows]], [[rowBytes]] or [[topK]], so a caller can still
-    * refuse its input before any file is listed or read. */
+    * (`Search.similarityJoin`) read; k-means reads [[held]]. `fields`
+    * are the corpus columns a result row carries; `sim` is the
+    * similarity column against a non-NULL literal query (a nullable
+    * query side widens its nullability). The generation is brought up
+    * to date on first use of [[held]], [[rows]], [[rowBytes]] or
+    * [[topK]], so a caller can still refuse its input before any file
+    * is listed or read. */
   final class Served private[ServingSnapshot] (
       val fields: Seq[StructField], val sim: StructField,
       load: () => IndexedSeq[(Block, InternalRow)],
       getters: Seq[(Block, InternalRow, Int) => Any], dead: Long => Boolean) {
 
     private lazy val chosen = load()
+
+    /** The held blocks, one per data file in listing order, before
+      * tombstones drop any row. */
+    def held: IndexedSeq[Held] = chosen.map(_._1)
 
     /** Rows held for this answer (before tombstones drop any). */
     lazy val rows: Long = chosen.iterator.map(_._1.n.toLong).sum

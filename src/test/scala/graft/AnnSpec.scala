@@ -72,9 +72,6 @@ class AnnSpec extends SparkSpec {
     val c2 = Ann.kmeansCentroids(emb, "vec_id", "embedding", 5, 2)
     assert(c1 == c2)
     assert(c1.size == 5 && c1.forall(_.size == 64))
-    // the persistInput variant is a pure execution-strategy switch
-    val c3 = Ann.kmeansCentroids(emb, "vec_id", "embedding", 5, 2, persistInput = true)
-    assert(c3 == c1)
   }
 
   test("native assignCluster matches the composed greatest-struct spec row-for-row") {

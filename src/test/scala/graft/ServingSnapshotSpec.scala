@@ -429,6 +429,144 @@ class ServingSnapshotSpec extends SparkSpec {
     Seq(3, 12, 25).foreach(k => sameJoin(Search.similarityJoin(CorpusStore.load(spark, path), qs, k)))
   }
 
+  // ------------------------------------------------------------- k-means
+
+  private def kmeansOf(df: DataFrame, k: Int, iters: Int, idCol: String = "vec_id"): Seq[Seq[Double]] =
+    Ann.kmeansCentroids(df, idCol, "embedding", k, iters)
+
+  /** Gaussian rows in 4 files, one with a NULL id; float or double. */
+  private def gaussianStore(name: String, float: Boolean, n: Int = 240, dim: Int = 12): String = {
+    val r = new scala.util.Random(23)
+    val rows = (1 to n).map { i =>
+      val v = Seq.fill(dim)(r.nextGaussian())
+      (if (i == 17) null else java.lang.Long.valueOf(1000L - 3L * i), s"g$i", v)
+    }
+    val path = tmp(name)
+    val df = rows.toDF("vec_id", "text", "embedding").repartition(4)
+    CorpusStore.overwrite(if (float) df.withColumn("embedding",
+      col("embedding").cast("array<float>")) else df, path)
+    path
+  }
+
+  /** k-means over the store at `path` from the snapshot (once the
+    * store is held: no Spark job) and on the Spark plan: centroids
+    * within 1e-9 and the same cluster for every row. */
+  private def sameKmeans(path: String, k: Int, iters: Int): (Seq[Seq[Double]], Seq[Seq[Double]]) = {
+    def load: DataFrame = CorpusStore.load(spark, path)
+    kmeansOf(load, k, iters) // holds the generation
+    var snap: Seq[Seq[Double]] = Nil
+    assert(counted { snap = kmeansOf(load, k, iters) } == ((0, 0)),
+      "a warm k-means over a held store runs no Spark job")
+    val plan = withThreshold("-1")(kmeansOf(load, k, iters))
+    assert(snap.map(_.size) == plan.map(_.size))
+    snap.flatten.zip(plan.flatten).foreach { case (a, b) =>
+      assert(math.abs(a - b) <= 1e-9, s"snapshot $a vs plan $b")
+    }
+    if (snap.nonEmpty) {
+      val both = load.select(Ann.assignCluster(col("embedding"), snap).as("a"),
+        Ann.assignCluster(col("embedding"), plan).as("b"))
+      assert(both.filter(col("a") =!= col("b")).count() == 0, "every row in the same cluster")
+    }
+    (snap, plan)
+  }
+
+  test("k-means from the snapshot ≡ Spark plan: float and double, NULL id, k > rows, iters = 0") {
+    Seq(false, true).foreach { float =>
+      val path = gaussianStore(if (float) "kmf" else "kmd", float)
+      val (snap, plan) = sameKmeans(path, 8, 3)
+      assert(snap.size == 8 && snap.forall(_.size == 12))
+      // the init is the k lowest ids, NULL first
+      val init = sameKmeans(path, 5, 0)._1
+      val lowest = withThreshold("-1")(CorpusStore.load(spark, path).orderBy("vec_id").limit(5)
+        .select(col("embedding").cast("array<double>")).collect().map(_.getSeq[Double](0)).toSeq)
+      assert(init == lowest)
+      // identical index rows and probe answers from either model
+      val (a, b) = (tmp("kmidx-a"), tmp("kmidx-b"))
+      Ann.buildIvfIndex(CorpusStore.load(spark, path), snap, a)
+      Ann.buildIvfIndex(CorpusStore.load(spark, path), plan, b)
+      def rows(p: String): Seq[Row] = sorted(withThreshold("-1")(spark.read.parquet(p).collect().toSeq))
+      assert(values(rows(a)) == values(rows(b)))
+      Seq(Seq.fill(12)(0.5), (1 to 12).map(i => math.sin(i.toDouble))).foreach { v =>
+        val qv = q(v)
+        assert(values(Ann.ivfIndexTopK(spark, a, qv, snap, 5, 3).collect().toSeq) ==
+          values(Ann.ivfIndexTopK(spark, b, qv, plan, 5, 3).collect().toSeq))
+      }
+    }
+    // k past the rows: one centroid per row
+    val small = tmp("kmsmall")
+    write(small, corpusRows.take(3))
+    assert(sameKmeans(small, 5, 2)._1.size == 3)
+    assert(sameKmeans(small, 5, 0)._1.size == 3)
+  }
+
+  /** The input takes the Spark plan (a job runs under the default
+    * bound) and its outcome, centroids or error, is the one the
+    * snapshot-off session gives. */
+  private def kmeansFallsBack(df: => DataFrame, k: Int = 3, iters: Int = 2,
+                              idCol: String = "vec_id"): Either[String, Seq[Seq[Double]]] = {
+    def outcome(): Either[String, Seq[Seq[Double]]] =
+      try Right(kmeansOf(df, k, iters, idCol)) catch {
+        case e: Exception =>
+          var t: Throwable = e
+          while (t.getCause != null) t = t.getCause
+          Left(s"${t.getClass.getName}: ${t.getMessage}")
+      }
+    var got: Either[String, Seq[Seq[Double]]] = null
+    assert(counted { got = outcome() }._1 > 0, "this input must take the Spark plan")
+    assert(got == withThreshold("-1")(outcome()))
+    got
+  }
+
+  test("k-means takes the Spark plan, its answer and its errors, where the snapshot refuses") {
+    def store(name: String, rows: Seq[(Long, String, Seq[java.lang.Double])]): DataFrame = {
+      val path = tmp(name)
+      rows.toDF("vec_id", "text", "embedding").repartition(2).write.parquet(path)
+      CorpusStore.load(spark, path)
+    }
+    val grid = corpusRows.take(20).map { case (id, t, v) => (id, t, v.map(x => x: java.lang.Double)) }
+    // held rows the driver path cannot match exactly
+    kmeansFallsBack(store("kmnullvec", grid.map(r => if (r._1 == 2L) r.copy(_3 = null) else r)))
+    kmeansFallsBack(store("kmnullvec9", grid.map(r => if (r._1 == 19L) r.copy(_3 = null) else r)), iters = 0)
+    kmeansFallsBack(store("kmnullelem", grid.map(r =>
+      if (r._1 == 9L) r.copy(_3 = Seq[java.lang.Double](1.0, null, 0.0, 0.0)) else r)))
+    val mixed = tmp("kmmixed")
+    write(mixed, corpusRows)
+    assert(kmeansFallsBack(CorpusStore.load(spark, mixed)).isLeft, "mixed dimensions fail on the plan")
+    val empty = tmp("kmempty")
+    write(empty, Nil)
+    assert(kmeansFallsBack(CorpusStore.load(spark, empty)).isLeft)
+    assert(kmeansFallsBack(CorpusStore.load(spark, empty), iters = 0) == Right(Nil))
+    // inputs the snapshot refuses
+    val path = tmp("kmrefused")
+    write(path, corpusRows.filter(_._3.size == 4))
+    def load: DataFrame = CorpusStore.load(spark, path)
+    kmeansFallsBack(load.filter(col("vec_id") > 10))
+    kmeansFallsBack(load, idCol = "text") // string ids
+    withThreshold("1")(kmeansFallsBack(load)) // a store past the bound
+    withThreshold("-1")(kmeansFallsBack(load))
+    sameKmeans(path, 3, 2) // while the same store under the bound is served
+  }
+
+  test("k-means after an append re-reads only the new file, then trains with no Spark job") {
+    val path = gaussianStore("kmappend", float = false)
+    val old = Fs.dataFiles(spark, path)
+    kmeansOf(CorpusStore.load(spark, path), 6, 2) // holds the generation
+    write(path, Seq((5000L, "new", Seq.fill(12)(1.0))), append = true)
+    val want = withThreshold("-1")(kmeansOf(CorpusStore.load(spark, path), 6, 2))
+    // zero the old files in place, keeping length and mtime: reading
+    // one again would fail
+    old.foreach { f =>
+      val p = java.nio.file.Paths.get(f.getPath.toUri)
+      val mtime = java.nio.file.Files.getLastModifiedTime(p)
+      java.nio.file.Files.write(p, new Array[Byte](f.getLen.toInt))
+      java.nio.file.Files.setLastModifiedTime(p, mtime)
+    }
+    var got: Seq[Seq[Double]] = Nil
+    assert(counted { got = kmeansOf(CorpusStore.load(spark, path), 6, 2) } == ((0, 0)))
+    got.flatten.zip(want.flatten).foreach { case (a, b) => assert(math.abs(a - b) <= 1e-9) }
+    assert(got.map(_.size) == want.map(_.size))
+  }
+
   test("round6 keeps NaN and infinities; the packed kernel keeps the cosine edges") {
     assert(VectorOps.round6(Double.NaN).isNaN)
     assert(VectorOps.round6(Double.PositiveInfinity) == Double.PositiveInfinity)
