@@ -1,6 +1,6 @@
 package graft.embed
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Deterministic local featurizer — the zero-egress substitution for the
@@ -75,11 +75,4 @@ object Featurizer {
 
   def featurizeCounts(dim: Int = DefaultDim): Column => Column =
     c => graft.functions.FeaturizeCounts(c, dim, normalize = false)
-
-  /** The query text as a 1-row DataFrame with its featurized vector in
-    * `qvec` — the driver-side scalar embed of `App.tsx:190`. */
-  def queryFrame(spark: SparkSession, question: String, dim: Int = DefaultDim): DataFrame = {
-    import spark.implicits._
-    Seq((question, featurizeText(question, dim))).toDF("question", "qvec")
-  }
 }

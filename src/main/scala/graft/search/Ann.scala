@@ -1,6 +1,7 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.store.{CorpusStore, ServingSnapshot, Sidecars}
@@ -255,20 +256,9 @@ object Ann {
   def ivfTopKKMeans(corpus: DataFrame, query: DataFrame, k: Int, nprobe: Int,
                     numClusters: Int, iters: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val cents = kmeansCentroids(corpus, idCol, vecCol, numClusters, iters)
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    // rounded for the same probe-ranking determinism as [[ivfTopK]]
-    val probes = centsDf.crossJoin(broadcast(query))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-      .limit(nprobe)
-      .select(col("__cluster"))
-    val bucketed = corpus.withColumn("__cluster", assignCluster(col(vecCol), cents))
-    Search.knn(
-      bucketed.join(broadcast(probes), Seq("__cluster"), "left_semi").drop("__cluster"),
+    val probes = probeIds(cents, Search.probeVector(query), nprobe)
+    Search.knn(corpus.filter(assignCluster(col(vecCol), cents).isin(probes: _*)),
       query, k, idCol, vecCol)
   }
 
@@ -282,6 +272,48 @@ object Ann {
       .map { case (c, i) => (VectorOps.round6(VectorOps.cosineLocal(c, qvec)), i) }
       .sortBy { case (s, i) => (-s, i) }
       .take(nprobe).map(_._2)
+
+  /** The centroid table `(__cluster, centroid)` of a driver-side
+    * centroid list: k rows of model state. */
+  private[search] def centroidFrame(spark: org.apache.spark.sql.SparkSession,
+                                    cents: Seq[Seq[Double]]): DataFrame = {
+    import spark.implicits._
+    cents.zipWithIndex.map { case (c, i) => (i, c) }.toDF("__cluster", "centroid")
+  }
+
+  /** Per-query probe selection of a batch probe: each query's `nprobe`
+    * nearest centroids by round-6 cosine, ties to the lower cluster (the
+    * [[probeIds]] ranking), as a (queries × broadcast centroids) join
+    * and a per-qid window. Returns the `(qid, __cluster)` probe table
+    * and the union of the probed clusters — at most k ids, model-state
+    * scale — for the scan's plan-time literal `IN`. */
+  private[search] def batchProbes(queries: DataFrame, cents: Seq[Seq[Double]],
+                                  nprobe: Int): (DataFrame, Seq[Int]) = {
+    val w = Window.partitionBy(col("qid")).orderBy(col("csim").desc, col("__cluster").asc)
+    val probes = queries.crossJoin(broadcast(centroidFrame(queries.sparkSession, cents)))
+      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") <= nprobe)
+      .select(col("qid"), col("__cluster"))
+    (probes, probes.select(col("__cluster")).distinct().collect().map(_.getInt(0)).toSeq)
+  }
+
+  /** The best `n` rows per qid of a `(qid, id, sim)` frame,
+    * `(sim DESC, id ASC)`. */
+  private[search] def perQidTop(scored: DataFrame, n: Int, idCol: String): DataFrame =
+    scored
+      .withColumn("__rn", row_number().over(
+        Window.partitionBy(col("qid")).orderBy(col("sim").desc, col(idCol).asc)))
+      .filter(col("__rn") <= n)
+      .select(col("qid"), col(idCol), col("sim"))
+
+  /** The exact per-qid top-k of `(qid, row)` candidates: each row's
+    * round-6 cosine against its query's `qvec`. Returns (qid, id, sim). */
+  private[search] def batchExactTop(cands: DataFrame, queries: DataFrame, k: Int,
+                                    idCol: String, vecCol: String): DataFrame =
+    perQidTop(cands.join(broadcast(queries), Seq("qid"))
+      .select(col("qid"), col(idCol), VectorOps.cosine6(col(vecCol), col("qvec")).as("sim")),
+      k, idCol)
 
   /** Materialize an IVF index: the corpus bucketed by nearest centroid
     * and WRITTEN `partitionBy` the cluster id. This is the 100 TB form
@@ -419,12 +451,8 @@ object Ann {
                        query: DataFrame, cents: Seq[Seq[Double]],
                        k: Int, nprobe: Int, docCol: String,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = Search.probeVector(query)
-    val probes = probeIds(cents, qvec, nprobe)
-    dropTombstones(
-      CorpusStore.load(spark, path)
-        .filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
-      path, idCol)
+    val probes = probeIds(cents, Search.probeVector(query), nprobe)
+    probedRows(spark, path, probes, idCol).drop("__cluster")
       .crossJoin(broadcast(query))
       .select(col(docCol), VectorOps.cosine6(col(vecCol), col("qvec")).as("sim"))
       .groupBy(col(docCol)).agg(max(col("sim")).as("maxp"))
@@ -450,16 +478,60 @@ object Ann {
                            query: DataFrame, cents: Seq[Seq[Double]],
                            predicate: Column, k: Int, nprobe: Int,
                            idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = Search.probeVector(query)
-    val probes = probeIds(cents, qvec, nprobe)
-    def survivors(df: DataFrame): DataFrame =
-      dropTombstones(df, path, idCol).filter(predicate).drop("__cluster")
-    val probed = survivors(
-      CorpusStore.load(spark, path).filter(col("__cluster").isin(probes: _*)))
-    val cand =
-      if (probed.limit(k).count() < k) survivors(CorpusStore.load(spark, path))
-      else probed
-    Search.knn(cand, query, k, idCol, vecCol)
+    val probes = probeIds(cents, Search.probeVector(query), nprobe)
+    Search.knn(probeCandidates(spark, path, probes, Some(predicate), k, idCol),
+      query, k, idCol, vecCol)
+  }
+
+  /** The surviving rows of the `probes` clusters of the IVF-layout
+    * store at `path`, `__cluster` kept: a literal `IN` on the partition
+    * column, so non-probed directories never open. */
+  private[search] def probedRows(spark: org.apache.spark.sql.SparkSession, path: String,
+                                 probes: Seq[Int], idCol: String): DataFrame =
+    dropTombstones(CorpusStore.load(spark, path).filter(col("__cluster").isin(probes: _*)),
+      path, idCol)
+
+  /** The candidates of a single probe of the IVF-layout store at
+    * `path`: [[probedRows]] without `__cluster`. With a predicate, only
+    * the matching rows, and when the probed clusters hold fewer than
+    * `k` of them (one bounded `limit(k).count()` on the pruned scan)
+    * the matching survivors of every cluster. */
+  private[search] def probeCandidates(spark: org.apache.spark.sql.SparkSession, path: String,
+                                      probes: Seq[Int], predicate: Option[Column], k: Int,
+                                      idCol: String): DataFrame = {
+    def matching(df: DataFrame): DataFrame = predicate.fold(df)(df.filter).drop("__cluster")
+    val probed = matching(probedRows(spark, path, probes, idCol))
+    if (predicate.exists(_ => probed.limit(k).count() < k))
+      matching(dropTombstones(CorpusStore.load(spark, path), path, idCol))
+    else probed
+  }
+
+  /** The `(qid, row)` candidates of a batch probe of the IVF-layout
+    * store at `path`: each query's probed surviving rows
+    * ([[batchProbes]]), `__cluster` dropped. With a predicate, only the
+    * matching rows, and every qid with fewer than `k` of them re-takes
+    * its candidates from the matching survivors of every cluster. The
+    * per-qid counts are one bounded aggregate (Q rows of driver state);
+    * a qid with no match is absent from them, and the left join keeps
+    * it in the fallback set. */
+  private[search] def batchCandidates(spark: org.apache.spark.sql.SparkSession, path: String,
+                                      queries: DataFrame, cents: Seq[Seq[Double]], nprobe: Int,
+                                      predicate: Option[Column], k: Int,
+                                      idCol: String): DataFrame = {
+    val (probes, probed) = batchProbes(queries, cents, nprobe)
+    def matching(df: DataFrame): DataFrame = predicate.fold(df)(df.filter)
+    val cands = matching(probedRows(spark, path, probed, idCol))
+      .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
+    val short = if (predicate.isEmpty) Seq.empty else
+      queries.select(col("qid"))
+        .join(cands.groupBy(col("qid")).agg(count(lit(1)).as("__n")), Seq("qid"), "left")
+        .filter(coalesce(col("__n"), lit(0L)) < k)
+        .select(col("qid")).collect().map(_.get(0)).toSeq
+    if (short.isEmpty) cands
+    else cands.filter(!col("qid").isin(short: _*))
+      .unionByName(matching(dropTombstones(CorpusStore.load(spark, path), path, idCol))
+        .drop("__cluster")
+        .crossJoin(broadcast(queries.filter(col("qid").isin(short: _*)).select(col("qid")))))
   }
 
   /** BATCH filtered probe of a materialized IVF index — the
@@ -476,47 +548,9 @@ object Ann {
   def ivfIndexTopKFilteredBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                                 queries: DataFrame, cents: Seq[Seq[Double]],
                                 predicate: Column, k: Int, nprobe: Int,
-                                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-    val probes = queries.crossJoin(broadcast(centsDf))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
-      .select(col("qid"), col("__cluster"))
-    val probedClusters = probes.select(col("__cluster")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    def survivors(df: DataFrame): DataFrame =
-      dropTombstones(df, path, idCol).filter(predicate)
-    val all = CorpusStore.load(spark, path)
-    val probedCands = survivors(
-        all.filter(col("__cluster").isin(probedClusters: _*)))
-      .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
-    val counts = probedCands.groupBy(col("qid")).agg(count(lit(1)).as("__n"))
-    val fbQids = queries.select(col("qid"))
-      .join(counts, Seq("qid"), "left")
-      .filter(coalesce(col("__n"), lit(0L)) < k)
-      .select(col("qid")).collect().map(_.get(0)).toSeq
-    val cands =
-      if (fbQids.isEmpty) probedCands
-      else
-        probedCands.filter(!col("qid").isin(fbQids: _*))
-          .unionByName(survivors(all).drop("__cluster")
-            .crossJoin(broadcast(
-              queries.filter(col("qid").isin(fbQids: _*)).select(col("qid")))))
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    cands.join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        VectorOps.cosine6(col(vecCol), col("qvec")).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("sim"))
-  }
+                                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    batchExactTop(batchCandidates(spark, path, queries, cents, nprobe, Some(predicate), k, idCol),
+      queries, k, idCol, vecCol)
 
   /** Record an index's model state next to its data: the centroid
     * table at `<path>.model/` and the current mean assignment
@@ -526,46 +560,36 @@ object Ann {
     * [[assignmentDrift]] measures how far. */
   def recordIvfModel(spark: org.apache.spark.sql.SparkSession, path: String,
                      cents: Seq[Seq[Double]],
-                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    recordModel(spark, path, cents)(meanAssignSim(
+      dropTombstones(CorpusStore.load(spark, path), path, idCol),
+      centroidFrame(spark, cents), vecCol))
+
+  /** Write the centroid table to `<path>.model/`, then the baseline
+    * `mean` to `<path>.stats/`. The model MUST land before the stats
+    * (the crash-ordering contract [[graft.store.Sidecars.carry]]'s
+    * independent guards rely on), but the baseline scan runs against
+    * the caller-held centroids, never the sidecar, so it overlaps the
+    * model write. */
+  private[search] def recordModel(spark: org.apache.spark.sql.SparkSession, path: String,
+                                  cents: Seq[Seq[Double]])(mean: => Double): Unit = {
     import spark.implicits._
-    // model MUST land before stats (the crash-ordering contract), but
-    // the baseline SCAN runs against the caller-held centroids, never
-    // the sidecar — overlap it with the model write and write stats
-    // last (the Sq.recordIvfSqModel convention)
     val (_, m) = graft.io.Par.join2(
-      cents.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("__cluster", "centroid")
+      centroidFrame(spark, cents)
         .coalesce(1) // model state: k × dim doubles, one file
         .write.mode("overwrite").parquet(Sidecars.model(path)),
-      meanAssignSimWith(spark, path, cents, idCol, vecCol))
+      mean)
     Seq(m).toDF("mean_sim")
       .coalesce(1).write.mode("overwrite").parquet(Sidecars.stats(path))
   }
 
-  /** [[meanAssignSim]] against CALLER-HELD centroids (no sidecar
-    * read): same rows, same per-row cosine, same mean — the overlap
-    * form [[recordIvfModel]] uses while its model write is in
-    * flight. */
-  private def meanAssignSimWith(spark: org.apache.spark.sql.SparkSession,
-                                path: String, cents: Seq[Seq[Double]],
-                                idCol: String, vecCol: String): Double = {
-    import spark.implicits._
-    val model = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    dropTombstones(CorpusStore.load(spark, path), path, idCol)
-      .join(broadcast(model), Seq("__cluster"))
-      .agg(avg(VectorOps.cosine(col(vecCol), col("centroid"))).as("m"))
-      .head().getDouble(0)
-  }
-
-  /** Mean cosine between each surviving index row and its ASSIGNED
-    * centroid — since assignment is the cosine argmax, this is the
-    * per-row MAX centroid similarity averaged over the index: one scan
-    * of the index joined to the broadcast k-row model. */
-  private def meanAssignSim(spark: org.apache.spark.sql.SparkSession, path: String,
-                            idCol: String, vecCol: String): Double =
-    dropTombstones(CorpusStore.load(spark, path), path, idCol)
-      .join(broadcast(CorpusStore.load(spark, Sidecars.model(path))), Seq("__cluster"))
+  /** Mean cosine between each row of `rows` and its ASSIGNED centroid
+    * in `model` (both keyed by `__cluster`) — since assignment is the
+    * cosine argmax, this is the per-row MAX centroid similarity
+    * averaged over the rows: one scan joined to the broadcast k-row
+    * model. */
+  private[search] def meanAssignSim(rows: DataFrame, model: DataFrame, vecCol: String): Double =
+    rows.join(broadcast(model), Seq("__cluster"))
       .agg(avg(VectorOps.cosine(col(vecCol), col("centroid"))).as("m"))
       .head().getDouble(0)
 
@@ -574,8 +598,8 @@ object Ann {
     * subtracted, exactly the I/O a compact/retrain rewrite must read)
     * and distinct tombstoned ids. One row `(n_rows, n_tombstones)`.
     * Works on any store honoring the `<path>.tombstones` sidecar
-    * contract — the IVF-PQ codes side reads through
-    * `ivfIndexHealth(spark, s"$path/codes")`. (No id-column parameter:
+    * contract — the codes side of an IVF-PQ or SQ8 store
+    * ([[CodedIvf.codes]]) reads through here. (No id-column parameter:
     * both counts are column-name-free — a silent no-op parameter was
     * round-16 advice item 4.) */
   def ivfIndexHealth(spark: org.apache.spark.sql.SparkSession,
@@ -599,16 +623,23 @@ object Ann {
     * their centroids than the build corpus did — schedule
     * [[retrainIvfIndex]] when it crosses the deployment's threshold. */
   def assignmentDrift(spark: org.apache.spark.sql.SparkSession, path: String,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    drift(spark, path)(meanAssignSim(
+      dropTombstones(CorpusStore.load(spark, path), path, idCol),
+      CorpusStore.load(spark, Sidecars.model(path)), vecCol))
+
+  /** The drift row of the store at `path`: its recorded baseline
+    * (`<path>.stats`), the `current` mean assigned-centroid similarity,
+    * and baseline − current, all round-6 (HALF_UP like the SQL round()
+    * both engines use, [[VectorOps.round6]]). The two reads are
+    * independent, so they overlap. */
+  private[search] def drift(spark: org.apache.spark.sql.SparkSession, path: String)
+                           (current: => Double): DataFrame = {
     import spark.implicits._
-    // HALF_UP like the SQL round() both engines use — the shared
-    // driver-side rounding (VectorOps.round6)
     def r6(x: Double): Double = VectorOps.round6(x)
-    // the recorded baseline and the current mean are independent eager
-    // reads — overlap them (graft.io.Par)
     val (b6, c6) = graft.io.Par.join2(
       r6(CorpusStore.load(spark, Sidecars.stats(path)).head().getDouble(0)),
-      r6(meanAssignSim(spark, path, idCol, vecCol)))
+      r6(current))
     Seq((b6, c6, r6(b6 - c6)))
       .toDF("build_mean_sim", "current_mean_sim", "drift")
   }
@@ -700,10 +731,7 @@ object Ann {
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val qvec = Search.probeVector(query)
     val probes = rangeProbeClusters(spark, path, qvec, tau)
-    dropTombstones(
-      CorpusStore.load(spark, path)
-        .filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
-      path, idCol)
+    probedRows(spark, path, probes, idCol).drop("__cluster")
       .crossJoin(broadcast(query))
       .select(col(idCol),
         round(VectorOps.cosine(col(vecCol), col("qvec")), 6).as("sim"))
@@ -727,12 +755,8 @@ object Ann {
   def centroidOutliers(df: DataFrame, cents: Seq[Seq[Double]], k: Int,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
     df.withColumn("__cluster", assignCluster(col(vecCol), cents))
-      .join(broadcast(centsDf), Seq("__cluster"))
+      .join(broadcast(centroidFrame(df.sparkSession, cents)), Seq("__cluster"))
       .select(col(idCol), col("__cluster").cast("long").as("cluster"),
         VectorOps.cosine6(col(vecCol), col("centroid")).as("sim"))
       .orderBy(col("sim").asc, col(idCol).asc)
@@ -763,9 +787,7 @@ object Ann {
       .select(col("qid"), col("__cluster"))
     val probed = probes.select(col("__cluster")).distinct()
       .collect().map(_.getInt(0)).toSeq
-    dropTombstones(
-      CorpusStore.load(spark, path).filter(col("__cluster").isin(probed: _*)),
-      path, idCol)
+    probedRows(spark, path, probed, idCol)
       .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
       .join(broadcast(queries), Seq("qid"))
       .select(col("qid"), col(idCol),

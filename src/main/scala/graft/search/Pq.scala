@@ -1,10 +1,9 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.store.Sidecars
+import graft.store.{CorpusStore, Sidecars}
 import graft.vector.VectorOps
 
 /** Product quantization (Jégou et al., "Product Quantization for
@@ -31,6 +30,11 @@ import graft.vector.VectorOps
   * O(m), independent of ksub. Scoring is a per-row expression over the
   * byte codes + a broadcast 1-row query; top-k is
   * `TakeOrderedAndProject`.
+  *
+  * The materialized IVF-PQ index (build, append, delete, compact,
+  * retrain and every probe of `<path>/codes` + `<path>/vectors`) is
+  * [[CodedIvf]] with the PQ codec ([[CodedIvf.pq]]); the functions here
+  * are its wrappers.
   */
 object Pq {
 
@@ -272,7 +276,7 @@ object Pq {
     * against the PQ reconstruction encoded in `codes`. Per-subspace
     * dots/norms sum left-to-right in subspace order, matching the
     * oracle's left-associated `d0+d1+…` exactly. */
-  private def adcSim(cb: Codebooks, codes: Column, qvec: Column): Column = {
+  private[search] def adcSim(cb: Codebooks, codes: Column, qvec: Column): Column = {
     def entry(mi: Int): Column =
       element_at(typedlit(cb.books(mi)), element_at(codes, mi + 1).cast("int") + 1)
     val dotSum = (0 until cb.m).map(mi =>
@@ -366,21 +370,13 @@ object Pq {
                         nprobe: Int, cents: Seq[Seq[Double]], cb: Codebooks,
                         idCol: String = "vec_id",
                         vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    val probes = centsDf.crossJoin(broadcast(query))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-      .limit(nprobe)
-      .select(col("__cluster"))
-    val coded = corpus
+    val probes = Ann.probeIds(cents, Search.probeVector(query), nprobe)
+    corpus
       .withColumn("__cluster", Ann.assignCluster(col(vecCol), cents))
-      .join(broadcast(probes), Seq("__cluster"), "left_semi")
+      .filter(col("__cluster").isin(probes: _*))
       .select(col(idCol), col("__cluster"),
         encodeCol(residualOf(col(vecCol), cents, col("__cluster")), cb).as("codes"))
-    coded.crossJoin(broadcast(query))
+      .crossJoin(broadcast(query))
       .select(col(idCol),
         round(adcResidualSim(cb, cents, col("__cluster"), col("codes"),
           col("qvec")), 6).as("sim"))
@@ -399,31 +395,17 @@ object Pq {
   def ivfPqTopK(corpus: DataFrame, query: DataFrame, k: Int, nprobe: Int,
                 numClusters: Int, ivfIters: Int, shortlist: Int, cb: Codebooks,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
     val cents = Ann.kmeansCentroids(corpus, idCol, vecCol, numClusters, ivfIters)
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    val probes = centsDf.crossJoin(broadcast(query))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-      .limit(nprobe)
-      .select(col("__cluster"))
-    val cands = corpus
-      .withColumn("__cluster", Ann.assignCluster(col(vecCol), cents))
-      .join(broadcast(probes), Seq("__cluster"), "left_semi")
-      .drop("__cluster")
+    val probes = Ann.probeIds(cents, Search.probeVector(query), nprobe)
+    val cands = corpus.filter(Ann.assignCluster(col(vecCol), cents).isin(probes: _*))
     adcTopKReranked(cands, query, k, shortlist, cb, idCol, vecCol)
   }
 
-  /** Materialize the IVF-PQ index as a physical layout:
-    *
-    *   `path/codes`   — (id, codes) rows, `partitionBy(__cluster)`:
-    *                    the 8-byte representation, cluster directories
-    *                    prunable at PLAN time;
-    *   `path/vectors` — (id, vector) rows, range-clustered and sorted
-    *                    on the id so parquet footer min/max stats make
-    *                    an id filter prune files AND row groups.
+  /** Materialize the IVF-PQ index as [[CodedIvf]]'s physical layout:
+    * PQ codes partitioned by coarse cluster (directories prunable at
+    * PLAN time), and the float vectors range-clustered and sorted on
+    * the id (parquet footer min/max stats make an id filter prune
+    * files AND row groups).
     *
     * A probe then (1) opens ONLY the probed clusters' code files —
     * file skipping, asserted via scan metrics in PqSpec — (2) ADC-
@@ -434,18 +416,8 @@ object Pq {
     * width, plus the row groups containing the `shortlist` float rows. */
   def buildIvfPqIndex(corpus: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                       path: String, idCol: String = "vec_id",
-                      vecCol: String = "embedding"): Unit = {
-    Sidecars.reset(corpus.sparkSession, path)
-    Sidecars.reset(corpus.sparkSession, s"$path/codes")
-    corpus
-      .withColumn("__cluster", Ann.assignCluster(col(vecCol), cents))
-      .select(col(idCol), col("__cluster"), encodeCol(col(vecCol), cb).as("codes"))
-      .repartition(col("__cluster")) // cluster: one task (not every task) writes a partition
-      .write.partitionBy("__cluster").mode("overwrite").parquet(s"$path/codes")
-    corpus.select(col(idCol), col(vecCol))
-      .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
-      .write.mode("overwrite").parquet(s"$path/vectors")
-  }
+                      vecCol: String = "embedding"): Unit =
+    CodedIvf.build(corpus, cents, CodedIvf.pq(cb), path, idCol, vecCol)
 
   /** Incrementally add vectors to a materialized IVF-PQ index — the
     * reference's core write path is incremental add
@@ -457,33 +429,21 @@ object Pq {
     * and appended into the same `partitionBy(__cluster)` layout, so
     * plan-time pruning keeps working unchanged. Repeated small appends
     * leave one file per batch per cluster; remedy with
-    * [[graft.store.CorpusStore.compact]] per cluster directory (codes)
-    * and over `path/vectors` keyed on the id. */
+    * [[compactIvfPqIndex]], or [[compactIvfPqVectors]] for the vectors
+    * side alone. */
   def appendToIvfPqIndex(delta: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                          path: String, idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Unit = {
-    Sidecars.appended(delta.sparkSession, path)
-    Sidecars.appended(delta.sparkSession, s"$path/codes")
-    delta
-      .withColumn("__cluster", Ann.assignCluster(col(vecCol), cents))
-      .select(col(idCol), col("__cluster"), encodeCol(col(vecCol), cb).as("codes"))
-      .repartition(col("__cluster")) // one file per cluster per append
-      .write.partitionBy("__cluster").mode("append").parquet(s"$path/codes")
-    delta.select(col(idCol), col(vecCol))
-      .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
-      .write.mode("append").parquet(s"$path/vectors")
-  }
+                         vecCol: String = "embedding"): Unit =
+    CodedIvf.append(delta, cents, CodedIvf.pq(cb), path, idCol, vecCol)
 
   /** Tombstone-delete vectors from a materialized IVF-PQ index —
     * [[Ann.deleteFromIvfIndex]]'s contract on the composed index. The
     * anti-join happens on the CODES side only: the rerank reads
     * vectors by shortlist ids, and deleted ids can never enter the
-    * shortlist. [[compactIvfPqVectors]] + a codes-side
-    * [[Ann.compactIvfIndex]] on `<path>/codes` apply deletes
-    * physically. */
+    * shortlist. [[compactIvfPqIndex]] applies deletes physically. */
   def deleteFromIvfPqIndex(ids: DataFrame, path: String,
                            idCol: String = "vec_id"): Unit =
-    Ann.deleteFromIvfIndex(ids, s"$path/codes", idCol)
+    CodedIvf.delete(ids, path, idCol)
 
   /** Re-train an appended/deleted IVF-PQ index from its CURRENT
     * survivors and rewrite it at `dstPath` — [[Ann.retrainIvfIndex]]'s
@@ -503,79 +463,55 @@ object Pq {
                         numClusters: Int, ivfIters: Int,
                         dim: Int, m: Int, ksub: Int, pqIters: Int,
                         idCol: String = "vec_id",
-                        vecCol: String = "embedding"): (Seq[Seq[Double]], Codebooks) = {
-    require(srcPath != dstPath,
-      "retrain rewrites the layout: dstPath must differ from srcPath")
-    val survivors = Ann.dropTombstones(
-      spark.read.parquet(s"$srcPath/vectors"), s"$srcPath/codes", idCol)
-    val cents = Ann.kmeansCentroids(survivors, idCol, vecCol, numClusters, ivfIters)
-    val cb = train(survivors, idCol, vecCol, dim, m, ksub, pqIters)
-    buildIvfPqIndex(survivors, cents, cb, dstPath, idCol, vecCol)
-    (cents, cb)
-  }
+                        vecCol: String = "embedding"): (Seq[Seq[Double]], Codebooks) =
+    CodedIvf.retrain(spark, srcPath, dstPath, idCol, vecCol) { s =>
+      val cents = Ann.kmeansCentroids(s, idCol, vecCol, numClusters, ivfIters)
+      val cb = train(s, idCol, vecCol, dim, m, ksub, pqIters)
+      (cents, CodedIvf.pq(cb), (cents, cb))
+    }
 
   /** Re-sort an appended index's VECTORS side into one id-ordered
-    * layout — the rerank-path twin of [[Ann.compactIvfIndex]] (which
-    * handles the codes side). Each append writes its own id-sorted
+    * layout at `dstPath` — the layout-only half of
+    * [[compactIvfPqIndex]]. Each append writes its own id-sorted
     * files, so after many appends every file's id range overlaps every
     * other's and the rerank's shortlist-IN filter stops skipping row
     * groups; one range-shuffle rewrite restores global id order (and
     * min/max-pruned scans) without touching the codes or the probe
-    * path. Results are unchanged — the layout moves, the rows don't
-    * (pinned in PqSpec). */
+    * path. Deleted rows are kept. Results are unchanged — the layout
+    * moves, the rows don't (pinned in PqSpec). */
   def compactIvfPqVectors(spark: org.apache.spark.sql.SparkSession,
                           srcPath: String, dstPath: String,
                           recordsPerFile: Long = 1L << 20,
                           idCol: String = "vec_id"): Unit =
-    spark.read.parquet(s"$srcPath/vectors")
-      .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
-      .write.option("maxRecordsPerFile", recordsPerFile)
-      .mode("overwrite").parquet(s"$dstPath/vectors")
+    CodedIvf.compactVectors(spark, srcPath, dstPath, recordsPerFile, idCol)
 
   /** Apply tombstones PHYSICALLY to both sides of a materialized
-    * IVF-PQ index in one rewrite at `dstPath`: codes via
-    * [[Ann.compactIvfIndex]] (partition layout kept, tombstoned rows
-    * dropped), and the vectors side anti-joined against the SAME
-    * codes-side tombstones during its id-ordered rewrite. The vectors
-    * half is not optional when a delete precedes a re-append of the
-    * same id (the update path): the codes side would shortlist only
-    * the new row, but the rerank's id filter would match BOTH vector
-    * rows and emit duplicates — [[compactIvfPqVectors]] alone is the
-    * layout-only remedy and keeps deleted rows by design. `dstPath`
-    * starts tombstone-free. */
+    * IVF-PQ index in one rewrite at `dstPath` ([[CodedIvf.compact]]):
+    * codes via [[Ann.compactIvfIndex]] (partition layout kept,
+    * tombstoned rows dropped), and the vectors side anti-joined against
+    * the SAME codes-side tombstones during its id-ordered rewrite. The
+    * vectors half is not optional when a delete precedes a re-append of
+    * the same id (the update path): the rerank's id filter would match
+    * BOTH vector rows and emit duplicates — [[compactIvfPqVectors]]
+    * alone keeps deleted rows by design. `dstPath` starts
+    * tombstone-free. */
   def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                         srcPath: String, dstPath: String,
                         recordsPerFile: Long = 1L << 20,
-                        idCol: String = "vec_id"): Unit = {
-    require(srcPath != dstPath,
-      "compact rewrites the layout: dstPath must differ from srcPath")
-    // the codes side resets and carries inside compactIvfIndex
-    Sidecars.reset(spark, dstPath)
-    Ann.compactIvfIndex(spark, s"$srcPath/codes", s"$dstPath/codes",
-      recordsPerFile, idCol)
-    Ann.dropTombstones(spark.read.parquet(s"$srcPath/vectors"),
-        s"$srcPath/codes", idCol)
-      .repartitionByRange(col(idCol)).sortWithinPartitions(col(idCol))
-      .write.option("maxRecordsPerFile", recordsPerFile)
-      .mode("overwrite").parquet(s"$dstPath/vectors")
-    Sidecars.carry(spark, srcPath, dstPath)
-  }
+                        idCol: String = "vec_id"): Unit =
+    CodedIvf.compact(spark, srcPath, dstPath, recordsPerFile, idCol)
 
   /** The pruned-codes ADC shortlist of a materialized index probe —
     * the codes-only half of [[ivfPqIndexTopK]], exposed so scan-metric
-    * tests can assert file skipping on the codes scan directly. */
+    * tests can assert file skipping on the codes scan directly.
+    * Returns `(id, sim)` with the round-6 ADC score. */
   def ivfPqIndexShortlist(spark: org.apache.spark.sql.SparkSession, path: String,
                           query: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                           nprobe: Int, shortlist: Int,
-                          idCol: String = "vec_id"): DataFrame = {
-    val qvec = Search.probeVector(query)
-    val probes = Ann.probeIds(cents, qvec, nprobe)
-    val codes = Ann.dropTombstones(
-      spark.read.parquet(s"$path/codes")
-        .filter(col("__cluster").isin(probes: _*)).drop("__cluster"),
-      s"$path/codes", idCol)
-    adcTopKCoded(codes, query, shortlist, cb, idCol)
-  }
+                          idCol: String = "vec_id"): DataFrame =
+    CodedIvf.shortlist(spark, path, query,
+      Ann.probeIds(cents, Search.probeVector(query), nprobe), CodedIvf.pq(cb), shortlist,
+      None, 0, idCol)
 
   /** Probe a materialized IVF-PQ index (see [[buildIvfPqIndex]]):
     * driver-ranked probes become a literal IN filter on the partition
@@ -590,16 +526,9 @@ object Pq {
   def ivfPqIndexTopK(spark: org.apache.spark.sql.SparkSession, path: String,
                      query: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                      k: Int, nprobe: Int, shortlist: Int,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val shortIds = ivfPqIndexShortlist(spark, path, query, cents, cb, nprobe, shortlist, idCol)
-      .select(col(idCol)).collect().map(_.get(0)).toSeq
-    spark.read.parquet(s"$path/vectors")
-      .filter(col(idCol).isin(shortIds: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), col("qvec")), 6).as("sim"))
-      .orderBy(col("sim").desc, col(idCol).asc).limit(k)
-  }
+                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    CodedIvf.topK(spark, path, query, cents, CodedIvf.pq(cb), k, shortlist, nprobe, None,
+      idCol, vecCol)
 
   /** FILTERED probe of a materialized IVF-PQ index —
     * [[Ann.ivfIndexTopKFiltered]]'s contract on the composed index:
@@ -614,28 +543,9 @@ object Pq {
   def ivfPqIndexTopKFiltered(spark: org.apache.spark.sql.SparkSession, path: String,
                              query: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                              predicate: Column, k: Int, nprobe: Int, shortlist: Int,
-                             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qvec = Search.probeVector(query)
-    val probes = Ann.probeIds(cents, qvec, nprobe)
-    def survivors(df: DataFrame): DataFrame =
-      Ann.dropTombstones(df, s"$path/codes", idCol)
-        .filter(predicate).drop("__cluster")
-    val probed = survivors(
-      spark.read.parquet(s"$path/codes")
-        .filter(col("__cluster").isin(probes: _*)))
-    val cand =
-      if (probed.limit(k).count() < k)
-        survivors(spark.read.parquet(s"$path/codes"))
-      else probed
-    val shortIds = adcTopKCoded(cand, query, shortlist, cb, idCol)
-      .select(col(idCol)).collect().map(_.get(0)).toSeq
-    spark.read.parquet(s"$path/vectors")
-      .filter(col(idCol).isin(shortIds: _*))
-      .crossJoin(broadcast(query))
-      .select(col(idCol),
-        round(VectorOps.cosine(col(vecCol), col("qvec")), 6).as("sim"))
-      .orderBy(col("sim").desc, col(idCol).asc).limit(k)
-  }
+                             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    CodedIvf.topK(spark, path, query, cents, CodedIvf.pq(cb), k, shortlist, nprobe,
+      Some(predicate), idCol, vecCol)
 
   /** Batch IVF-PQ retrieval — the multi-query production shape (the
     * reference's real workload is a stream of questions, one search per
@@ -644,7 +554,8 @@ object Pq {
     * JOIN, nothing loops per query on the driver:
     *
     *   1. probe selection: (queries × broadcast centroids) + per-qid
-    *      window top-nprobe — Q·k scored rows, Q·nprobe probe rows;
+    *      window top-nprobe ([[Ann.batchProbes]]) — Q·k scored rows,
+    *      Q·nprobe probe rows;
     *   2. candidates: probe rows equi-join corpus codes on the cluster
     *      id (with the index materialized this is the partition key);
     *   3. ADC shortlist per qid (window over the probed codes);
@@ -657,87 +568,34 @@ object Pq {
   def ivfPqTopKBatch(corpus: DataFrame, queries: DataFrame, k: Int, nprobe: Int,
                      cents: Seq[Seq[Double]], shortlist: Int, cb: Codebooks,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    // probe RANKING rounds to 6 like the single-query path: near-tied
-    // centroids must pick the same probe set across engines/runs
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-    val probes = queries.crossJoin(broadcast(centsDf))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
-      .select(col("qid"), col("__cluster"))
-    val coded = corpus.select(col(idCol),
-      Ann.assignCluster(col(vecCol), cents).as("__cluster"),
-      encodeCol(col(vecCol), cb).as("codes"))
-    val cands = coded.join(broadcast(probes), Seq("__cluster")).drop("__cluster")
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    val short = cands.join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        round(adcSim(cb, col("codes"), col("qvec")), 6).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= shortlist)
-      .select(col("qid"), col(idCol))
-    corpus.select(col(idCol), col(vecCol))
-      .join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        VectorOps.cosine6(col(vecCol), col("qvec")).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("sim"))
+    val (probes, probed) = Ann.batchProbes(queries, cents, nprobe)
+    val cands = corpus
+      .select(col(idCol), Ann.assignCluster(col(vecCol), cents).as("__cluster"),
+        encodeCol(col(vecCol), cb).as("codes"))
+      .filter(col("__cluster").isin(probed: _*))
+      .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
+    val short = Ann.perQidTop(
+      cands.join(broadcast(queries), Seq("qid"))
+        .select(col("qid"), col(idCol),
+          round(adcSim(cb, col("codes"), col("qvec")), 6).as("sim")),
+      shortlist, idCol).select(col("qid"), col(idCol))
+    Ann.batchExactTop(corpus.select(col(idCol), col(vecCol)).join(broadcast(short), Seq(idCol)),
+      queries, k, idCol, vecCol)
   }
 
-  /** Batch probe of a MATERIALIZED IVF-PQ index: per-query probe
-    * selection as a join (as [[ivfPqTopKBatch]]), then the union of all
-    * probed clusters becomes a literal IN on the partition column —
-    * ≤ numClusters ints of driver state — so file skipping still
-    * happens at plan time; per-query restriction to each query's own
-    * probes is the (qid, __cluster) equi-join on the pruned scan. */
+  /** Batch probe of a MATERIALIZED IVF-PQ index
+    * ([[CodedIvf.batchTopK]]): per-query probe selection as a join (as
+    * [[ivfPqTopKBatch]]), then the union of all probed clusters becomes
+    * a literal IN on the partition column — ≤ numClusters ints of
+    * driver state — so file skipping still happens at plan time;
+    * per-query restriction to each query's own probes is the
+    * (qid, __cluster) equi-join on the pruned scan. */
   def ivfPqIndexTopKBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                           queries: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                           k: Int, nprobe: Int, shortlist: Int,
-                          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-    val probes = queries.crossJoin(broadcast(centsDf))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
-      .select(col("qid"), col("__cluster"))
-    // union of probed clusters: bounded by numClusters — model-state
-    // scale, same contract as the driver-side probe ranking
-    val probedClusters = probes.select(col("__cluster")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    val codes = Ann.dropTombstones(
-      spark.read.parquet(s"$path/codes")
-        .filter(col("__cluster").isin(probedClusters: _*)),
-      s"$path/codes", idCol)
-    val cands = codes.join(broadcast(probes), Seq("__cluster")).drop("__cluster")
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    val short = cands.join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        round(adcSim(cb, col("codes"), col("qvec")), 6).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= shortlist)
-      .select(col("qid"), col(idCol))
-    spark.read.parquet(s"$path/vectors")
-      .join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        VectorOps.cosine6(col(vecCol), col("qvec")).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("sim"))
-  }
+                          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    CodedIvf.batchTopK(spark, path, queries, cents, CodedIvf.pq(cb), k, shortlist, nprobe,
+      None, idCol, vecCol)
 
   /** The PQ reconstruction of a codes column — per-subspace codebook
     * entries concatenated back into one `array<double>` of length
@@ -774,9 +632,7 @@ object Pq {
   def recordIvfPqRangeStats(spark: org.apache.spark.sql.SparkSession, path: String,
                             cb: Codebooks, idCol: String = "vec_id",
                             vecCol: String = "embedding"): Unit = {
-    val codes = Ann.dropTombstones(
-      spark.read.parquet(s"$path/codes"), s"$path/codes", idCol)
-    val rows = codes.join(spark.read.parquet(s"$path/vectors"), Seq(idCol))
+    val rows = CodedIvf.rows(spark, path, idCol)
     def dist(a: Column, b: Column): Column =
       graft.functions.EuclideanDistance(a, b)
     val normed = rows.select(col("__cluster"),
@@ -792,7 +648,7 @@ object Pq {
       .agg(first(col("mu")).as("mu"), max(col("__d")).as("radius"),
         max(col("__e")).as("qerr"))
       .coalesce(1) // model state: k rows
-      .write.mode("overwrite").parquet(Sidecars.rstats(s"$path/codes"))
+      .write.mode("overwrite").parquet(Sidecars.rstats(CodedIvf.codes(path)))
   }
 
   /** EXACT range search over a materialized IVF-PQ index — every
@@ -819,20 +675,18 @@ object Pq {
                        query: DataFrame, tau: Double, cb: Codebooks,
                        idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val qvec = Search.probeVector(query)
-    val probes = Ann.rangeProbeClusters(spark, s"$path/codes", qvec, tau)
+    val codes = CodedIvf.codes(path)
+    val probes = Ann.rangeProbeClusters(spark, codes, qvec, tau)
     // per-cluster qerr for the probed set — k rows of model state
-    val qerrs = spark.read.parquet(Sidecars.rstats(s"$path/codes"))
+    val qerrs = CorpusStore.load(spark, Sidecars.rstats(codes))
       .filter(col("__cluster").isin(probes: _*))
       .select(col("__cluster"), col("qerr"))
-    val cand = Ann.dropTombstones(
-        spark.read.parquet(s"$path/codes")
-          .filter(col("__cluster").isin(probes: _*)),
-        s"$path/codes", idCol)
+    val cand = Ann.probedRows(spark, codes, probes, idCol)
       .join(broadcast(qerrs), Seq("__cluster"))
       .crossJoin(broadcast(query))
       .filter(adcSim(cb, col("codes"), col("qvec")) + col("qerr") + lit(1e-6) >= tau)
       .select(col(idCol))
-    spark.read.parquet(s"$path/vectors")
+    CorpusStore.load(spark, CodedIvf.vectors(path))
       .join(broadcast(cand), Seq(idCol), "left_semi")
       .crossJoin(broadcast(query))
       .select(col(idCol),
@@ -844,16 +698,13 @@ object Pq {
     * survivors: avg over rows of `‖x̂ − r̂‖` (normalized vector vs its
     * normalized PQ reconstruction) — one codes ⋈ vectors scan. */
   private def meanReconError(spark: org.apache.spark.sql.SparkSession, path: String,
-                             cb: Codebooks, idCol: String, vecCol: String): Double = {
-    val codes = Ann.dropTombstones(
-      spark.read.parquet(s"$path/codes"), s"$path/codes", idCol)
-    codes.join(spark.read.parquet(s"$path/vectors"), Seq(idCol))
+                             cb: Codebooks, idCol: String, vecCol: String): Double =
+    CodedIvf.rows(spark, path, idCol)
       .select(graft.functions.EuclideanDistance(
         graft.functions.L2Normalize(col(vecCol)),
         graft.functions.L2Normalize(reconstructCol(col("codes"), cb)))
         .as("__e"))
       .agg(avg(col("__e"))).head().getDouble(0)
-  }
 
   /** Record the reconstruction-error BASELINE at `<path>/codes.qstats`
     * — the PQ half of the drift story [[Ann.recordIvfModel]] covers
@@ -867,7 +718,7 @@ object Pq {
                        vecCol: String = "embedding"): Unit = {
     import spark.implicits._
     Seq(meanReconError(spark, path, cb, idCol, vecCol)).toDF("mean_err")
-      .coalesce(1).write.mode("overwrite").parquet(Sidecars.qstats(s"$path/codes"))
+      .coalesce(1).write.mode("overwrite").parquet(Sidecars.qstats(CodedIvf.codes(path)))
   }
 
   /** Codebook-staleness drift vs the recorded baseline — the
@@ -884,7 +735,7 @@ object Pq {
     def r6(x: Double): Double = VectorOps.round6(x)
     // baseline + current error are independent eager reads — overlap
     val (b6, c6) = graft.io.Par.join2(
-      r6(spark.read.parquet(Sidecars.qstats(s"$path/codes")).head().getDouble(0)),
+      r6(CorpusStore.load(spark, Sidecars.qstats(CodedIvf.codes(path))).head().getDouble(0)),
       r6(meanReconError(spark, path, cb, idCol, vecCol)))
     Seq((b6, c6, r6(c6 - b6)))
       .toDF("build_mean_err", "current_mean_err", "drift")
@@ -906,59 +757,9 @@ object Pq {
   def ivfPqIndexTopKFilteredBatch(spark: org.apache.spark.sql.SparkSession, path: String,
                                   queries: DataFrame, cents: Seq[Seq[Double]], cb: Codebooks,
                                   predicate: Column, k: Int, nprobe: Int, shortlist: Int,
-                                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import spark.implicits._
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("__cluster", "centroid")
-    val wProbe = Window.partitionBy(col("qid"))
-      .orderBy(col("csim").desc, col("__cluster").asc)
-    val probes = queries.crossJoin(broadcast(centsDf))
-      .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
-      .withColumn("__rn", row_number().over(wProbe))
-      .filter(col("__rn") <= nprobe)
-      .select(col("qid"), col("__cluster"))
-    val probedClusters = probes.select(col("__cluster")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    def survivors(df: DataFrame): DataFrame =
-      Ann.dropTombstones(df, s"$path/codes", idCol).filter(predicate)
-    val codesAll = spark.read.parquet(s"$path/codes")
-    val probedCands = survivors(
-        codesAll.filter(col("__cluster").isin(probedClusters: _*)))
-      .join(broadcast(probes), Seq("__cluster")).drop("__cluster")
-    // the fallback check: matching-candidate count per qid in ONE
-    // bounded aggregate (vs the single-query form's limit(k).count());
-    // a qid with zero matches is absent from the counts — the left
-    // join + coalesce keeps it in the fallback set
-    val counts = probedCands.groupBy(col("qid")).agg(count(lit(1)).as("__n"))
-    val fbQids = queries.select(col("qid"))
-      .join(counts, Seq("qid"), "left")
-      .filter(coalesce(col("__n"), lit(0L)) < k)
-      .select(col("qid")).collect().map(_.get(0)).toSeq
-    val cands =
-      if (fbQids.isEmpty) probedCands
-      else {
-        val fbFrame = queries.filter(col("qid").isin(fbQids: _*)).select(col("qid"))
-        probedCands.filter(!col("qid").isin(fbQids: _*))
-          .unionByName(survivors(codesAll).drop("__cluster")
-            .crossJoin(broadcast(fbFrame)))
-      }
-    val wTop = Window.partitionBy(col("qid"))
-      .orderBy(col("sim").desc, col(idCol).asc)
-    val short = cands.join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        round(adcSim(cb, col("codes"), col("qvec")), 6).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= shortlist)
-      .select(col("qid"), col(idCol))
-    spark.read.parquet(s"$path/vectors")
-      .join(broadcast(short), Seq(idCol))
-      .join(broadcast(queries), Seq("qid"))
-      .select(col("qid"), col(idCol),
-        VectorOps.cosine6(col(vecCol), col("qvec")).as("sim"))
-      .withColumn("__rn", row_number().over(wTop))
-      .filter(col("__rn") <= k)
-      .select(col("qid"), col(idCol), col("sim"))
-  }
+                                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
+    CodedIvf.batchTopK(spark, path, queries, cents, CodedIvf.pq(cb), k, shortlist, nprobe,
+      Some(predicate), idCol, vecCol)
 
   /** The production PQ pipeline: ADC shortlists `shortlist` candidates
     * from the compressed codes, then ONLY those rows re-read their

@@ -1347,7 +1347,7 @@ object Maintenance {
           "compact" -> col("n_edge_rows")) } ++
       ivfPq.map { case (n, p, _) =>
         costRows("ivfpq", n,
-          graft.search.Ann.ivfIndexHealth(spark, s"$p/codes"),
+          graft.search.Ann.ivfIndexHealth(spark, graft.search.CodedIvf.codes(p)),
           "retrain" -> col("n_rows")) } ++
       sq.map { case (n, p) =>
         costRows("sq8", n, graft.search.Sq.ivfSqHealth(spark, p),

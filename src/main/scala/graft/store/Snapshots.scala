@@ -227,9 +227,10 @@ object Snapshots {
     }
   }
 
-  /** [[syncIvfIndex]]'s contract on the composed IVF-PQ index: diff
-    * drives tombstone-delete (codes side owns delete state), a
-    * BOTH-SIDES compaction ([[graft.search.Pq.compactIvfPqIndex]] —
+  /** [[syncIvfIndex]]'s contract on the composed IVF-PQ index
+    * ([[graft.search.CodedIvf.sync]]): diff drives tombstone-delete
+    * (codes side owns delete state), a BOTH-SIDES compaction
+    * ([[graft.search.Pq.compactIvfPqIndex]] —
     * the vectors side must drop tombstoned ids too, or a changed doc's
     * re-append would leave two vector rows under one id and duplicate
     * the rerank output), then append against the existing centroids
@@ -238,17 +239,9 @@ object Snapshots {
   def syncIvfPqIndex(spark: SparkSession, path: String, from: String, to: String,
                      idCol: String, vecCol: String, cents: Seq[Seq[Double]],
                      cb: graft.search.Pq.Codebooks,
-                     srcIdx: String, dstIdx: String): Unit = {
-    val d = diffBy(spark, path, from, to, idCol, vecCol, _.cast("string"))
-    graft.search.Pq.deleteFromIvfPqIndex(
-      d.filter(col("status").isin("removed", "changed")).select(col(idCol)),
-      srcIdx, idCol)
-    graft.search.Pq.compactIvfPqIndex(spark, srcIdx, dstIdx, idCol = idCol)
-    val fresh = read(spark, path, to).join(
-      d.filter(col("status").isin("added", "changed")).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    graft.search.Pq.appendToIvfPqIndex(fresh, cents, cb, dstIdx, idCol, vecCol)
-  }
+                     srcIdx: String, dstIdx: String): Unit =
+    graft.search.CodedIvf.sync(spark, path, from, to, idCol, vecCol, cents,
+      graft.search.CodedIvf.pq(cb), srcIdx, dstIdx)
 
   /** [[syncIvfPqIndex]]'s contract on the SQ8-IVF index — the middle
     * rung of the compression ladder gets the same snapshot-driven
@@ -263,17 +256,9 @@ object Snapshots {
     * oracle-pinned). */
   def syncIvfSqIndex(spark: SparkSession, path: String, from: String, to: String,
                      idCol: String, vecCol: String, cents: Seq[Seq[Double]],
-                     srcIdx: String, dstIdx: String): Unit = {
-    val d = diffBy(spark, path, from, to, idCol, vecCol, _.cast("string"))
-    graft.search.Sq.deleteFromIvfSqIndex(
-      d.filter(col("status").isin("removed", "changed")).select(col(idCol)),
-      srcIdx, idCol)
-    graft.search.Sq.compactIvfSqIndex(spark, srcIdx, dstIdx, idCol = idCol)
-    val fresh = read(spark, path, to).join(
-      d.filter(col("status").isin("added", "changed")).select(col(idCol)),
-      Seq(idCol), "left_semi")
-    graft.search.Sq.appendToIvfSqIndex(fresh, cents, dstIdx, idCol, vecCol)
-  }
+                     srcIdx: String, dstIdx: String): Unit =
+    graft.search.CodedIvf.sync(spark, path, from, to, idCol, vecCol, cents,
+      graft.search.CodedIvf.sq8, srcIdx, dstIdx)
 
   /** The latest row per id ACROSS a sequence of snapshots — last-wins
     * SCD-1 (the `upsert_latest` operator composed with the store):

@@ -202,7 +202,7 @@ object StreamIngest {
           if (batch.isEmpty) ()
           else {
             graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
-            if (graft.io.Fs.exists(batch.sparkSession, Sidecars.qstats(s"$path/codes")))
+            if (graft.io.Fs.exists(batch.sparkSession, Sidecars.qstats(graft.search.CodedIvf.codes(path))))
               logFired(path, batchId, rules)(
                 graft.store.Maintenance.pqSignals(
                   graft.search.Pq.reconstructionDrift(batch.sparkSession,
@@ -483,7 +483,7 @@ object StreamIngest {
   private def ivfPqDrainCosts(s: SparkSession, path: String,
                               indexName: String): DataFrame = {
     import s.implicits._
-    val n = graft.search.Ann.ivfIndexHealth(s, s"$path/codes").head()
+    val n = graft.search.Ann.ivfIndexHealth(s, graft.search.CodedIvf.codes(path)).head()
       .getAs[Long]("n_rows")
     Seq(("ivfpq", indexName, "retrain", n))
       .toDF("index_kind", "index_name", "action", "cost_rows")
@@ -613,7 +613,7 @@ object StreamIngest {
       idCol: String, vecCol: String): Unit = {
     val s = batch.sparkSession
     graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
-    if (graft.io.Fs.exists(s, Sidecars.qstats(s"$path/codes")))
+    if (graft.io.Fs.exists(s, Sidecars.qstats(graft.search.CodedIvf.codes(path))))
       logFired(path, batchId, rules)(
         graft.store.Maintenance.pqSignals(
           graft.search.Pq.reconstructionDrift(s, path, cb, idCol, vecCol),
