@@ -202,7 +202,8 @@ object StreamIngest {
           if (batch.isEmpty) ()
           else {
             graft.search.Pq.appendToIvfPqIndex(batch, cents, cb, path, idCol, vecCol)
-            if (graft.io.Fs.exists(batch.sparkSession, Sidecars.qstats(graft.search.CodedIvf.codes(path))))
+            if (graft.io.Fs.exists(batch.sparkSession,
+                Sidecars.qstats(graft.search.CodedIvf.codes(path))))
               logFired(path, batchId, rules)(
                 graft.store.Maintenance.pqSignals(
                   graft.search.Pq.reconstructionDrift(batch.sparkSession,
