@@ -2744,21 +2744,16 @@ object SparkEntry {
     // ~nprobe/k of the corpus). Model trains once; the four probe
     // scans share the bucketed assignment.
     "ann_nprobe_curve" -> ((s, dir) => {
-      import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val q = queryVec(s, dir)
       val exact = Search.knn(emb, q, 5).select(col("vec_id"))
       val cents = kmeansCents10(s, dir)
-      val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-        .toDF("__cluster", "centroid")
-      val ranked = centsDf.crossJoin(broadcast(q))
-        .withColumn("csim", round(VectorOps.cosine(col("centroid"), col("qvec")), 6))
+      val qv = Search.probeVector(q)
       val bucketed = emb.withColumn("__cluster",
         Ann.assignCluster(col("embedding"), cents))
       Seq(1, 2, 4, 8).map { np =>
-        val probes = ranked.orderBy(col("csim").desc, col("__cluster").asc)
-          .limit(np).select(col("__cluster"))
-        Search.knn(bucketed.join(broadcast(probes), Seq("__cluster"), "left_semi")
+        val probes = Ann.probeIds(cents, qv, np)
+        Search.knn(bucketed.filter(col("__cluster").isin(probes: _*))
             .drop("__cluster"), q, 5)
           .select(col("vec_id"))
           .join(exact, Seq("vec_id"), "left_semi")

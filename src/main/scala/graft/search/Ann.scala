@@ -1,8 +1,12 @@
 package graft.search
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 import graft.store.{CorpusStore, ServingSnapshot, Sidecars}
 import graft.vector.VectorOps
@@ -139,19 +143,40 @@ object Ann {
   private final class Partial(val clusters: Array[Int], val sums: Array[Double],
                               val counts: Array[Long])
 
+  /** The one dimension of every held vector, or None where a driver
+    * pass could not match the Spark plan's expressions exactly: no rows,
+    * a NULL vector or element, mixed dimensions, or dimension 0. */
+  private def heldDim(held: IndexedSeq[ServingSnapshot.Held]): Option[Int] =
+    held.find(_.ids.nonEmpty).map(b => b.off(1) - b.off(0)).filter { d =>
+      // a NULL vector or element holds no values, so it reads as
+      // dimension 0: one dimension above 0 throughout refuses it too
+      d > 0 && held.forall(b => b.ids.indices.forall(i => b.off(i + 1) - b.off(i) == d))
+    }
+
+  /** Runs `body` with a pool of at most `parallelism` threads, one per
+    * held block at most, or none where one thread would do. */
+  private def withPool[A](held: IndexedSeq[ServingSnapshot.Held], parallelism: Int)(
+      body: Option[java.util.concurrent.ExecutorService] => A): A = {
+    val threads = math.max(1, math.min(parallelism, held.size))
+    val pool = if (threads > 1) Some(java.util.concurrent.Executors.newFixedThreadPool(threads))
+      else None
+    try body(pool) finally pool.foreach(_.shutdown())
+  }
+
+  /** `f` of every held block, in block order, on the pool's threads. */
+  private def perBlock[A](held: IndexedSeq[ServingSnapshot.Held],
+                          pool: Option[java.util.concurrent.ExecutorService])(
+      f: ServingSnapshot.Held => A): IndexedSeq[A] =
+    pool.fold(held.map(f)) { p =>
+      held.map(b => p.submit(new java.util.concurrent.Callable[A] { def call(): A = f(b) }))
+        .map(_.get())
+    }
+
   /** [[kmeansCentroids]] over held blocks on the driver, or None where
-    * it could not match the Spark plan exactly: no rows, a NULL vector
-    * or element, mixed dimensions, or dimension 0. */
+    * it could not match the Spark plan exactly ([[heldDim]]). */
   private def kmeansHeld(held: IndexedSeq[ServingSnapshot.Held], k: Int, iters: Int,
-                         parallelism: Int): Option[Seq[Seq[Double]]] = {
+                         parallelism: Int): Option[Seq[Seq[Double]]] = heldDim(held).map { d =>
     val rows = held.iterator.map(_.ids.length).sum
-    if (rows == 0) return None
-    val first = held.find(_.ids.nonEmpty).get
-    val d = first.off(1) - first.off(0)
-    // a NULL vector or element holds no values, so it reads as dimension
-    // 0: one dimension above 0 throughout refuses it too
-    if (d == 0 || held.exists(b => b.ids.indices.exists(i => b.off(i + 1) - b.off(i) != d)))
-      return None
     // init: the k lowest ids, NULL first; equal ids keep block, then row, order
     val order = held.indices.iterator.flatMap(bi => held(bi).ids.indices.map(ri => (bi, ri)))
       .toArray.sortBy { case (bi, ri) =>
@@ -164,18 +189,10 @@ object Ann {
       val b = held(bi)
       System.arraycopy(b.vec, b.off(ri), mat, c * d, d)
     }
-    val threads = math.max(1, math.min(parallelism, held.size))
-    val pool = if (threads > 1 && iters > 0) Some(java.util.concurrent.Executors.newFixedThreadPool(threads))
-      else None
-    try {
+    if (iters > 0) withPool(held, parallelism) { pool =>
       (0 until iters).foreach { _ =>
         val norms = graft.functions.NearestCentroid.norms(mat, kk, d)
-        def partial(b: ServingSnapshot.Held): Partial = lloydPartial(b, mat, norms, kk, d)
-        val parts = pool.fold(held.map(partial)) { p =>
-          held.map(b => p.submit(new java.util.concurrent.Callable[Partial] {
-            def call(): Partial = partial(b)
-          })).map(_.get())
-        }
+        val parts = perBlock(held, pool)(lloydPartial(_, mat, norms, kk, d))
         val sums = new Array[Double](kk * d)
         val counts = new Array[Long](kk)
         parts.foreach { p =>
@@ -197,8 +214,8 @@ object Ann {
           c += 1
         }
       }
-    } finally pool.foreach(_.shutdown())
-    Some((0 until kk).map(c => mat.slice(c * d, (c + 1) * d).toSeq))
+    }
+    (0 until kk).map(c => mat.slice(c * d, (c + 1) * d).toSeq)
   }
 
   /** One block's assignments against `mat`, then its [[Partial]]. */
@@ -320,13 +337,69 @@ object Ann {
     * of [[ivfTopKKMeans]]'s left_semi probe: with the cluster as a
     * physical partition column, a probe filter is PARTITION PRUNING —
     * files of non-probed clusters are never opened, so an
-    * nprobe/k probe scans ~nprobe/k of the corpus bytes. */
+    * nprobe/k probe scans ~nprobe/k of the corpus bytes. Two paths
+    * write the same rows, one file per cluster:
+    *
+    *  - A bare scan of a small store, which
+    *    [[graft.store.ServingSnapshot.serveRows]] accepts under the
+    *    bound [[kmeansCentroids]] uses, is assigned on the driver from
+    *    the held vectors (the generation the k-means just loaded): one
+    *    `NearestCentroid.nearest` pass per held block. Its rows, grouped
+    *    so that each cluster sits in exactly one of at most
+    *    `defaultParallelism` partitions and ordered by cluster, then in
+    *    the order the plan's scan reads them, are written through one
+    *    frame that declares that order, so the write is one job with no
+    *    scan, no exchange and no sort. The rows travel inside the write tasks, so Spark logs a
+    *    "task of very large size" warning; the snapshot bound caps them.
+    *  - Any other input runs the Spark plan: every row's
+    *    [[assignCluster]], a shuffle by cluster and the write. So does a
+    *    held store the driver path cannot assign as the expression does
+    *    (no rows, a NULL vector or element, mixed dimensions, or a
+    *    dimension other than the centroids'), or one that already has
+    *    a `__cluster` column; there the plan's rows or error stand. */
   def buildIvfIndex(corpus: DataFrame, cents: Seq[Seq[Double]], path: String,
                     vecCol: String = "embedding"): Unit = {
     Sidecars.reset(corpus.sparkSession, path)
-    corpus.withColumn("__cluster", assignCluster(col(vecCol), cents))
-      .repartition(col("__cluster")) // cluster: one task (not every task) writes a partition
+    val assigned = corpus.withColumn("__cluster", assignCluster(col(vecCol), cents))
+    ServingSnapshot.serveRows(corpus, vecCol)
+      .filterNot(_.fields.exists(_.name == "__cluster"))
+      .flatMap(clusteredHeld(_, cents, assigned))
+      .getOrElse(assigned.repartition(col("__cluster"))) // cluster: one task (not every task) writes a partition
       .write.partitionBy("__cluster").mode("overwrite").parquet(path)
+  }
+
+  /** [[buildIvfIndex]]'s rows from the held store, assigned on the
+    * driver, as a frame with the schema of the plan's `assigned` rows
+    * (the corpus columns, then `__cluster`) ordered by cluster, or None
+    * where [[heldDim]] refuses or the centroids have another dimension. */
+  private def clusteredHeld(s: ServingSnapshot.Served, cents: Seq[Seq[Double]],
+                            assigned: DataFrame): Option[DataFrame] = {
+    val spark = assigned.sparkSession
+    val held = s.held
+    heldDim(held).filter(d => cents.forall(_.size == d)).map { d =>
+      val k = cents.size
+      val mat = cents.flatten.toArray
+      val norms = graft.functions.NearestCentroid.norms(mat, k, d)
+      val parallelism = spark.sparkContext.defaultParallelism
+      val assign = withPool(held, parallelism)(perBlock(held, _) { b =>
+        Array.tabulate(b.ids.length)(i =>
+          graft.functions.NearestCentroid.nearest(mat, norms, d, b.vec, b.off(i)))
+      })
+      val byCluster = Array.fill(k)(Seq.newBuilder[InternalRow])
+      for (bi <- s.scanOrder; ri <- assign(bi).indices) {
+        val c = assign(bi)(ri)
+        byCluster(c) += new GenericInternalRow(s.values(bi, ri) :+ c)
+      }
+      val clusters = byCluster.map(_.result())
+      // cluster c starts at row `start(c)` of the cluster-ordered rows and
+      // goes to partition start(c) · parallelism / rows: contiguous
+      // cluster ranges of about equal rows, each cluster in one partition
+      val start = clusters.scanLeft(0L)(_ + _.size)
+      val parts = clusters.indices.filter(clusters(_).nonEmpty)
+        .groupBy(c => start(c) * parallelism / start(k)).toSeq.sortBy(_._1)
+        .map(_._2.flatMap(clusters(_)))
+      PlanBridge.rowsFrame(spark, assigned.schema, parts, Seq("__cluster"))
+    }
   }
 
   /** Incrementally add vectors to a materialized IVF index — the

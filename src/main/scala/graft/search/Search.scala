@@ -78,7 +78,7 @@ object Search {
   /** [[queryVector]] for the index probes, which rank clusters before
     * they score rows: a 0-row query probes with an empty vector, and
     * the probe's own scoring of the (empty) query then yields no rows. */
-  private[search] def probeVector(query: DataFrame): Seq[Double] =
+  private[graft] def probeVector(query: DataFrame): Seq[Double] =
     queryVector(query).getOrElse(Array.empty[Double]).toSeq
 
   /** The values of array column `name` of a frame built from driver

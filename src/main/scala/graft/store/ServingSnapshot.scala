@@ -52,16 +52,20 @@ import graft.vector.VectorOps
   * Readers, all through [[serve]] and all under the same bound (the
   * store's on-disk bytes at most `spark.sql.autoBroadcastJoinThreshold`):
   * `Search.knn`, the IVF probe, the batch `Search.similarityJoin`, and
-  * the k-means of an IVF build (`Ann.kmeansCentroids`), which runs its
-  * whole Lloyd loop over the held vectors ([[Served.held]]).
+  * both steps of an IVF build: the k-means (`Ann.kmeansCentroids`),
+  * which runs its whole Lloyd loop over the held vectors
+  * ([[Served.held]]), and the index write (`Ann.buildIvfIndex`, through
+  * [[serveRows]]), which assigns the held vectors and writes every held
+  * row ([[Served.values]]) grouped by cluster.
   */
 object ServingSnapshot {
 
-  /** One held data file's ids and vectors, for a driver pass that needs
-    * no result rows (k-means). Row `i`'s id is `ids(i)`, NULL when
-    * `idNull(i)`; its vector is `vec[off(i), off(i + 1))`, an empty
-    * range when the vector is NULL or holds a NULL element. The arrays
-    * are the snapshot's own: read them, never write them. */
+  /** One held data file's ids and vectors, for a driver pass over the
+    * held vectors (k-means, the IVF build's assignment). Row `i`'s id
+    * is `ids(i)`, NULL when `idNull(i)`; its vector is
+    * `vec[off(i), off(i + 1))`, an empty range when the vector is NULL
+    * or holds a NULL element. The arrays are the snapshot's own: read
+    * them, never write them. */
   sealed trait Held {
     def ids: Array[Long]
     def idNull: Array[Boolean]
@@ -72,10 +76,11 @@ object ServingSnapshot {
   /** One data file's rows, packed. Row `i`'s vector is
     * `vec[off(i), off(i + 1))`; rows whose vector is NULL or holds a
     * NULL element (their similarity is NULL) keep the original value in
-    * `odd` instead. `rest` holds the row's other data columns. */
+    * `odd` instead. `rest` holds the row's other data columns; `fileLen`
+    * is the file's length in bytes. */
   private final case class Block(
       ids: Array[Long], idNull: Array[Boolean], vec: Array[Double], off: Array[Int],
-      odd: Map[Int, ArrayData], rest: Array[InternalRow]) extends Held {
+      odd: Map[Int, ArrayData], rest: Array[InternalRow], fileLen: Long) extends Held {
     def n: Int = ids.length
     lazy val bytes: Long = 8L * vec.length + 12L * n +
       rest.iterator.map {
@@ -125,7 +130,8 @@ object ServingSnapshot {
     * query side widens its nullability). The generation is brought up
     * to date on first use of [[held]], [[rows]], [[rowBytes]] or
     * [[topK]], so a caller can still refuse its input before any file
-    * is listed or read. */
+    * is listed or read. The IVF build reads every held row through
+    * [[values]]. */
   final class Served private[ServingSnapshot] (
       val fields: Seq[StructField], val sim: StructField,
       load: () => IndexedSeq[(Block, InternalRow)],
@@ -150,9 +156,22 @@ object ServingSnapshot {
       * over the held rows scores them all. */
     def topK(qs: Seq[Array[Double]], k: Int): Seq[Seq[(Array[Any], Any)]] =
       select(chosen.map(_._1), qs, k, dead).map(_.map { case (bi, ri, s) =>
-        val (b, pv) = chosen(bi)
-        (getters.iterator.map(_(b, pv, ri)).toArray, if (b.odd.contains(ri)) null else s)
+        (values(bi, ri), if (chosen(bi)._1.odd.contains(ri)) null else s)
       })
+
+    /** The held blocks' indices in the order a Spark scan of the store
+      * reads their files: longest file first, equal lengths in listing
+      * order (`FileSourceScanExec` packs files into tasks so). Rows
+      * written in this order keep the order the Spark plan's shuffle
+      * gives each cluster's rows, so the files come out the same. */
+    def scanOrder: IndexedSeq[Int] = chosen.indices.sortBy(bi => -chosen(bi)._1.fileLen)
+
+    /** Row `ri` of held block `bi`: its values of `fields`, the vector
+      * rebuilt in its stored element type. */
+    def values(bi: Int, ri: Int): Array[Any] = {
+      val (b, pv) = chosen(bi)
+      getters.iterator.map(_(b, pv, ri)).toArray
+    }
   }
 
   /** The snapshot of `corpus` (brought up to its current generation on
@@ -205,6 +224,20 @@ object ServingSnapshot {
       }
       new Served(outFields, sim, () => chosen(), getters, dead)
     }
+
+  /** [[serve]] for a reader of every held row that needs no id (the IVF
+    * build): its id column is the one of the generation already held
+    * for the store over the same columns, so it reuses what k-means
+    * loaded, else the first integral data column. */
+  private[graft] def serveRows(corpus: DataFrame, vecCol: String): Option[Served] =
+    bareScan(corpus).flatMap { case (rel, output) =>
+      val root = rel.location.rootPaths.head.toString
+      val parts = rel.partitionSchema
+      entries.synchronized(Option(entries.get(root))).map(_.layout).collect {
+        case (o, p, opts, id, v) if (o, p, opts, v) == ((output, parts, rel.options, vecCol)) => id
+      }.orElse(output.find(f => isIntegral(f.dataType) && !parts.fieldNames.contains(f.name))
+        .map(_.name))
+    }.flatMap(serve(corpus, _, vecCol))
 
   /** The ids of a bare scan (tombstones), as longs. None when the
     * column is not integral. One collect per generation: the result is
@@ -299,12 +332,12 @@ object ServingSnapshot {
     val isFloat = required.last.dataType.asInstanceOf[ArrayType].elementType == FloatType
     dirs.flatMap(d => d.files.map(f =>
       key(f.fileStatus) -> pack(read(f, d.values), restRow, rest.size, rest.indexOf(idCol),
-        idType, isFloat))).toMap
+        idType, isFloat, f.getLen))).toMap
   }
 
   /** One file's rows `(rest columns..., vector)` → its packed block. */
   private def pack(rows: Iterator[InternalRow], restRow: UnsafeProjection, vecOrd: Int,
-                   idOrd: Int, idType: DataType, isFloat: Boolean): Block = {
+                   idOrd: Int, idType: DataType, isFloat: Boolean, fileLen: Long): Block = {
     val ids = mutable.ArrayBuilder.make[Long]
     val idNull = mutable.ArrayBuilder.make[Boolean]
     val vec = mutable.ArrayBuilder.make[Double]
@@ -342,7 +375,8 @@ object ServingSnapshot {
       off += len
       n += 1
     }
-    Block(ids.result(), idNull.result(), vec.result(), off.result(), odd.toMap, rest.result())
+    Block(ids.result(), idNull.result(), vec.result(), off.result(), odd.toMap, rest.result(),
+      fileLen)
   }
 
   private def vectorOf(b: Block, i: Int, isFloat: Boolean): Any =

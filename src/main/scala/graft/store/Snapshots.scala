@@ -37,9 +37,10 @@ object Snapshots {
 
   /** Read one snapshot — the `__snap` filter is a partition filter, so
     * only that snapshot's files are opened (asserted via scan metrics
-    * in SnapshotsSpec). */
+    * in SnapshotsSpec). The store is opened through
+    * [[CorpusStore.load]], so a read runs no schema-inference job. */
   def read(spark: SparkSession, path: String, name: String): DataFrame =
-    spark.read.parquet(path).filter(col(SnapCol) === name).drop(SnapCol)
+    CorpusStore.load(spark, path).filter(col(SnapCol) === name).drop(SnapCol)
 
   /** Snapshot names present in the store, from partition-directory
     * listing only — a real filesystem listing (Spark's metadata-only
@@ -271,7 +272,7 @@ object Snapshots {
     }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(idCol)).orderBy(col("__prec").desc)
-    spark.read.parquet(path)
+    CorpusStore.load(spark, path)
       .filter(col(SnapCol).isin(order: _*))
       .withColumn("__prec", prec)
       .withColumn("__rn", row_number().over(w))

@@ -4,7 +4,13 @@ import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.Exchange
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.io.Fs
 import graft.search.{Ann, Search}
@@ -186,10 +192,18 @@ class ServingSnapshotSpec extends SparkSpec {
 
   /** Jobs, tasks and shuffle bytes (written + read) of `body`. */
   private def listened(body: => Unit): (Int, Int, Long) = {
+    val (jobs, tasks, shuffled, _) = measured(body)
+    (jobs, tasks, shuffled)
+  }
+
+  /** Jobs, tasks, shuffle bytes (written + read) and input bytes read
+    * of `body`. */
+  private def measured(body: => Unit): (Int, Int, Long, Long) = {
     val group = s"snap-${System.nanoTime()}"
     val jobs = new AtomicInteger
     val tasks = new AtomicInteger
     val shuffled = new AtomicLong
+    val read = new AtomicLong
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
     val l = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
@@ -199,8 +213,10 @@ class ServingSnapshotSpec extends SparkSpec {
       override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
         if (stages.contains(e.stageId)) {
           tasks.incrementAndGet()
-          Option(e.taskMetrics).foreach(m => shuffled.addAndGet(
-            m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead))
+          Option(e.taskMetrics).foreach { m =>
+            shuffled.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
+            read.addAndGet(m.inputMetrics.bytesRead)
+          }
         }
     }
     spark.sparkContext.addSparkListener(l)
@@ -208,7 +224,7 @@ class ServingSnapshotSpec extends SparkSpec {
       spark.sparkContext.setJobGroup(group, "serving snapshot spec")
       try body finally spark.sparkContext.clearJobGroup()
       Thread.sleep(500) // listener events arrive asynchronously
-      (jobs.get, tasks.get, shuffled.get)
+      (jobs.get, tasks.get, shuffled.get, read.get)
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
@@ -575,5 +591,188 @@ class ServingSnapshotSpec extends SparkSpec {
     assert(f.packed(Array(9.0, 1.0, 0.0), 1, 2, Array(3.0, 0.0)) == 1.0)
     assert(f.packed(Array(0.0, 0.0), 0, 2, Array(1.0, 1.0)) == 0.0)
     assert(f.packed(Array(1.0), 0, 1, Array(1.0, 1.0)) == -1.0)
+  }
+
+  // ------------------------------------------------------------- IVF build
+
+  /** The executed plans of the writes to `path` that `body` runs. */
+  private def writePlans(path: String)(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val l = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (nodes(qe.executedPlan).exists {
+          case w: DataWritingCommandExec => w.cmd match {
+            case i: InsertIntoHadoopFsRelationCommand => i.outputPath.toUri.getPath == path
+            case _ => false
+          }
+          case _ => false
+        }) plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(l)
+    try {
+      body
+      Thread.sleep(500) // listener events arrive asynchronously
+      plans.toArray(Array.empty[SparkPlan]).toSeq
+    } finally spark.listenerManager.unregister(l)
+  }
+
+  /** Every node of an executed plan: adaptive stages, and the initial
+    * plan an adaptive one replaced, included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => a +: (nodes(a.executedPlan) ++ nodes(a.inputPlan))
+    case st: QueryStageExec => st +: nodes(st.plan)
+    case other => other +: other.children.flatMap(nodes)
+  }
+
+  private def shuffles(p: SparkPlan): Boolean = nodes(p).exists(_.isInstanceOf[Exchange])
+  private def sorts(p: SparkPlan): Boolean = nodes(p).exists(_.isInstanceOf[SortExec])
+
+  /** An index's rows (its `__cluster` included) as comparable values,
+    * or no rows when no data file was written. */
+  private def indexRows(path: String): Seq[Any] =
+    if (Fs.dataFiles(spark, path).isEmpty) Nil
+    else values(sorted(spark.read.parquet(path).collect().toSeq))
+
+  /** Data files per `__cluster=` directory of an index. */
+  private def filesPerCluster(path: String): Map[String, Int] =
+    new java.io.File(path).listFiles().filter(_.isDirectory).map(d =>
+      d.getName -> d.listFiles().count(_.getName.endsWith(".parquet"))).toMap
+
+  /** Each cluster file's rows, in file order, by cluster directory. */
+  private def fileRows(path: String): Map[String, Seq[Any]] =
+    new java.io.File(path).listFiles().filter(_.isDirectory).flatMap(d =>
+      d.listFiles().filter(_.getName.endsWith(".parquet")).map(f =>
+        s"${d.getName}/${f.length}" -> values(spark.read.parquet(f.getPath).collect().toSeq))).toMap
+
+  /** Build an index over `df` from the snapshot (no exchange in the
+    * write) and on the Spark plan: the same rows, clusters and schema,
+    * one file per cluster on both, each with the same rows in the same
+    * order and the same length, and the same probe answers. Returns the
+    * number of clusters written. */
+  private def sameBuild(df: => DataFrame, cents: Seq[Seq[Double]], name: String): Int = {
+    val (a, b) = (tmp(s"$name-snap"), tmp(s"$name-plan"))
+    val plans = writePlans(a)(Ann.buildIvfIndex(df, cents, a))
+    assert(plans.nonEmpty && !plans.exists(shuffles), "the held store is assigned on the driver")
+    withThreshold("-1")(Ann.buildIvfIndex(df, cents, b))
+    assert(spark.read.parquet(a).schema == spark.read.parquet(b).schema)
+    assert(indexRows(a) == indexRows(b), "the same rows in the same clusters")
+    assert(filesPerCluster(a).values.forall(_ == 1), s"one file per cluster: ${filesPerCluster(a)}")
+    assert(fileRows(a) == fileRows(b), "each cluster's file holds the plan's rows in the plan's order")
+    val d = cents.head.size
+    Seq(Seq.fill(d)(0.5), (1 to d).map(i => math.sin(i.toDouble))).foreach { v =>
+      Seq(1, 3, cents.size).foreach { np =>
+        assert(values(Ann.ivfIndexTopK(spark, a, q(v), cents, 5, np).collect().toSeq) ==
+          values(Ann.ivfIndexTopK(spark, b, q(v), cents, 5, np).collect().toSeq))
+      }
+    }
+    filesPerCluster(a).size
+  }
+
+  test("IVF build from the snapshot ≡ Spark plan: float and double, NULL id, empty clusters") {
+    Seq(false, true).foreach { float =>
+      val path = gaussianStore(if (float) "buildf" else "buildd", float)
+      def load: DataFrame = CorpusStore.load(spark, path)
+      val cents = kmeansOf(load, 6, 2)
+      assert(sameBuild(load, cents, "build") == 6)
+      // a repeated centroid never wins a row: ties go to the lower index
+      val empty = cents.take(3) ++ Seq(cents.head, cents(1)) ++ cents.drop(3)
+      assert(sameBuild(load, empty, "buildempty") == 6, "two of eight clusters stay empty")
+    }
+    // a store of one file, a store with a partition column
+    val one = tmp("buildone")
+    corpusRows.filter(_._3.size == 4).toDF("vec_id", "text", "embedding").coalesce(1).write.parquet(one)
+    sameBuild(CorpusStore.load(spark, one), kmeansOf(CorpusStore.load(spark, one), 3, 1), "buildone")
+    val parted = tmp("buildparted")
+    CorpusStore.overwrite(corpusRows.filter(_._3.size == 4).toDF("vec_id", "text", "embedding")
+      .withColumn("part", (col("vec_id") % 3).cast("int")), parted, Seq("part"))
+    sameBuild(CorpusStore.load(spark, parted), kmeansOf(CorpusStore.load(spark, parted), 4, 2),
+      "buildparted")
+  }
+
+  /** The build takes the Spark plan (its write shuffles) and its
+    * outcome, the index's rows or the root-cause error, is the one the
+    * snapshot-off session gives. */
+  private def buildFallsBack(df: => DataFrame, cents: Seq[Seq[Double]]): Either[String, Seq[Any]] = {
+    def outcome(p: String): Either[String, Seq[Any]] =
+      try { Ann.buildIvfIndex(df, cents, p); Right(indexRows(p)) } catch {
+        case e: Exception =>
+          var t: Throwable = e
+          while (t.getCause != null) t = t.getCause
+          Left(s"${t.getClass.getName}: ${t.getMessage}")
+      }
+    val p = tmp("buildfallback")
+    var got: Either[String, Seq[Any]] = null
+    val plans = writePlans(p) { got = outcome(p) }
+    assert(plans.forall(shuffles), "this input must take the Spark plan")
+    assert(got.isLeft || plans.nonEmpty)
+    assert(got == withThreshold("-1")(outcome(tmp("buildfallback"))))
+    got
+  }
+
+  test("the IVF build takes the Spark plan, its rows and its errors, where the snapshot refuses") {
+    def store(name: String, rows: Seq[(Long, String, Seq[java.lang.Double])]): DataFrame = {
+      val path = tmp(name)
+      rows.toDF("vec_id", "text", "embedding").repartition(2).write.parquet(path)
+      CorpusStore.load(spark, path)
+    }
+    val grid = corpusRows.take(20).map { case (id, t, v) => (id, t, v.map(x => x: java.lang.Double)) }
+    val cents = Seq(Seq(1.0, 0.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0, 0.0), Seq(0.0, 0.0, 1.0, 1.0))
+    // held rows the driver cannot assign as the expression does
+    val nullVec = buildFallsBack(
+      store("bnullvec", grid.map(r => if (r._1 == 2L) r.copy(_3 = null) else r)), cents)
+    assert(nullVec.exists(_.size == 20), "a NULL vector is written under a NULL cluster")
+    buildFallsBack(store("bnullelem", grid.map(r =>
+      if (r._1 == 9L) r.copy(_3 = Seq[java.lang.Double](1.0, null, 0.0, 0.0)) else r)), cents)
+    val mixed = tmp("bmixed")
+    write(mixed, corpusRows)
+    assert(buildFallsBack(CorpusStore.load(spark, mixed), cents).exists(_.size == corpusRows.size))
+    val empty = tmp("bempty")
+    write(empty, Nil)
+    assert(buildFallsBack(CorpusStore.load(spark, empty), cents) == Right(Nil))
+    val path = tmp("brefused")
+    write(path, corpusRows.filter(_._3.size == 4))
+    def load: DataFrame = CorpusStore.load(spark, path)
+    // centroids of another dimension: the expression puts every row in cluster 0
+    assert(buildFallsBack(load, cents.map(_ ++ Seq(0.0))).isRight)
+    assert(buildFallsBack(load, Nil).isLeft, "no centroids fail before any plan")
+    // inputs the snapshot refuses
+    buildFallsBack(load.filter(col("vec_id") > 10), cents)
+    val index = tmp("bindex")
+    Ann.buildIvfIndex(load, cents, index)
+    buildFallsBack(CorpusStore.load(spark, index), cents) // its own __cluster column
+    withThreshold("1")(buildFallsBack(load, cents)) // a store past the bound
+    withThreshold("-1")(buildFallsBack(load, cents))
+    val strings = tmp("bstrings")
+    corpusRows.filter(_._3.size == 4).map { case (id, t, v) => (s"id$id", t, v) }
+      .toDF("vec_id", "text", "embedding").write.parquet(strings)
+    buildFallsBack(CorpusStore.load(spark, strings), cents) // no integral column to key the rows
+    sameBuild(load, cents, "bserved") // while the same store under the bound is served
+  }
+
+  test("a warm IVF build over a held store: one job, no scan, no shuffle, no exchange or sort") {
+    val path = tmp("buildwork")
+    val r = new scala.util.Random(3)
+    (1 to 300).map(i => (i % 7, 5000L - i, s"w$i", Seq.fill(8)(r.nextGaussian())))
+      .toDF("pos", "chunk_id", "text", "embedding").repartition(4).write.parquet(path)
+    def load: DataFrame = CorpusStore.load(spark, path)
+    // k-means keyed by chunk_id holds the generation the build reuses,
+    // though the store's first integral column is pos
+    val cents = Ann.kmeansCentroids(load, "chunk_id", "embedding", 8, 2)
+    Fs.dataFiles(spark, path).foreach { f => // reading a file again would fail
+      val p = java.nio.file.Paths.get(f.getPath.toUri)
+      val mtime = java.nio.file.Files.getLastModifiedTime(p)
+      java.nio.file.Files.write(p, new Array[Byte](f.getLen.toInt))
+      java.nio.file.Files.setLastModifiedTime(p, mtime)
+    }
+    val index = tmp("buildwork-index")
+    var plans = Seq.empty[SparkPlan]
+    val (jobs, _, shuffled, read) =
+      measured { plans = writePlans(index)(Ann.buildIvfIndex(load, cents, index)) }
+    assert(jobs == 1 && shuffled == 0L && read == 0L,
+      s"$jobs jobs, $shuffled shuffle bytes, $read input bytes")
+    assert(plans.size == 1 && !shuffles(plans.head) && !sorts(plans.head), plans.mkString("\n"))
+    assert(spark.read.parquet(index).count() == 300)
+    assert(filesPerCluster(index).values.forall(_ == 1))
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 
 import graft.store.Snapshots
@@ -261,6 +262,46 @@ class SnapshotsSpec extends SparkSpec {
     Snapshots.write(Seq((2L, "more")).toDF("id", "text"), path, "live")
     assert(Snapshots.expireOlderThan(spark, path, cutoff).isEmpty)
     assert(Snapshots.read(spark, path, "live").count() == 2L)
+  }
+
+  /** The stage call sites of every job started inside `body`, one
+    * string per job. A schema-inference job's call site starts in
+    * `DataFrameReader.parquet`. */
+  private def jobSites(body: => Unit): Seq[String] = {
+    val group = s"snapshots-${System.nanoTime()}"
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          sites.add(e.stageInfos.map(_.details).mkString("\n"))
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      spark.sparkContext.setJobGroup(group, "snapshots spec")
+      try body finally spark.sparkContext.clearJobGroup()
+      Thread.sleep(500) // listener events arrive asynchronously
+      sites.toArray(Array.empty[String]).toSeq
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  test("a warm read and latest run no schema-inference job") {
+    val path = freshStore()
+    Snapshots.write(Seq((1L, "a1"), (2L, "b1")).toDF("id", "text"), path, "v1")
+    Snapshots.write(Seq((2L, "b2")).toDF("id", "text"), path, "v2")
+    def inferences(sites: Seq[String]): Seq[String] =
+      sites.filter(_.contains("DataFrameReader.parquet"))
+    assert(inferences(jobSites(spark.read.parquet(path): Unit)).nonEmpty,
+      "a cold spark.read.parquet infers a schema")
+    Snapshots.read(spark, path, "v1").collect() // the first read of this generation
+    val sites = jobSites {
+      assert(Snapshots.read(spark, path, "v1").collect().map(_.getString(1)).sorted.toSeq ==
+        Seq("a1", "b1"))
+      assert(Snapshots.latest(spark, path, Seq("v1", "v2"), "id").collect()
+        .map(r => r.getLong(0) -> r.getString(1)).toMap == Map(1L -> "a1", 2L -> "b2"))
+    }
+    assert(sites.nonEmpty, "the reads run Spark jobs")
+    assert(inferences(sites).isEmpty,
+      s"a warm snapshot read inferred a schema:\n${inferences(sites).mkString("\n--\n")}")
   }
 
   test("latest: later snapshot names win per id, untouched ids carry through") {
